@@ -206,7 +206,8 @@ def score_documents(
       (integer; high = the doc walks well-trodden reference paths)
     - ``oov_bigrams``     — occurrences unseen in the reference
     - ``avg_logprob``     — mean add-k-smoothed ln p(w2 | w1) over
-      occurrences (float tier; NULL when n_bigrams = 0)
+      occurrences (float tier; NULL when n_bigrams = 0), summed in
+      sorted order so repeat calls agree bit for bit
     - ``ppl``             — exp(-avg_logprob), conventional perplexity
 
     ``vocab_size`` (V in the smoothing denominator) defaults to
@@ -261,12 +262,30 @@ def score_documents(
         / (F.coalesce(F.col("__cw"), F.lit(0)).cast("double")
            + F.lit(k) * F.lit(v))
     )
-    agg = joined.groupBy(id_col).agg(
-        F.count(F.col("__cg")).alias("bigram_hits"),
-        F.coalesce(F.sum("__cg"), F.lit(0)).cast("long").alias(
-            "sum_hit_count"
-        ),
-        F.avg(lp).alias("avg_logprob"),
+    # the float mean sums each document's log-probs in SORTED order: a
+    # plain F.avg adds them in partition arrival order after the join
+    # shuffle, so two calls on the same inputs could differ in the last
+    # ulp. Docs without bigrams never reach this aggregate and get NULL
+    # from the left join below; the size guard keeps a list whose log-
+    # probs were all NULL at NULL too, as F.avg did.
+    agg = (
+        joined.groupBy(id_col)
+        .agg(
+            F.count(F.col("__cg")).alias("bigram_hits"),
+            F.coalesce(F.sum("__cg"), F.lit(0)).cast("long").alias(
+                "sum_hit_count"
+            ),
+            F.array_sort(F.collect_list(lp)).alias("__lps"),
+        )
+        .withColumn(
+            "avg_logprob",
+            F.when(
+                F.size("__lps") > 0,
+                F.aggregate("__lps", F.lit(0.0), lambda acc, x: acc + x)
+                / F.size("__lps"),
+            ),
+        )
+        .drop("__lps")
     )
     return (
         base.drop("__grams")

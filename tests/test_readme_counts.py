@@ -1,45 +1,115 @@
 """README claims about test/query counts must track reality (VERDICT r8
 order #3 — the counts drifted three rounds running; now a drift fails
-the suite instead of waiting for the judge to notice)."""
+the suite instead of waiting for the judge to notice).
 
+The same file rewrites the README numbers from reality, with the same
+regexes and the same collection command the tests use:
+
+    python tests/test_readme_counts.py          # compare, exit 1 on drift
+    python tests/test_readme_counts.py --write  # rewrite README.md in place
+"""
+
+import argparse
 import re
 import subprocess
 import sys
 from pathlib import Path
 
-import __spark_entry__ as entry_mod
-
 REPO = Path(__file__).resolve().parent.parent
+WRITE_CMD = "python tests/test_readme_counts.py --write"
+
+ORACLE_COUNT_RE = re.compile(
+    r"all (\d+) oracled queries in\s+`__spark_entry__\.py` "
+    r"\(of (\d+) total\)"
+)
+TEST_COUNT_RE = re.compile(r"`python -m pytest tests/ -q` — (\d+) tests")
+COLLECTED_RE = re.compile(r"(\d+) tests? collected")
 
 
 def _readme() -> str:
     return (REPO / "README.md").read_text()
 
 
-def test_readme_oracle_counts_match_entry():
-    m = re.search(
-        r"all (\d+) oracled queries in\s+`__spark_entry__\.py` "
-        r"\(of (\d+) total\)",
-        _readme(),
-    )
-    assert m, "README lost its oracled-query count sentence"
-    assert int(m.group(1)) == len(entry_mod.oracle_sql())
-    assert int(m.group(2)) == len(entry_mod.queries())
+def _entry_counts() -> tuple[int, int]:
+    """(oracled, total) query counts of the driver entry."""
+    import __spark_entry__ as entry_mod
+
+    return len(entry_mod.oracle_sql()), len(entry_mod.queries())
 
 
-def test_readme_test_count_matches_collection():
-    m = re.search(r"`python -m pytest tests/ -q` — (\d+) tests", _readme())
-    assert m, "README lost its test-count sentence"
-    out = subprocess.run(
+def _collect_stdout() -> str:
+    return subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
         capture_output=True,
         text=True,
         cwd=REPO,
         timeout=300,
-    )
-    c = re.search(r"(\d+) tests? collected", out.stdout)
-    assert c, out.stdout[-2000:]
+    ).stdout
+
+
+def test_readme_oracle_counts_match_entry():
+    m = ORACLE_COUNT_RE.search(_readme())
+    assert m, "README lost its oracled-query count sentence"
+    oracled, total = _entry_counts()
+    assert int(m.group(1)) == oracled, f"run `{WRITE_CMD}`"
+    assert int(m.group(2)) == total, f"run `{WRITE_CMD}`"
+
+
+def test_readme_test_count_matches_collection():
+    m = TEST_COUNT_RE.search(_readme())
+    assert m, "README lost its test-count sentence"
+    out = _collect_stdout()
+    c = COLLECTED_RE.search(out)
+    assert c, out[-2000:]
     assert int(m.group(1)) == int(c.group(1)), (
         f"README says {m.group(1)} tests; collection finds {c.group(1)} — "
-        "sync README.md's Testing section"
+        f"run `{WRITE_CMD}`"
     )
+
+
+def main(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(
+        description="Compare README.md's test and query counts with the "
+        "suite and the driver entry; --write rewrites them in place."
+    )
+    ap.add_argument("--write", action="store_true")
+    write = ap.parse_args(argv).write
+
+    text = _readme()
+    m_test = TEST_COUNT_RE.search(text)
+    m_oracle = ORACLE_COUNT_RE.search(text)
+    if not (m_test and m_oracle):
+        print("README.md lost a count sentence; restore it by hand")
+        return 2
+    out = _collect_stdout()
+    c = COLLECTED_RE.search(out)
+    if not c:
+        print(out[-2000:])
+        return 2
+    oracled, total = _entry_counts()
+    spots = [
+        ("tests collected", m_test, 1, int(c.group(1))),
+        ("oracled queries", m_oracle, 1, oracled),
+        ("total queries", m_oracle, 2, total),
+    ]
+    drift = []
+    for label, m, g, actual in spots:
+        print(f"{label}: README {m.group(g)}, actual {actual}")
+        if int(m.group(g)) != actual:
+            drift.append((m, g, actual))
+    if not drift:
+        return 0
+    if not write:
+        print(f"README.md is stale; run `{WRITE_CMD}`")
+        return 1
+    # splice right to left so earlier offsets stay valid
+    for m, g, actual in sorted(drift, key=lambda d: -d[0].start(d[1])):
+        text = text[: m.start(g)] + str(actual) + text[m.end(g):]
+    (REPO / "README.md").write_text(text)
+    print("README.md updated")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.path.insert(0, str(REPO))
+    sys.exit(main(sys.argv[1:]))
