@@ -2078,6 +2078,8 @@ class AQEngine:
         table: str,
         view: str | None = None,
         since: str | None = None,
+        *,
+        _source_rows: int | None = None,
     ) -> dict:
         """Incremental tail refresh of a materialized rollup: recompute
         only the date directories from ``since`` (default: the layout's
@@ -2086,8 +2088,16 @@ class AQEngine:
         current base row count. Years of rollup history are never re-read
         — one day of appends costs one day's source scan, vs the full
         rebuild maintenance falls back to. CONTRACT: append-mostly data;
-        late rows landing before ``since`` need an explicit earlier
-        ``since`` (same as refresh_partition_layout)."""
+        every date directory before ``since`` must already match the
+        source. Maintenance proves that per date (it compares the
+        source's per-date row counts with the layout's) and passes the
+        earliest changed date as ``since``, so late rows are covered; a
+        direct caller with late rows before the last date passes that
+        earlier ``since`` itself (same as refresh_partition_layout).
+
+        ``_source_rows`` is maintenance's handoff of the source row count
+        its verification scan already took; without it (users, the API)
+        the source is counted here."""
         from approximate_query_engine_spark.operators.partitioning import (
             list_bucket_dirs,
         )
@@ -2139,24 +2149,29 @@ class AQEngine:
         # refreshes from hour at state-scan cost. The freshness gate
         # (fine.built_row_count == current source rows) guarantees the
         # fine layout already reflects the data this refresh targets.
-        current = self.spark.table(table).count()
+        current = (
+            self.spark.table(table).count()
+            if _source_rows is None
+            else int(_source_rows)
+        )
         fine = self._derivable_fine(table, spec, current)
         if fine is not None:
             from approximate_query_engine_spark.operators.rollup import (
                 refresh_rollup_buckets_from_state,
             )
 
-            refresh_rollup_buckets_from_state(
+            layout = refresh_rollup_buckets_from_state(
                 self.spark, fine, spec, info["path"], since
             )
             refreshed_from = fine.rollup_name
         else:
-            refresh_rollup_buckets(self.spark, spec, info["path"], since)
+            layout = refresh_rollup_buckets(
+                self.spark, spec, info["path"], since
+            )
             refreshed_from = None
         # the files view pinned the PRE-refresh file listing — re-register
-        self.spark.read.parquet(info["path"]).createOrReplaceTempView(
-            info["files_view"]
-        )
+        # it from the refresh's own post-write read (no second listing)
+        layout.createOrReplaceTempView(info["files_view"])
         # re-verify NULL evidence over the refreshed tail: appends can
         # only ADD nulls, so a True flag stays True iff the tail is
         # null-free (one column-pruned tail scan; False is sticky until

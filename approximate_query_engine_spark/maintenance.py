@@ -79,50 +79,89 @@ def _sample_base_population(info) -> float | None:
     return None
 
 
-def _rollup_tail_repair(engine, info) -> str | None:
-    """The ``since`` date from which a drifted rollup can be repaired
-    INCREMENTALLY, or None when only a full rebuild is sound. Sound iff
-    every row outside the tail is already accounted for: the source rows
-    whose bucket lands before the layout's LAST date (a column-pruned
-    filtered COUNT — no shuffle) must equal the layout's own n_rows
-    total over those dates (a rollup-sized SUM). Equal-count head
-    mutation is the same undetectable case as everywhere row counts
-    gate freshness — the append-mostly contract of refresh_rollup."""
+def _rollup_tail_repair(engine, info) -> tuple[str | None, int, str | None]:
+    """Per-date verification of a drifted rollup: ``(since, source_rows,
+    refused)``. ``since`` is the earliest date from which an INCREMENTAL
+    tail refresh repairs the layout, or None when only a full rebuild is
+    sound — ``refused`` then says why. ``source_rows`` is the source's
+    row count, NULL-timestamp rows included, taken by the same scan.
+
+    Two per-date aggregates, run as one query over their union:
+
+    - the source, column-pruned to the time column, grouped by bucket
+      date (the build's own ``bucket_date_col``, so both agree on the
+      date directory a row lands in; NULL timestamps form their own
+      group, counted in ``source_rows`` but in no directory);
+    - the layout's per-date ``SUM(n_rows)``, through its registered
+      files view when one exists (no listing, no schema job).
+
+    Incremental is sound iff no layout date shrank or vanished from the
+    source: then every date before the earliest changed one matches row
+    for row, and the refresh from that date recomputes every directory
+    that grew or is new — late rows on earlier days included. Strictly
+    stronger than comparing one head total. An equal-count mutation of a
+    date stays undetectable, as everywhere row counts gate freshness —
+    the append-mostly contract of refresh_rollup."""
     from pyspark.sql import functions as F
 
-    from approximate_query_engine_spark.operators.partitioning import (
-        list_bucket_dirs,
+    from approximate_query_engine_spark.operators.rollup import (
+        _PDATE,
+        bucket_date_col,
     )
 
-    try:
-        dates = list_bucket_dirs(
-            engine.spark, info["path"], partition_col="p_date"
-        )
-        if not dates:
-            return None
-        since = dates[-1]
-        layout = engine.spark.read.parquet(info["path"])
-        head_state = (
-            layout.filter(F.col("p_date") < since)
-            .agg(F.coalesce(F.sum("n_rows"), F.lit(0)).alias("n"))
-            .collect()[0]["n"]
-        )
-        src_head = (
-            engine.spark.table(info["source_table"])
-            .filter(
-                F.date_format(
-                    F.window(F.col(info["time_col"]), info["bucket"])[
-                        "start"
-                    ],
-                    "yyyy-MM-dd",
-                )
-                < since
+    spark = engine.spark
+    files_view = info.get("files_view")
+    layout = (
+        spark.table(files_view)
+        if files_view and spark.catalog.tableExists(files_view)
+        else spark.read.parquet(info["path"])
+    )
+    # both per-date aggregates in ONE query: one plan and one shuffle
+    # for the two. p_date reads back as a DATE (partition type
+    # inference); its text form is the build's 'yyyy-MM-dd'.
+    src = spark.table(info["source_table"]).select(
+        F.lit(True).alias("src"),
+        bucket_date_col(info["time_col"], info["bucket"]).alias("d"),
+        F.lit(1).cast("long").alias("n"),
+    )
+    state = layout.select(
+        F.lit(False).alias("src"),
+        F.col(_PDATE).cast("string").alias("d"),
+        F.col("n_rows").cast("long").alias("n"),
+    )
+    src_dates: dict[str | None, int] = {}
+    state_dates: dict[str | None, int] = {}
+    for r in (
+        src.unionByName(state)
+        .groupBy("src", "d")
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    ):
+        (src_dates if r["src"] else state_dates)[r["d"]] = int(r["n"] or 0)
+    source_rows = sum(src_dates.values())
+    # NULL-ts rows are counted but never bucketed; a NULL layout
+    # directory can only be stale state (no source date matches it)
+    src_dates.pop(None, None)
+    for d in sorted(state_dates, key=str):
+        if d not in src_dates:
+            refused = f"layout date {d} is missing from the source"
+            return None, source_rows, refused
+        if src_dates[d] < state_dates[d]:
+            refused = (
+                f"source date {d} shrank ({state_dates[d]} -> "
+                f"{src_dates[d]} rows)"
             )
-            .count()
-        )
-        return since if int(head_state) == int(src_head) else None
-    except Exception:
-        return None
+            return None, source_rows, refused
+    changed = sorted(
+        d for d, n in src_dates.items() if n != state_dates.get(d)
+    )
+    if changed:
+        return changed[0], source_rows, None
+    if state_dates:
+        # no date changed (the growth is NULL-ts rows): every directory
+        # already matches — refresh the last one to re-arm routing
+        return max(state_dates), source_rows, None
+    return None, source_rows, "layout has no date directories"
 
 
 def _reprove_topk_evidence(engine, table, info, dry_run, defer=False):
@@ -405,15 +444,18 @@ def run_maintenance(
     # served), so staleness here doesn't risk wrong answers, it silently
     # COSTS the raw-table scan on every would-have-routed query.
     #
-    # Repair policy (round 7): APPEND-ONLY drift repairs INCREMENTALLY —
-    # when the new rows all land on/after the layout's last date
-    # (verified: the source's pre-tail row count equals the layout's own
-    # per-date n_rows total, a column-pruned filtered COUNT vs a
-    # rollup-sized SUM), only the tail date directories are recomputed
-    # (engine.refresh_rollup → dynamic partition overwrite). At 100 TB
-    # that's one day's shuffle+write instead of re-materializing years of
-    # history. Anything else (shrink, head mutation, verification
-    # mismatch) falls back to the full rebuild, which is always sound.
+    # Repair policy: GROWTH repairs INCREMENTALLY, late rows included.
+    # _rollup_tail_repair compares the source's per-date row counts (one
+    # column-pruned GROUP BY on the bucket date, NULL timestamps as their
+    # own group) with the layout's per-date SUM(n_rows). When no date
+    # shrank or vanished, only the directories from the EARLIEST changed
+    # date on are recomputed (engine.refresh_rollup → dynamic partition
+    # overwrite), and the scan's total is handed over as the new row
+    # count, so the refresh does not count the source again. At 100 TB
+    # a late row from yesterday costs two days' shuffle+write instead of
+    # re-materializing years of history. A shrunk or vanished date, a
+    # non-growing table or a failed check falls back to the full rebuild,
+    # which is always sound; the action's reason says which.
     reprove_scans = 0  # fact scans paid by evidence re-proofs this window
     for table, entries in sorted(catalog.rollups.items()):
         current = catalog.get_row_count(table)
@@ -455,9 +497,17 @@ def run_maintenance(
                     report.refreshed.append(reproved)
                 continue
             built = info.get("built_row_count")
-            incremental = None
+            incremental, source_rows = None, None
             if current > (built or 0):
-                incremental = _rollup_tail_repair(engine, info)
+                try:
+                    incremental, source_rows, refused = _rollup_tail_repair(
+                        engine, info
+                    )
+                except Exception as exc:  # noqa: BLE001
+                    refused = f"tail verification failed: {str(exc)[:200]}"
+                    report.errors.append({"rollup": label, "error": refused})
+            else:
+                refused = "base table did not grow"
             action = {
                 "kind": "rollup",
                 "table": table,
@@ -469,7 +519,7 @@ def run_maintenance(
                     + (
                         f"tail refresh from {incremental}"
                         if incremental
-                        else "rebuilt"
+                        else f"rebuilt (incremental repair refused: {refused})"
                     )
                 ),
                 "dry_run": dry_run,
@@ -478,7 +528,10 @@ def run_maintenance(
                 try:
                     if incremental:
                         engine.refresh_rollup(
-                            table, view=info["view"], since=incremental
+                            table,
+                            view=info["view"],
+                            since=incremental,
+                            _source_rows=source_rows,
                         )
                     else:
                         engine.create_rollup(
@@ -1026,6 +1079,11 @@ def run_maintenance(
                 continue
             if not engine._theta_native_ok(table, tcols):
                 continue  # type not natively hashable — v1 is correct
+            types = dict(engine.spark.table(table).dtypes)
+            if all(types.get(c) == "string" for c in tcols):
+                # CAST(string AS STRING) is the identity: v1 and v2 hash
+                # the same bytes, so the rebuild would gain nothing
+                continue
             action = {
                 "kind": "theta_key_encoding",
                 "table": table,

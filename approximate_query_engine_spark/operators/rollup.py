@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: storage partition column of a materialized rollup (date of the bucket
@@ -1807,6 +1807,32 @@ def rewrite_join_to_rollup(
     return sql, note, bool(used_approx)
 
 
+def bucket_start_col(time_col: str, bucket: str) -> Column:
+    """The rollup bucket start of ``time_col`` — the one definition that
+    build, tail refresh and maintenance's per-date verification share, so
+    all three agree on which bucket (and date directory) a row lands in.
+    NULL timestamps give NULL.
+
+    For fixed-width buckets the tumbling-window start is plain epoch
+    arithmetic —
+    ts − pmod(unix_micros(ts), width) — exactly TimeWindow's own start
+    formula (origin 0, floor semantics for pre-epoch values via pmod),
+    without materializing the (start, end) struct per row that
+    F.window builds (measured ~0.6 s/20M rows). Value-identity with
+    F.window(...).start is pinned in tests/test_rollup.py; variable
+    width buckets (months) keep F.window."""
+    bsec = bucket_seconds(bucket)
+    if bsec is None:  # pragma: no cover - month buckets are refused upstream
+        return F.window(F.col(time_col), bucket)["start"]
+    us = F.unix_micros(F.col(time_col))
+    return F.timestamp_micros(us - F.pmod(us, F.lit(int(bsec) * 1_000_000)))
+
+
+def bucket_date_col(time_col: str, bucket: str) -> Column:
+    """The storage ``p_date`` (``yyyy-MM-dd``) of ``time_col``'s bucket."""
+    return F.date_format(bucket_start_col(time_col, bucket), "yyyy-MM-dd")
+
+
 def _partial_state(df: DataFrame, spec: RollupSpec) -> DataFrame:
     """Per-(bucket, dims) partial-agg state of ``df`` in the rollup's
     column layout, plus the storage ``p_date`` column."""
@@ -1841,30 +1867,18 @@ def _partial_state(df: DataFrame, spec: RollupSpec) -> DataFrame:
                 f"{int(spec.theta_lgk)})"
             ).alias(f"{sc}_theta")
         )
-    # Round 14 (guide §1.2 per-task work): for fixed-width buckets the
-    # tumbling-window start is plain epoch arithmetic —
-    # ts − pmod(unix_micros(ts), width) — exactly TimeWindow's own start
-    # formula (origin 0, floor semantics for pre-epoch values via pmod),
-    # without materializing the (start, end) struct per row that
-    # F.window builds (measured ~0.6 s/20M rows). Value-identity with
-    # F.window(...).start is pinned in tests/test_rollup.py; variable
-    # width buckets (months) keep F.window.
-    bsec = bucket_seconds(spec.bucket)
-    if bsec is not None:
-        w_us = int(bsec) * 1_000_000
-        us = F.unix_micros(F.col(spec.time_col))
-        bucket_start = F.timestamp_micros(us - F.pmod(us, F.lit(w_us)))
-    else:  # pragma: no cover - month-width buckets are refused upstream
-        bucket_start = F.window(F.col(spec.time_col), spec.bucket)["start"]
     # NULL timestamps must be dropped on BOTH paths: Spark's TimeWindowing
     # rule injects IsNotNull(ts) under F.window, so the arithmetic path
     # needs the same explicit filter or a NULL-ts source grows a NULL
     # bucket_start group (and a __HIVE_DEFAULT_PARTITION__ p_date
-    # directory) that refresh_rollup_buckets — which still filters via
-    # F.window — could never repair.
+    # directory) that no tail refresh could ever repair: its date filter
+    # drops NULL-ts rows, so the NULL directory would never be rewritten.
     return (
         df.where(F.col(spec.time_col).isNotNull())
-        .groupBy(bucket_start.alias("w"), *spec.dims)
+        .groupBy(
+            bucket_start_col(spec.time_col, spec.bucket).alias("w"),
+            *spec.dims,
+        )
         .agg(*aggs)
         .select(
             F.col("w").alias("bucket_start"),
@@ -2116,28 +2130,22 @@ def refresh_rollup_buckets(
     so every replaced directory is fully recomputed; repairing deletions
     of an ENTIRE date's source data is out of scope (as for any
     continuous aggregate — the stale directory would simply not be
-    overwritten)."""
+    overwritten). The source filter uses the build's own bucket date
+    (:func:`bucket_date_col`), so a row is recomputed iff its bucket's
+    directory is replaced.
+
+    Registers ``spec.rollup_name`` and returns the layout re-read ONCE
+    after the write, WITH its ``p_date`` column — callers register their
+    files view from the same read instead of listing the layout again."""
     since_date = str(since_bucket)[:10]
     src = spark.table(spec.source_table).filter(
-        F.date_format(
-            F.window(F.col(spec.time_col), spec.bucket)["start"],
-            "yyyy-MM-dd",
-        )
-        >= F.lit(since_date)
+        bucket_date_col(spec.time_col, spec.bucket) >= F.lit(since_date)
     )
-    src.createOrReplaceTempView(spec.source_table + "__late")
-    # the tmp spec must carry EVERY state-defining field of the original —
-    # dropping distinct_cols/hll_lgk here once rewrote refreshed date
-    # directories without their {col}_hll sketch columns, leaving the
-    # layout with mixed schemas and corrupting routed COUNT(DISTINCT).
-    # dataclasses.replace copies every field (present and future) so a
-    # new sketch-column kind can never be silently dropped here again.
-    from dataclasses import replace as _dc_replace
-
-    tmp_spec = _dc_replace(spec, source_table=spec.source_table + "__late")
-    fresh = materialize_rollup(spark, tmp_spec, path=None).withColumn(
-        _PDATE, F.date_format("bucket_start", "yyyy-MM-dd")
-    )
+    # the ORIGINAL spec builds the tail, so every state-defining field
+    # (sketch columns, lgk/k, theta key encoding) matches untouched
+    # history — a refreshed directory can never drop a sketch column
+    # (the round-7 mixed-schema bug) or hash a different key space
+    fresh = _partial_state(src, spec)
     old_markers = _snapshot_markers(path)
     # writer-level option: per-write dynamic overwrite, no global conf
     # juggling (and no race with concurrent writers on the same session)
@@ -2148,9 +2156,9 @@ def refresh_rollup_buckets(
         .parquet(path)
     )
     _restore_markers(path, old_markers)
-    final = spark.read.parquet(path).drop(_PDATE)
-    final.createOrReplaceTempView(spec.rollup_name)
-    return final
+    layout = spark.read.parquet(path)
+    layout.drop(_PDATE).createOrReplaceTempView(spec.rollup_name)
+    return layout
 
 
 def refresh_rollup_buckets_from_state(
@@ -2165,17 +2173,14 @@ def refresh_rollup_buckets_from_state(
     refreshed) FINE rollup's state instead of the raw table — the
     maintenance pattern of a grain hierarchy: hour refreshes from raw
     (one day's scan), day refreshes from hour (a state scan). Same
-    dynamic-partition-overwrite contract as :func:`refresh_rollup_buckets`
-    (the recompute boundary snaps to the coarse bucket's date partition;
-    append-mostly data). The caller is responsible for the fine rollup
-    being FRESH — engine.refresh_rollup gates on its built_row_count."""
+    dynamic-partition-overwrite and return contract as
+    :func:`refresh_rollup_buckets` (the recompute boundary snaps to the
+    coarse bucket's date partition; append-mostly data). The caller is
+    responsible for the fine rollup being FRESH — engine.refresh_rollup
+    gates on its built_row_count."""
     since_date = str(since_bucket)[:10]
     src = spark.table(fine.rollup_name).filter(
-        F.date_format(
-            F.window(F.col("bucket_start"), coarse.bucket)["start"],
-            "yyyy-MM-dd",
-        )
-        >= F.lit(since_date)
+        bucket_date_col("bucket_start", coarse.bucket) >= F.lit(since_date)
     )
     fresh = derive_rollup_state(spark, fine, coarse, src=src)
     old_markers = _snapshot_markers(path)
@@ -2186,9 +2191,9 @@ def refresh_rollup_buckets_from_state(
         .parquet(path)
     )
     _restore_markers(path, old_markers)
-    final = spark.read.parquet(path).drop(_PDATE)
-    final.createOrReplaceTempView(coarse.rollup_name)
-    return final
+    layout = spark.read.parquet(path)
+    layout.drop(_PDATE).createOrReplaceTempView(coarse.rollup_name)
+    return layout
 
 
 def _snapshot_markers(path: str) -> dict[str, int]:

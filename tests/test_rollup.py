@@ -197,10 +197,10 @@ def test_partial_state_drops_null_timestamps_like_time_window(
     """The projection test above can't see groupBy filter semantics:
     Spark's TimeWindowing rule injects IsNotNull(ts) under F.window, so a
     NULL-ts row silently vanishes from a window groupBy — the arithmetic
-    bucket path must drop it too, or full materialization diverges from
-    refresh_rollup_buckets (still F.window-filtered) and writes a
+    bucket path must drop it too, or full materialization writes a
     __HIVE_DEFAULT_PARTITION__ p_date directory the incremental path can
-    never repair."""
+    never repair (refresh_rollup_buckets' bucket-date filter drops
+    NULL-ts rows, so that directory would never be rewritten)."""
     import datetime
 
     rows = [

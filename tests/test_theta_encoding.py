@@ -126,6 +126,29 @@ def test_maintenance_migrates_v1_layout_under_budget(spark, engine):
     ]
 
 
+def test_string_keyed_v1_layout_gets_no_migration_advice(spark, engine):
+    """For a string theta column CAST(key AS STRING) is the identity, so
+    the v1 and v2 encodings hash the same bytes: a migration rebuild
+    would gain nothing, and maintenance does not advise one."""
+    spark.table("events").selectExpr(
+        "ts", "event_type", "CAST(user_id AS STRING) AS uid"
+    ).createOrReplaceTempView("events_str_uid")
+    eng = AQEngine(
+        spark, workdir=tempfile.mkdtemp(prefix="aqe_theta_str_"), data_dir=SF
+    )
+    eng.create_rollup(
+        "events_str_uid", "ts", "1 hour",
+        dims=["event_type"], theta_cols=["uid"],
+    )
+    assert not eng.catalog.rollups["events_str_uid"][0].get("theta_key_native")
+    for kw in ({"dry_run": True}, {"apply_advice": True}):
+        rep = eng.maintain(refresh_stats=False, **kw)
+        assert not [
+            a for a in rep["refreshed"]
+            if a.get("kind") == "theta_key_encoding"
+        ], rep
+
+
 def test_native_refused_for_unhashable_key_type(spark, engine):
     eng = AQEngine(
         spark, workdir=tempfile.mkdtemp(prefix="aqe_theta_bad_"), data_dir=SF
