@@ -20,6 +20,7 @@ from approximate_query_engine_spark.catalog import Catalog
 from approximate_query_engine_spark.optimizer import MLOptimizer
 from approximate_query_engine_spark.planner import Planner
 from approximate_query_engine_spark.sampler import Sampler
+from approximate_query_engine_spark.served import served_state
 from approximate_query_engine_spark.session import (
     ensure_engine_confs,
     register_testdata,
@@ -131,6 +132,7 @@ class AQEngine:
         self.planner = Planner(spark, self.catalog)
         self.optimizer = MLOptimizer(self.catalog, self.planner)
         self.sketches = SketchManager(spark, self.catalog)
+        self.served = served_state(spark)
         # per-table column sets for advisor bookkeeping — the advisor
         # runs on EVERY non-routed query, and spark.table(t).columns is
         # a catalog RPC that doesn't belong in the hot query path
@@ -171,6 +173,18 @@ class AQEngine:
         self.catalog.save()
 
     def register_view(self, name: str, df) -> None:
+        stale_rollups = self.catalog.rollups.pop(name, None)
+        # the replaced table's served state goes with it: its views are
+        # dropped and their in-memory copies released (served.py)
+        self.served.release(
+            [name]
+            + [
+                v
+                for info in stale_rollups or []
+                for v in (info.get("view"), info.get("files_view"))
+                if v
+            ]
+        )
         df.createOrReplaceTempView(name)
         self._table_cols_cache.pop(name, None)
         self._time_cols_cache.pop(name, None)
@@ -183,14 +197,6 @@ class AQEngine:
         # materialization (the row-count drift gate alone can't see an
         # equal-row-count replacement)
         invalidated = self.catalog.partitioned_views.pop(name, None)
-        stale_rollups = self.catalog.rollups.pop(name, None)
-        for info in stale_rollups or []:
-            for v in (info.get("view"), info.get("files_view")):
-                if v:
-                    try:
-                        self.spark.catalog.dropTempView(v)
-                    except Exception:
-                        pass
         if invalidated is not None or stale_rollups is not None:
             self.catalog.save()
         self.catalog.upsert_table_stats(name, df.count())
@@ -275,6 +281,7 @@ class AQEngine:
         # answer the query losslessly beats EVERY strategy the planner
         # could pick — exact result, pre-aggregated scan — so it
         # short-circuits planning (and the ML path) outright.
+        rollup_declines: list[str] = []
         rolled = (
             None
             if overlap_plan is not None
@@ -283,6 +290,7 @@ class AQEngine:
                 max_rel_error=max_rel_error,
                 prefer_exact=prefer_exact,
                 max_rank_error=max_rank_error,
+                declines=rollup_declines,
             )
         )
         if overlap_plan is None and rolled is None:
@@ -360,7 +368,26 @@ class AQEngine:
                 "ml_optimization": ml_optimization,
             }
 
-        rows, meta = ex.execute_plan(self.spark, plan)
+        if rolled is None and rollup_declines:
+            plan = {
+                **plan,
+                "reason": f"{plan.get('reason', '')}; rollup declined: "
+                + "; ".join(dict.fromkeys(rollup_declines)),
+            }
+        if plan.get("sample_table"):
+            plan = {
+                **plan,
+                "reason": plan.get("reason", "")
+                + self.served.note(plan["sample_table"]),
+            }
+        try:
+            rows, meta = ex.execute_plan(self.spark, plan)
+        except Exception as exc:
+            # served state lost under the query (a copy's blocks, or a
+            # served view dropped behind the engine): rebuild, answer
+            if not self.served.recover(exc):
+                raise
+            rows, meta = ex.execute_plan(self.spark, plan)
 
         # Dual exact execution for measured speedup (reference app.py:119-138;
         # default mirrors the reference: on when the ML path was used).
@@ -622,20 +649,6 @@ class AQEngine:
             }
             for s in self.catalog.list_sketches(table)
         ]
-
-    def sketch_set_estimate(
-        self,
-        table_a: str,
-        column_a: str,
-        table_b: str,
-        column_b: str,
-        op: str = "intersection",
-    ) -> int | None:
-        """Distinct-count of a set expression over two segments from their
-        persisted theta sketches (union | intersection | difference)."""
-        return self.sketches.theta_set_estimate(
-            table_a, column_a, table_b, column_b, op=op
-        )
 
     def ml_stats(self) -> dict:
         return self.optimizer.learning_stats()
@@ -1819,7 +1832,9 @@ class AQEngine:
             derive_rollup_state,
             is_week_bucket,
             materialize_rollup,
+            serve_layout,
         )
+        from pyspark.sql import functions as F
 
         bsec = bucket_seconds(bucket)
         if bsec is None:
@@ -1897,12 +1912,17 @@ class AQEngine:
                 rolled.write.mode("overwrite").partitionBy(_PDATE).parquet(
                     path
                 )
-                self.spark.read.parquet(path).drop(
-                    _PDATE
-                ).createOrReplaceTempView(spec.rollup_name)
+                serve_layout(self.spark, spec.rollup_name, path)
                 derived_from = fine.rollup_name
         if derived_from is None:
             materialize_rollup(self.spark, spec, path=path)
+        # one aggregate over the served state: the bucket count, and the
+        # source rows the buckets hold — the rest have a NULL time column
+        n_buckets, state_rows = (
+            self.spark.table(spec.files_view)
+            .agg(F.count(F.lit(1)), F.sum("n_rows"))
+            .collect()[0]
+        )
         # NULL evidence for the top-k SQL routing gate: approx_top_k
         # state never sees NULLs, so a routed GROUP BY would silently
         # drop the NULL group — record whether each tracked column was
@@ -1912,8 +1932,6 @@ class AQEngine:
         topk_notnull: dict[str, bool] = {}
         topk_exact_ndv: dict[str, dict] = {}
         if topk_cols:
-            from pyspark.sql import functions as F
-
             inherited = (
                 (fine_entry or {}).get("topk_notnull") or {}
                 if derived_from is not None
@@ -1964,9 +1982,7 @@ class AQEngine:
                         # it to an exact UPPER BOUND (old + tail ndv)
                         "exact": True,
                     }
-        files_view = f"{spec.rollup_name}__files"
-        self.spark.read.parquet(path).createOrReplaceTempView(files_view)
-        n_buckets = self.spark.table(spec.rollup_name).count()
+        files_view = spec.files_view
         info = {
             "source_table": table,
             "view": spec.rollup_name,
@@ -2005,6 +2021,9 @@ class AQEngine:
             # catalog row count drifts from this (same contract as
             # partitioned layouts — maintenance/register keep it current)
             "built_row_count": int(base_rows),
+            # source rows with a NULL time column: the state holds none of
+            # them, so a query with no time conjunct declines while > 0
+            "null_ts_rows": max(0, int(base_rows) - int(state_rows or 0)),
         }
         entries = [
             e
@@ -2026,6 +2045,16 @@ class AQEngine:
             "derived_from": derived_from,
         }
 
+    def _serve_rollup(self, info: dict) -> None:
+        """Serve a cataloged rollup's two views unless the registry
+        already serves them from its path (no per-query catalog RPC)."""
+        from approximate_query_engine_spark.operators.rollup import (
+            serve_layout,
+        )
+
+        if not self.served.has(info["files_view"], info["path"]):
+            serve_layout(self.spark, info["view"], info["path"])
+
     def _derivable_fine(self, table, spec, base_rows):
         """The FRESH finer-grain rollup spec of ``table`` whose state can
         derive ``spec`` (create/refresh hierarchy source), with its temp
@@ -2033,7 +2062,6 @@ class AQEngine:
         against exactly ``base_rows``; a stale fine would bake its drift
         into the derived state."""
         from approximate_query_engine_spark.operators.rollup import (
-            _PDATE,
             RollupSpec,
             can_derive_rollup,
         )
@@ -2063,13 +2091,10 @@ class AQEngine:
             )
             if can_derive_rollup(fine, spec) is not None:
                 continue
-            if not self.spark.catalog.tableExists(fine.rollup_name):
-                try:
-                    self.spark.read.parquet(e["path"]).drop(
-                        _PDATE
-                    ).createOrReplaceTempView(fine.rollup_name)
-                except Exception:
-                    continue  # materialization gone — not usable
+            try:
+                self._serve_rollup(e)
+            except Exception:
+                continue  # materialization gone — not usable
             return fine
         return None
 
@@ -2080,6 +2105,7 @@ class AQEngine:
         since: str | None = None,
         *,
         _source_rows: int | None = None,
+        _null_ts_rows: int | None = None,
     ) -> dict:
         """Incremental tail refresh of a materialized rollup: recompute
         only the date directories from ``since`` (default: the layout's
@@ -2095,9 +2121,11 @@ class AQEngine:
         direct caller with late rows before the last date passes that
         earlier ``since`` itself (same as refresh_partition_layout).
 
-        ``_source_rows`` is maintenance's handoff of the source row count
-        its verification scan already took; without it (users, the API)
-        the source is counted here."""
+        ``_source_rows`` and ``_null_ts_rows`` are maintenance's handoff of
+        the source row count and its NULL-timestamp rows, which its
+        verification scan already took; without them (users, the API) the
+        source is counted here and the NULL rows are the count less the
+        refreshed state's ``SUM(n_rows)``."""
         from approximate_query_engine_spark.operators.partitioning import (
             list_bucket_dirs,
         )
@@ -2160,18 +2188,13 @@ class AQEngine:
                 refresh_rollup_buckets_from_state,
             )
 
-            layout = refresh_rollup_buckets_from_state(
+            refresh_rollup_buckets_from_state(
                 self.spark, fine, spec, info["path"], since
             )
             refreshed_from = fine.rollup_name
         else:
-            layout = refresh_rollup_buckets(
-                self.spark, spec, info["path"], since
-            )
+            refresh_rollup_buckets(self.spark, spec, info["path"], since)
             refreshed_from = None
-        # the files view pinned the PRE-refresh file listing — re-register
-        # it from the refresh's own post-write read (no second listing)
-        layout.createOrReplaceTempView(info["files_view"])
         # re-verify NULL evidence over the refreshed tail: appends can
         # only ADD nulls, so a True flag stays True iff the tail is
         # null-free (one column-pruned tail scan; False is sticky until
@@ -2216,6 +2239,14 @@ class AQEngine:
                 info["topk_exact_ndv"] = evid
         self.catalog.upsert_table_stats(table, current)
         info["built_row_count"] = int(current)
+        if _null_ts_rows is None:
+            # every source row with a time value sits in exactly one
+            # bucket's n_rows: the rest have a NULL time column
+            state_rows = self.spark.sql(
+                f"SELECT SUM(n_rows) FROM {info['files_view']}"
+            ).collect()[0][0]
+            _null_ts_rows = max(0, int(current) - int(state_rows or 0))
+        info["null_ts_rows"] = int(_null_ts_rows)
         self.catalog.save()
         return {
             "rollup": info["view"],
@@ -2951,11 +2982,7 @@ class AQEngine:
                 "refresh it"
             )
         for info in fresh:
-            src = info.get("files_view") or info["view"]
-            if not self.spark.catalog.tableExists(src):
-                self.spark.read.parquet(
-                    info["path"]
-                ).createOrReplaceTempView(info["files_view"])
+            self._serve_rollup(info)
         return fresh
 
     def _fresh_rollup_with(
@@ -4065,6 +4092,7 @@ class AQEngine:
         max_rel_error: float = 0.05,
         prefer_exact: bool = False,
         max_rank_error: float | None = None,
+        declines: list[str] | None = None,
     ) -> tuple[str, str, bool] | None:
         """Continuous-aggregate rewrite: when ``sql`` is a single-table
         aggregate — or a star join whose FACT side has a rollup — whose
@@ -4131,10 +4159,7 @@ class AQEngine:
             try:
                 # a fresh session lost the temp views — re-register from
                 # the persisted materialization (catalog survives restarts)
-                if not self.spark.catalog.tableExists(info["files_view"]):
-                    files = self.spark.read.parquet(info["path"])
-                    files.createOrReplaceTempView(info["files_view"])
-                    files.drop("p_date").createOrReplaceTempView(info["view"])
+                self._serve_rollup(info)
             except Exception:
                 continue  # materialization gone — decline, stay correct
             usable.append(info)
@@ -4299,6 +4324,7 @@ class AQEngine:
                     info,
                     allow_approx_distinct=_allow_distinct(info),
                     allow_approx_quantile=_allow_quantile(info),
+                    declines=declines,
                 )
                 if routed is None and _allow_topk(
                     info, int(parsed.limit or 0)
@@ -4307,7 +4333,7 @@ class AQEngine:
                     # key is a tracked topk column (too high-cardinality
                     # to be a dim), served from combined sketch state —
                     # only when the exact (no-purge) regime is certified
-                    tk = rewrite_topk_to_rollup(parsed, info)
+                    tk = rewrite_topk_to_rollup(parsed, info, declines)
                     if tk is not None:
                         cert = _topk_certified(info, tk[3])
                         if cert is not None:
@@ -4323,9 +4349,10 @@ class AQEngine:
                     info,
                     table_columns,
                     allow_approx_distinct=_allow_distinct(info),
+                    declines=declines,
                 )
             if routed:
-                return routed
+                return self._with_served_note(routed, info)
         # phase 2: off-grid time bounds — real-time hybrid (complete
         # buckets from state + raw edge slices, routed through the
         # table's fresh partitioned layout when one exists). FINEST
@@ -4340,8 +4367,16 @@ class AQEngine:
                     allow_approx_quantile=_allow_quantile(info),
                 )
                 if routed:
-                    return routed
+                    return self._with_served_note(routed, info)
         return None
+
+    def _with_served_note(self, routed: tuple, info: dict) -> tuple:
+        """A routed rollup answer's reason names the copy serving it."""
+        return (
+            routed[0],
+            routed[1] + self.served.note(info["files_view"]),
+            *routed[2:],
+        )
 
     def _fresh_layout_info(self, table: str) -> dict | None:
         """The table's partitioned-layout routing entry when it is FRESH

@@ -162,15 +162,6 @@ def jaccard_expr(a: str | Column, b: str | Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def minhash_jaccard_estimate_expr(a: str | Column, b: str | Column) -> Column:
-    """Estimated Jaccard = fraction of agreeing minhash components."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    agree = F.size(F.filter(F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-                            lambda v: v == 1))
-    return agree / F.size(a)
-
-
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str,
@@ -450,6 +441,57 @@ def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
 _SIMHASH_TOK_BUDGET = 1 << 18
 
 
+def _simhash_vote(flat, tok_budget: int):
+    """Per-document 64-bit SimHash majority votes of one Arrow
+    ``list<int64>`` batch (:func:`simhash_signatures`' kernel), sliced
+    along document boundaries to ``tok_budget`` tokens per slice."""
+    import numpy as np
+
+    n = len(flat)
+    ks = np.arange(64, dtype=np.uint64)
+    # a null list slot's offsets are unspecified by the Arrow spec and may
+    # step backwards: clamp them monotonic, or the binary search below (and
+    # the slice bounds) would read garbage; null slots are zeroed at the end
+    offs = np.maximum.accumulate(
+        flat.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    )
+    vals = flat.values.to_numpy(zero_copy_only=False).astype(np.uint64)
+    sig = np.zeros(n, dtype=np.int64)
+    d0 = 0
+    while d0 < n:
+        # widest doc run within the token budget (≥1 doc so a
+        # single over-budget document still processes whole)
+        d1 = int(np.searchsorted(offs, offs[d0] + tok_budget, side="right")) - 1
+        d1 = min(max(d1, d0 + 1), n)
+        seg = vals[offs[d0]: offs[d1]]
+        if len(seg):
+            # int8 contrib + int32 running sum: |vote sum| ≤ the
+            # slice's token count, far inside int32
+            bits = (
+                (seg[:, None] >> ks[None, :]) & np.uint64(1)
+            ).astype(np.int8)
+            contrib = 2 * bits - 1
+            cs = np.vstack(
+                [np.zeros((1, 64), dtype=np.int32),
+                 np.cumsum(contrib, axis=0, dtype=np.int32)]
+            )
+            o = offs[d0: d1 + 1] - offs[d0]
+            sums = cs[o[1:]] - cs[o[:-1]]
+            sigu = (
+                (sums > 0).astype(np.uint64) << ks[None, :]
+            ).sum(axis=1, dtype=np.uint64)
+            sig[d0:d1] = sigu.view(np.int64)
+        d0 = d1
+    # a NULL token array (NULL text) votes 0 on every bit in the
+    # expression form (each when(NULL > 0, ...).otherwise(0)
+    # contributes 0), so the signature is 0, never NULL; forced
+    # explicitly because a null list slot's offsets are
+    # unspecified by the Arrow spec
+    if flat.null_count:
+        sig = np.where(np.asarray(flat.is_null()), 0, sig)
+    return sig
+
+
 def simhash_signatures(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -466,7 +508,6 @@ def simhash_signatures(
     so signatures are bit-identical (equality pinned in
     tests/test_incremental_dedup.py); a NULL text yields signature 0 on
     both paths (every per-bit vote folds NULL to 0)."""
-    import numpy as np
     import pyarrow as pa
 
     toks = F.filter(
@@ -489,7 +530,6 @@ def simhash_signatures(
     tok_budget = _SIMHASH_TOK_BUDGET
 
     def _vote(batches):
-        ks = np.arange(64, dtype=np.uint64)
         for batch in batches:
             ids = batch.column(0)
             hl = batch.column("_h")
@@ -498,58 +538,8 @@ def simhash_signatures(
                 if isinstance(hl, pa.ChunkedArray)
                 else hl
             )
-            n = len(flat)
-            if n == 0:
-                yield pa.record_batch(
-                    [ids, pa.array([], type=pa.int64())],
-                    names=[id_col, "simhash"],
-                )
-                continue
-            offs = flat.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            vals = flat.values.to_numpy(zero_copy_only=False).astype(
-                np.uint64
-            )
-            sig = np.zeros(n, dtype=np.int64)
-            d0 = 0
-            while d0 < n:
-                # widest doc run within the token budget (≥1 doc so a
-                # single over-budget document still processes whole)
-                d1 = int(
-                    np.searchsorted(
-                        offs, offs[d0] + tok_budget, side="right"
-                    )
-                ) - 1
-                d1 = min(max(d1, d0 + 1), n)
-                seg = vals[offs[d0]: offs[d1]]
-                if len(seg):
-                    # int8 contrib + int32 running sum: |vote sum| ≤ the
-                    # slice's token count, far inside int32
-                    bits = (
-                        (seg[:, None] >> ks[None, :]) & np.uint64(1)
-                    ).astype(np.int8)
-                    contrib = 2 * bits - 1
-                    cs = np.vstack(
-                        [np.zeros((1, 64), dtype=np.int32),
-                         np.cumsum(contrib, axis=0, dtype=np.int32)]
-                    )
-                    o = offs[d0: d1 + 1] - offs[d0]
-                    sums = cs[o[1:]] - cs[o[:-1]]
-                    sigu = (
-                        (sums > 0).astype(np.uint64) << ks[None, :]
-                    ).sum(axis=1, dtype=np.uint64)
-                    sig[d0:d1] = sigu.view(np.int64)
-                d0 = d1
-            # a NULL token array (NULL text) votes 0 on every bit in the
-            # expression form (each when(NULL > 0, ...).otherwise(0)
-            # contributes 0), so the signature is 0, never NULL; forced
-            # explicitly because a null list slot's offsets are
-            # unspecified by the Arrow spec
-            if flat.null_count:
-                sig = np.where(np.asarray(flat.is_null()), 0, sig)
             yield pa.record_batch(
-                [ids, pa.array(sig, type=pa.int64())],
+                [ids, pa.array(_simhash_vote(flat, tok_budget), type=pa.int64())],
                 names=[id_col, "simhash"],
             )
 

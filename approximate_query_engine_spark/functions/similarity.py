@@ -234,31 +234,47 @@ class IVFIndex:
 # batch k-NN join
 
 
-#: logical-plan nodes that put an exchange (or a whole job) between the
-#: leaves and this frame. ``df.rdd`` on such a frame under AQE is NOT
-#: plan-only: AQE materializes every shuffle query stage to finalize the
-#: plan, silently EXECUTING the upstream of the frame being inspected
-#: (ADVICE r14) — the centroid-assignment join would run once just to
-#: count partitions and again when the returned frame is consumed.
-_WIDE_PLAN_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Deduplicate",
-    "Distinct",
-    "Repartition",
-    "RepartitionByExpression",
-    "GlobalLimit",
-    "Intersect",
-    "Except",
+#: logical-plan nodes that keep a frame NARROW: scans and per-row
+#: transforms, with no exchange (or whole job) between the leaves and the
+#: frame. ``df.rdd`` on any other frame under AQE is NOT plan-only: AQE
+#: materializes every shuffle query stage to finalize the plan, silently
+#: EXECUTING the upstream of the frame being inspected (ADVICE r14) — the
+#: centroid-assignment join would run once just to count partitions and
+#: again when the returned frame is consumed. An allowlist, so a node
+#: this list does not know (``FlatMapGroupsInPandas``, ``CoGroup``,
+#: ``MapGroups``, a future one) counts as wide.
+_NARROW_PLAN_NODES = frozenset(
+    {
+        # leaves
+        "Relation",
+        "LogicalRDD",
+        "LocalRelation",
+        "Range",
+        "OneRowRelation",
+        # per-row transforms and wrappers
+        "Project",
+        "Filter",
+        "SubqueryAlias",
+        "View",
+        "Sample",
+        "Generate",
+        "Expand",
+        "LocalLimit",
+        "Union",
+        "ResolvedHint",
+        "DeserializeToObject",
+        "SerializeFromObject",
+        "MapPartitions",
+        "MapInPandas",
+        "MapInArrow",
+    }
 )
 
 
 def _is_narrow_plan(df: DataFrame) -> bool:
-    """True when the analyzed logical plan contains no shuffle-inducing
-    node, i.e. ``df.rdd`` is a plan-only inspection (scan + narrow
-    transforms: no AQE query stage exists to materialize)."""
+    """True when every node of the analyzed logical plan is on the
+    narrow allowlist, i.e. ``df.rdd`` is a plan-only inspection (scan +
+    narrow transforms: no AQE query stage exists to materialize)."""
     import re
 
     try:
@@ -267,7 +283,7 @@ def _is_narrow_plan(df: DataFrame) -> bool:
         return False
     # node names start a line after the tree-art prefix ("+- ", ":- ")
     heads = re.findall(r"(?m)^[\s:+-]*([A-Za-z]+)", tree)
-    return not any(h in _WIDE_PLAN_NODES for h in heads)
+    return bool(heads) and all(h in _NARROW_PLAN_NODES for h in heads)
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:

@@ -75,14 +75,6 @@ def bpe_ish_token_count_expr(text_col: str | Column) -> Column:
     )
 
 
-def with_token_counts(
-    df: DataFrame, text_col: str = "text", prefix: str = ""
-) -> DataFrame:
-    return df.withColumn(f"{prefix}n_tokens", token_count_expr(text_col)).withColumn(
-        f"{prefix}n_tokens_bpe", bpe_ish_token_count_expr(text_col)
-    )
-
-
 # ---------------------------------------------------------------------------
 # quality scoring
 
@@ -170,30 +162,6 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # language ID
-
-
-def lang_hits_expr(text_col: str, lang: str) -> Column:
-    """Count of tokens that are marker stopwords of ``lang``. Integer on
-    purpose: argmax over counts equals argmax over ratios (shared
-    denominator) and integer comparisons are engine-portable for the
-    correctness oracle."""
-    toks = tokens_expr(text_col)
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-    return F.size(F.filter(toks, lambda t: F.array_contains(markers, F.lower(t))))
-
-
-def lang_score_expr(text_col: str, lang: str) -> Column:
-    """Fraction of tokens that are marker stopwords of ``lang``."""
-    toks = tokens_expr(text_col)
-    hits = lang_hits_expr(text_col, lang)
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(0.0)
-
-
-def cjk_ratio_expr(text_col: str) -> Column:
-    """Fraction of CJK characters (for zh/ja/ko detection)."""
-    c = F.col(text_col)
-    cjk = F.length(c) - F.length(F.regexp_replace(c, r"[一-鿿]", ""))
-    return F.when(F.length(c) > 0, cjk / F.length(c)).otherwise(0.0)
 
 
 def lang_id_expr(text_col: str = "text", tokens: Column | None = None) -> Column:

@@ -79,12 +79,15 @@ def _sample_base_population(info) -> float | None:
     return None
 
 
-def _rollup_tail_repair(engine, info) -> tuple[str | None, int, str | None]:
+def _rollup_tail_repair(
+    engine, info
+) -> tuple[str | None, int, int, str | None]:
     """Per-date verification of a drifted rollup: ``(since, source_rows,
-    refused)``. ``since`` is the earliest date from which an INCREMENTAL
-    tail refresh repairs the layout, or None when only a full rebuild is
-    sound — ``refused`` then says why. ``source_rows`` is the source's
-    row count, NULL-timestamp rows included, taken by the same scan.
+    null_rows, refused)``. ``since`` is the earliest date from which an
+    INCREMENTAL tail refresh repairs the layout, or None when only a full
+    rebuild is sound — ``refused`` then says why. ``source_rows`` is the
+    source's row count, NULL-timestamp rows included, and ``null_rows``
+    the NULL-timestamp group alone, both taken by the same scan.
 
     Two per-date aggregates, run as one query over their union:
 
@@ -113,7 +116,7 @@ def _rollup_tail_repair(engine, info) -> tuple[str | None, int, str | None]:
     files_view = info.get("files_view")
     layout = (
         spark.table(files_view)
-        if files_view and spark.catalog.tableExists(files_view)
+        if files_view and engine.served.has(files_view, info["path"])
         else spark.read.parquet(info["path"])
     )
     # both per-date aggregates in ONE query: one plan and one shuffle
@@ -141,27 +144,27 @@ def _rollup_tail_repair(engine, info) -> tuple[str | None, int, str | None]:
     source_rows = sum(src_dates.values())
     # NULL-ts rows are counted but never bucketed; a NULL layout
     # directory can only be stale state (no source date matches it)
-    src_dates.pop(None, None)
+    null_rows = src_dates.pop(None, 0)
     for d in sorted(state_dates, key=str):
         if d not in src_dates:
             refused = f"layout date {d} is missing from the source"
-            return None, source_rows, refused
+            return None, source_rows, null_rows, refused
         if src_dates[d] < state_dates[d]:
             refused = (
                 f"source date {d} shrank ({state_dates[d]} -> "
                 f"{src_dates[d]} rows)"
             )
-            return None, source_rows, refused
+            return None, source_rows, null_rows, refused
     changed = sorted(
         d for d, n in src_dates.items() if n != state_dates.get(d)
     )
     if changed:
-        return changed[0], source_rows, None
+        return changed[0], source_rows, null_rows, None
     if state_dates:
         # no date changed (the growth is NULL-ts rows): every directory
         # already matches — refresh the last one to re-arm routing
-        return max(state_dates), source_rows, None
-    return None, source_rows, "layout has no date directories"
+        return max(state_dates), source_rows, null_rows, None
+    return None, source_rows, null_rows, "layout has no date directories"
 
 
 def _reprove_topk_evidence(engine, table, info, dry_run, defer=False):
@@ -497,12 +500,12 @@ def run_maintenance(
                     report.refreshed.append(reproved)
                 continue
             built = info.get("built_row_count")
-            incremental, source_rows = None, None
+            incremental, source_rows, null_rows = None, None, None
             if current > (built or 0):
                 try:
-                    incremental, source_rows, refused = _rollup_tail_repair(
-                        engine, info
-                    )
+                    (
+                        incremental, source_rows, null_rows, refused
+                    ) = _rollup_tail_repair(engine, info)
                 except Exception as exc:  # noqa: BLE001
                     refused = f"tail verification failed: {str(exc)[:200]}"
                     report.errors.append({"rollup": label, "error": refused})
@@ -532,6 +535,7 @@ def run_maintenance(
                             view=info["view"],
                             since=incremental,
                             _source_rows=source_rows,
+                            _null_ts_rows=null_rows,
                         )
                     else:
                         engine.create_rollup(

@@ -92,6 +92,25 @@ class RollupSpec:
         tag = self.bucket.replace(" ", "_")
         return f"{self.source_table}__rollup_{tag}"
 
+    @property
+    def files_view(self) -> str:
+        """The layout's view WITH ``p_date`` — routed SQL prunes on it."""
+        return f"{self.rollup_name}__files"
+
+
+def serve_layout(
+    spark: SparkSession, view: str, path: str, since: str | None = None
+):
+    """Register rollup ``view`` and its ``<view>__files`` view over the
+    layout at ``path`` through the served-state helper (served.py) and
+    return the served version (its ``df`` is the layout WITH ``p_date``).
+    ``since``: a tail refresh rewrote only the dates >= since."""
+    from approximate_query_engine_spark.served import served_state
+
+    return served_state(spark).serve(
+        path, {f"{view}__files": (), view: (_PDATE,)}, since=since
+    )
+
 
 def materialize_rollup(
     spark: SparkSession, spec: RollupSpec, path: str | None = None
@@ -107,9 +126,8 @@ def materialize_rollup(
         rolled.write.mode("overwrite").partitionBy(_PDATE).parquet(path)
         # the registered view keeps the same schema as the unmaterialized
         # form; the partition column is a storage detail
-        rolled = spark.read.parquet(path).drop(_PDATE)
-    else:
-        rolled = rolled.drop(_PDATE)
+        return serve_layout(spark, spec.rollup_name, path).df.drop(_PDATE)
+    rolled = rolled.drop(_PDATE)
     rolled.createOrReplaceTempView(spec.rollup_name)
     return rolled
 
@@ -363,10 +381,6 @@ def _parse_literal(text: str) -> datetime | None:
     if m.group(3):
         base += timedelta(seconds=float(m.group(3)))
     return base.replace(tzinfo=timezone.utc)
-
-
-def _epoch_seconds(dt: datetime) -> float:
-    return (dt - _EPOCH).total_seconds()
 
 
 def _epoch_micros(dt: datetime) -> int:
@@ -632,11 +646,33 @@ def kll_rank_error(k: int) -> float:
     return 2.296 / (float(k) ** 0.9433)
 
 
+def null_ts_decline(
+    info: dict, ts_bounded: bool, declines: list[str] | None
+) -> bool:
+    """True (and the reason appended to ``declines``) when a query with
+    no time conjunct would drop rows: the layout holds no state for
+    source rows whose time column is NULL (``_partial_state`` buckets
+    none of them), and ``null_ts_rows`` counts them at build/refresh.
+    Any comparison on the time column excludes those rows too, so a
+    time-bounded query stays routable."""
+    n = int(info.get("null_ts_rows") or 0)
+    if ts_bounded or n <= 0:
+        return False
+    if declines is not None:
+        declines.append(
+            f"rollup {info['view']} holds no state for {n} source rows "
+            f"with a NULL {info['time_col']}, and the query has no "
+            f"{info['time_col']} bound"
+        )
+    return True
+
+
 def rewrite_to_rollup(
     parsed,
     info: dict,
     allow_approx_distinct: bool = False,
     allow_approx_quantile: bool = False,
+    declines: list[str] | None = None,
 ) -> tuple[str, str, bool] | None:
     """Rewrite a parsed single-table aggregate to scan ``info``'s rollup
     — ``(sql, note, used_approx_distinct)`` — or None when the shape is
@@ -679,7 +715,10 @@ def rewrite_to_rollup(
       bucket, which the rollup cannot, so it declines;
     - HAVING rewrites its aggregate calls the same way; the rewritten
       clause must reference only dims + rollup state, else decline;
-    - OR at the top level of WHERE / quantiles / DISTINCT decline.
+    - OR at the top level of WHERE / quantiles / DISTINCT decline;
+    - while the source has NULL-timestamp rows (which no bucket holds), a
+      query with no time conjunct declines — the reason is appended to
+      ``declines`` (:func:`null_ts_decline`).
     """
     ts = info["time_col"]
     bsec = info["bucket_seconds"]
@@ -826,7 +865,7 @@ def rewrite_to_rollup(
         return None
 
     # ---- where ----
-    conds, prune = [], []
+    conds, prune, ts_bounded = [], [], False
     if parsed.where:
         conjs = _split_conjuncts(parsed.where)
         if conjs is None:
@@ -861,11 +900,14 @@ def rewrite_to_rollup(
             tb = _ts_conjunct_bounds(sc, ts, bsec)
             if tb is None:
                 return None
+            ts_bounded = True
             bconds, bprunes = tb
             for bop, iso in bconds:
                 conds.append(f"bucket_start {bop} TIMESTAMP '{iso}'")
             for pop, pdt in bprunes:
                 add_prune(pop, pdt)
+    if null_ts_decline(info, ts_bounded, declines):
+        return None
 
     # ---- having ----
     having_sql = None
@@ -978,7 +1020,7 @@ def rewrite_to_rollup(
 
 
 def rewrite_topk_to_rollup(
-    parsed, info: dict
+    parsed, info: dict, declines: list[str] | None = None
 ) -> tuple[str, str, bool, str] | None:
     """Rewrite the canonical TOP-ITEMS dashboard SQL —
     ``SELECT col, COUNT(*) FROM t [WHERE ...] GROUP BY col
@@ -1063,7 +1105,7 @@ def rewrite_topk_to_rollup(
 
     # ---- where: dim filters pass through; ts bounds translate to the
     # bucket grid exactly like rewrite_to_rollup (misaligned declines)
-    conds, prune = [], []
+    conds, prune, ts_bounded = [], [], False
     if parsed.where:
         conjs = _split_conjuncts(parsed.where)
         if conjs is None:
@@ -1089,6 +1131,7 @@ def rewrite_topk_to_rollup(
             tb = _ts_conjunct_bounds(sc, ts, bsec)
             if tb is None:
                 return None
+            ts_bounded = True
             bconds, bprunes = tb
             for bop, iso in bconds:
                 conds.append(f"bucket_start {bop} TIMESTAMP '{iso}'")
@@ -1097,6 +1140,8 @@ def rewrite_topk_to_rollup(
                     prune.append(
                         f"p_date {pop} '{pdt.strftime('%Y-%m-%d')}'"
                     )
+    if null_ts_decline(info, ts_bounded, declines):
+        return None
 
     k = int(parsed.limit)
     # ask the sketch for its FULL budget of items: a shorter candidate
@@ -1430,6 +1475,7 @@ def rewrite_join_to_rollup(
     info: dict,
     table_columns: dict[str, list[str]],
     allow_approx_distinct: bool = False,
+    declines: list[str] | None = None,
 ) -> tuple[str, str, bool] | None:
     """Rewrite a star-join aggregate so the FACT side is the rollup, not
     the raw event table — ``(sql, note, used_approx_distinct)`` or None.
@@ -1687,7 +1733,7 @@ def rewrite_join_to_rollup(
         having_sql = h
 
     # ---- where ----
-    conds, prune = [], []
+    conds, prune, ts_bounded = [], [], False
     if jq.where:
         conjs = _split_conjuncts(jq.where)
         if conjs is None:
@@ -1728,6 +1774,7 @@ def rewrite_join_to_rollup(
             tb = _ts_conjunct_bounds(sc, ts, bsec)
             if tb is None:
                 return None
+            ts_bounded = True
             bconds, bprunes = tb
             for bop, iso in bconds:
                 conds.append(f"{R}.bucket_start {bop} TIMESTAMP '{iso}'")
@@ -1736,6 +1783,8 @@ def rewrite_join_to_rollup(
                     prune.append(
                         f"{R}.p_date {pop} '{pdt.strftime('%Y-%m-%d')}'"
                     )
+    if null_ts_decline(info, ts_bounded, declines):
+        return None
 
     # ---- order by / limit ----
     order = []
@@ -2014,8 +2063,7 @@ def merge_rollup_batch(
             dates = _publish_staging(path)
             if batch_id is not None and staged_id == batch_id:
                 spark.catalog.refreshByPath(path)
-                final = spark.read.parquet(path).drop(_PDATE)
-                final.createOrReplaceTempView(spec.rollup_name)
+                serve_layout(spark, spec.rollup_name, path)
                 return {
                     "merged": True,
                     "affected_dates": dates,
@@ -2112,9 +2160,15 @@ def merge_rollup_batch(
         )
     _os.replace(tmp, _os.path.join(staging, "_batch.json"))
     _publish_staging(path)
+    # the renames happened outside Spark: re-serve the layout (a served
+    # copy never reads the replaced files; a file scan re-lists them)
     spark.catalog.refreshByPath(path)
-    final = spark.read.parquet(path).drop(_PDATE)
-    final.createOrReplaceTempView(spec.rollup_name)
+    serve_layout(
+        spark,
+        spec.rollup_name,
+        path,
+        since=min(affected) if exists and affected else None,
+    )
     return {"merged": True, "affected_dates": affected}
 
 
@@ -2134,9 +2188,10 @@ def refresh_rollup_buckets(
     (:func:`bucket_date_col`), so a row is recomputed iff its bucket's
     directory is replaced.
 
-    Registers ``spec.rollup_name`` and returns the layout re-read ONCE
-    after the write, WITH its ``p_date`` column — callers register their
-    files view from the same read instead of listing the layout again."""
+    Serves both rollup views (:func:`serve_layout`: the new in-memory copy
+    is the old copy's dates before ``since`` plus only the rewritten
+    directories) and returns the served layout WITH its ``p_date``
+    column."""
     since_date = str(since_bucket)[:10]
     src = spark.table(spec.source_table).filter(
         bucket_date_col(spec.time_col, spec.bucket) >= F.lit(since_date)
@@ -2156,9 +2211,7 @@ def refresh_rollup_buckets(
         .parquet(path)
     )
     _restore_markers(path, old_markers)
-    layout = spark.read.parquet(path)
-    layout.drop(_PDATE).createOrReplaceTempView(spec.rollup_name)
-    return layout
+    return serve_layout(spark, spec.rollup_name, path, since=since_date).df
 
 
 def refresh_rollup_buckets_from_state(
@@ -2191,9 +2244,7 @@ def refresh_rollup_buckets_from_state(
         .parquet(path)
     )
     _restore_markers(path, old_markers)
-    layout = spark.read.parquet(path)
-    layout.drop(_PDATE).createOrReplaceTempView(coarse.rollup_name)
-    return layout
+    return serve_layout(spark, coarse.rollup_name, path, since=since_date).df
 
 
 def _snapshot_markers(path: str) -> dict[str, int]:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from approximate_query_engine_spark.catalog import Catalog, SampleInfo, StratumInfo
+from approximate_query_engine_spark.served import served_state
 
 
 def _strata_key(df: DataFrame, strata_col: str):
@@ -105,9 +106,10 @@ class Sampler:
             )
         else:
             sampled.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        out.createOrReplaceTempView(sample_table)
-        rows = out.count()
+        served = served_state(self.spark).serve(path, {sample_table: ()})
+        out = served.df
+        # an in-memory copy was counted by its build job
+        rows = served.rows if served.in_memory else out.count()
         if layout:
             self.catalog.partitioned_views[sample_table] = {
                 "view": sample_table,
@@ -518,19 +520,6 @@ class Sampler:
         when a new SparkSession attaches to an existing workdir)."""
         for info in list(self.catalog.samples.values()):
             if os.path.exists(info.path):
-                self.spark.read.parquet(info.path).createOrReplaceTempView(
-                    info.sample_table
+                served_state(self.spark).serve(
+                    info.path, {info.sample_table: ()}
                 )
-
-
-def systematic_sample(df: DataFrame, k: int, key_cols: list[str]) -> DataFrame:
-    """Deterministic 1-in-k sample keyed on ``key_cols`` — the Spark analog
-    of the reference's ``ROWID % k = 0`` inline rewrite
-    (reference ml_optimizer.py:234-240). Spark has no ROWID; a stable
-    arithmetic hash of the key columns gives the same statistics with
-    per-row determinism (reproducible across engines, unlike df.sample).
-    """
-    expr = F.lit(0).cast("bigint")
-    for c in key_cols:
-        expr = expr * F.lit(31) + F.abs(F.xxhash64(F.col(c)) % F.lit(1000003))
-    return df.filter((expr % F.lit(k)) == 0)

@@ -518,21 +518,6 @@ class SketchManager:
         ).collect()[0]
         return int(row["est"])
 
-    def merge_hll(self, table: str, column: str, other: bytes) -> int | None:
-        """Union a foreign DataSketches HLL binary with the persisted one and
-        return the merged estimate (mergeability is the point of sketches)."""
-        info = self.catalog.get_sketch(table, column, "hll")
-        if info is None:
-            return None
-        df = self.spark.createDataFrame(
-            [(info.sketch_data,), (other,)], "sk binary"
-        )
-        row = df.agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
-        ).collect()[0]
-        return int(row["est"])
-
-
 def grouped_top_k(
     df,
     group_col: str,

@@ -161,10 +161,6 @@ class ParsedQuery:
     def is_aggregate_query(self) -> bool:
         return bool(self.aggregates)
 
-    @property
-    def has_order_limit(self) -> bool:
-        return bool(self.order_by) and self.limit is not None
-
     # ---- rendering ----
     def render(
         self,

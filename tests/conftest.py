@@ -1,4 +1,5 @@
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 
@@ -12,6 +13,26 @@ SF_T2 = "/root/testdata/sf0.01"
 def spark():
     spark = get_spark("aqe-tests")
     yield spark
+
+
+@pytest.fixture
+def above_size_line(spark):
+    """Context manager: state served inside it is above the served-state
+    size line (``spark.sql.autoBroadcastJoinThreshold`` lowered to 1
+    byte), so its views keep the pruned file scan instead of an
+    in-memory copy. The threshold is restored on exit."""
+
+    @contextmanager
+    def _above():
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return _above
 
 
 @pytest.fixture(scope="session")

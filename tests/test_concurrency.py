@@ -34,7 +34,9 @@ def test_concurrent_mixed_queries(engine):
 def test_concurrent_rollup_routed_queries(spark):
     """Routed rollup reads are thread-safe: 8 threads × mixed routed
     shapes (plain, hybrid, sketch-state) against one shared engine all
-    return the same answers as a single-threaded pass."""
+    return the same answers as a single-threaded pass — also while a
+    ninth thread keeps refreshing the rollup, so queries run across
+    swaps of its served in-memory copy (served.py)."""
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
@@ -78,3 +80,19 @@ def test_concurrent_rollup_routed_queries(spark):
     with ThreadPoolExecutor(max_workers=8) as pool:
         for idx, res in pool.map(run, range(24)):
             assert res == baseline[idx]
+
+    info = e.catalog.rollups["events"][0]
+    v0 = e.served.current(info["files_view"]).version
+
+    def refresh(_):
+        for _ in range(4):
+            e.refresh_rollup("events")  # same data: a new copy version
+        return None
+
+    with ThreadPoolExecutor(max_workers=9) as pool:
+        swaps = pool.submit(refresh, None)
+        for idx, res in pool.map(run, range(24)):
+            assert res == baseline[idx]
+        swaps.result()
+    assert e.served.current(info["files_view"]).version == v0 + 4
+    assert e.served.resident_copies(info["path"]) <= 2

@@ -379,13 +379,15 @@ def test_partition_routing_date_column_month_grain(spark):
     assert r["result"][0]["n"] == truth
 
 
-def test_partition_routing_for_approx_plans(spark):
+def test_partition_routing_for_approx_plans(spark, above_size_line):
     """Round-6 headline (VERDICT r5 instruction 1): samples of
     layout-backed tables are materialized bucket-partitioned, and a
     date-bounded APPROXIMATE query routes its sample scan through the
     pruned layout — measured files_read drop, and (materialized samples
     being routing-invariant) a bit-identical result vs the unrouted
-    plan."""
+    plan. The sample is built above the served-state size line, so it is
+    served by the file scan whose pruning is measured (small samples are
+    served from an in-memory copy: tests/test_served_state.py)."""
     import glob
     import tempfile
 
@@ -400,7 +402,8 @@ def test_partition_routing_for_approx_plans(spark):
         data_dir="/root/testdata/sf0.001",
     )
     eng.partition_table("events", "ts", grain="day")
-    info = eng.sampler.create_systematic_sample("events", 4, "event_id")
+    with above_size_line():
+        info = eng.sampler.create_systematic_sample("events", 4, "event_id")
     # the sample parquet itself is day-partitioned
     assert len(glob.glob(info.path + "/p_bucket=*")) >= 25
     sql = (

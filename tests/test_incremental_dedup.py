@@ -296,3 +296,28 @@ def test_simhash_vote_multi_slice_matches_single(spark, monkeypatch):
         for r in ddp.simhash_signatures(df, "doc_id", "text").collect()
     }
     assert got == want
+
+
+def test_simhash_vote_tolerates_non_monotonic_null_slot_offsets():
+    """A null list slot's offsets are unspecified by the Arrow spec and
+    may step backwards. The kernel clamps them monotonic before its
+    binary search: the null slot votes 0 and the valid slots keep the
+    signatures of a clean batch (unclamped, the slice bounds go wrong
+    and the vote indexes past its cumulative sums)."""
+    import pyarrow as pa
+
+    from approximate_query_engine_spark.functions.dedup import _simhash_vote
+
+    vals = pa.array([5, 5, 3, 7, 9], pa.int64())
+    clean = pa.ListArray.from_arrays(pa.array([0, 2, 3, 3], pa.int32()), vals)
+    bad = pa.ListArray.from_arrays(
+        pa.array([0, 2, 3, 1], pa.int32()),
+        vals,
+        mask=pa.array([False, False, True]),
+    )
+    want = _simhash_vote(clean, 1 << 18)
+    for budget in (1, 2, 1 << 18):
+        got = _simhash_vote(bad, budget)
+        assert list(got[:2]) == list(want[:2])
+        assert got[2] == 0
+    assert want[0] != 0 and want[1] != 0

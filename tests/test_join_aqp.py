@@ -220,10 +220,15 @@ def test_join_planner_prefers_prebuilt_fact_sample(spark):
         assert abs(approx[k] - v) / abs(v) < 0.35
 
 
-def test_substituted_fact_sample_join_prunes_and_broadcasts(spark):
+def test_substituted_fact_sample_join_prunes_and_broadcasts(
+    spark, above_size_line
+):
     """The pre-built-sample join substitution must keep the scale shape:
     both scans pruned to the referenced columns and the dim side
-    broadcast (no shuffle of the sampled fact against a sorted dim)."""
+    broadcast (no shuffle of the sampled fact against a sorted dim). The
+    sample is built above the served-state size line, so it keeps the
+    pruned file scan (small samples are served from an in-memory copy:
+    tests/test_served_state.py)."""
     import re
     import tempfile
 
@@ -236,7 +241,8 @@ def test_substituted_fact_sample_join_prunes_and_broadcasts(spark):
     )
     eng.planner.table_row_count("lineitem")
     eng.planner.table_row_count("orders")
-    eng.create_sample("lineitem", 0.25, seed=13)
+    with above_size_line():
+        eng.create_sample("lineitem", 0.25, seed=13)
     p = eng.query(
         "SELECT o.o_orderpriority, SUM(l.l_extendedprice) AS rev "
         "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey "

@@ -642,12 +642,14 @@ def test_date_predicate_selectivity(spark):
     assert est_date == pytest.approx(sel("1995-06-17"), rel=0.05)
 
 
-def test_date_filter_pushes_into_sample_scan(spark):
+def test_date_filter_pushes_into_sample_scan(spark, above_size_line):
     """Plan-shape tripwire for the date-predicate AQP path: the rewritten
     sample query must keep the user's DATE filter AT THE SCAN of the
     sample parquet (PushedFilters), not in a post-scan Filter — at 100 TB
     with date-partitioned data this is the difference between reading a
-    partition and reading the lake."""
+    partition and reading the lake. The sample is built above the
+    served-state size line: small samples are served from an in-memory
+    copy instead (tests/test_served_state.py)."""
     import tempfile
 
     from approximate_query_engine_spark import AQEngine
@@ -658,7 +660,8 @@ def test_date_filter_pushes_into_sample_scan(spark):
         data_dir="/root/testdata/sf0.001",
     )
     eng.analyze_table("lineitem", ["l_shipdate"])
-    eng.create_sample("lineitem", 0.1, seed=7)
+    with above_size_line():
+        eng.create_sample("lineitem", 0.1, seed=7)
     plan = eng.planner.plan(
         # compute-bound aggregate so the sample path is the chosen plan
         # (a bare one-column SUM is scan-bound and correctly stays exact)

@@ -62,9 +62,12 @@ def test_upper_prune_unit_boundaries():
     ]
 
 
-def test_midnight_upper_prune_reads_fewer_files(spark):
+def test_midnight_upper_prune_reads_fewer_files(spark, above_size_line):
     """files_read evidence on the routed STATE scan: the tightened
-    p_date upper bound skips the bound day's directory entirely."""
+    p_date upper bound skips the bound day's directory entirely. Built
+    above the served-state size line, so the state is the file scan whose
+    files are counted (small state is served from an in-memory copy:
+    tests/test_served_state.py)."""
     from approximate_query_engine_spark.operators.partitioning import (
         scan_metrics,
     )
@@ -74,9 +77,10 @@ def test_midnight_upper_prune_reads_fewer_files(spark):
         workdir=tempfile.mkdtemp(prefix="aqe_prune5_"),
         data_dir=SF_SMOKE,
     )
-    eng.create_rollup(
-        "events", "ts", "1 hour", dims=["event_type"], measures=["value"]
-    )
+    with above_size_line():
+        eng.create_rollup(
+            "events", "ts", "1 hour", dims=["event_type"], measures=["value"]
+        )
     sql = (
         "SELECT event_type, COUNT(*) AS n, SUM(value) AS sv FROM events "
         "WHERE ts >= TIMESTAMP '2024-01-03 00:00:00' "

@@ -185,13 +185,32 @@ def test_kll_rank_error_formula():
     assert kll_rank_error(800) < kll_rank_error(200)
 
 
-def test_routed_scan_prunes_partitions_and_columns(qeng):
+def test_routed_scan_prunes_partitions_and_columns(spark, above_size_line):
     """The 100 TB plan shape, pinned: a routed COUNT-only query's file
     scan must carry p_date PartitionFilters (date-directory pruning at
     listing time) and a ReadSchema WITHOUT the KLL sketch column (column
-    pruning — state bytes are only read when an aggregate needs them)."""
+    pruning — state bytes are only read when an aggregate needs them).
+    Built above the served-state size line: small state is served from
+    an in-memory copy instead (tests/test_served_state.py)."""
     import re
 
+    from conftest import SF_SMOKE
+
+    qeng = AQEngine(
+        spark,
+        workdir=tempfile.mkdtemp(prefix="aqe_rollup_kll_scan_"),
+        data_dir=SF_SMOKE,
+    )
+    with above_size_line():
+        qeng.create_rollup(
+            "events",
+            "ts",
+            "1 hour",
+            dims=["event_type"],
+            measures=["value"],
+            quantile_cols=["value"],
+            kll_k=800,
+        )
     r = qeng.query(
         "SELECT event_type, COUNT(*) AS n FROM events "
         "WHERE ts >= TIMESTAMP '2024-01-03 00:00:00' "

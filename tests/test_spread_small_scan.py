@@ -53,3 +53,21 @@ def test_local_checkpoint_frame_still_spreads(spark):
         out.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+
+
+def test_grouped_python_and_cogroup_plans_are_wide(spark):
+    """The gate is an allowlist of narrow nodes: plan nodes it does not
+    list — here ``FlatMapGroupsInPandas`` (``applyInPandas``) and
+    ``FlatMapCoGroupsInPandas`` (``cogroup``), both behind a shuffle —
+    count as wide, so the frame is returned untouched."""
+    base = spark.range(20).withColumn("g", F.col("id") % 3)
+    grouped = base.groupBy("g").applyInPandas(lambda pdf: pdf, base.schema)
+    assert not _is_narrow_plan(grouped)
+    assert spread_small_scan(grouped) is grouped
+    cog = base.groupBy("g").cogroup(base.groupBy("g")).applyInPandas(
+        lambda a, b: a, base.schema
+    )
+    assert not _is_narrow_plan(cog)
+    assert spread_small_scan(cog) is cog
+    # narrow Python transforms stay narrow
+    assert _is_narrow_plan(base.mapInPandas(lambda it: it, base.schema))
