@@ -26,6 +26,13 @@ from approximate_query_engine_spark.session import (
     register_testdata,
 )
 from approximate_query_engine_spark.sketches import SketchManager
+from approximate_query_engine_spark.sqlparser import (
+    JoinedQuery,
+    OverlapQuery,
+    ParsedQuery,
+    try_parse_any,
+    try_parse_overlap,
+)
 
 
 def _parse_overlap_bound(b) -> "object | None":
@@ -101,6 +108,30 @@ def _overlap_advice_bucket(*bounds: str | None) -> str | None:
     if all(t.minute == 0 and t.second == 0 for t in parsed):
         return "1 hour"
     return None
+
+
+def _entry_spec(table: str, info: dict):
+    """The RollupSpec a catalog rollup entry describes. Its theta key
+    encoding is the recorded one: state rebuilt from raw rows must hash
+    the same key space as the layout's untouched history."""
+    from approximate_query_engine_spark.operators.rollup import RollupSpec
+
+    return RollupSpec(
+        table,
+        info["time_col"],
+        info["bucket"],
+        list(info.get("dims", [])),
+        list(info.get("measures", [])),
+        list(info.get("distinct_cols", [])),
+        int(info.get("hll_lgk", 12)),
+        list(info.get("quantile_cols", [])),
+        int(info.get("kll_k", 200)),
+        list(info.get("topk_cols", [])),
+        int(info.get("topk_budget", 1024)),
+        list(info.get("theta_cols", [])),
+        int(info.get("theta_lgk", 12)),
+        theta_key_native=bool(info.get("theta_key_native")),
+    )
 
 
 class AQEngine:
@@ -269,60 +300,56 @@ class AQEngine:
         dual_execute: bool | None,
         max_rank_error: float | None = None,
     ) -> dict[str, Any]:
+        # ONE parse per query: every router, advisor recorder and the
+        # planner/optimizer take these values instead of the SQL string
+        parsed = try_parse_any(sql)
         ml_optimization: dict[str, Any] | None = None
         # Segment-overlap SQL routing (round 11): the two canonical
         # overlap idioms answer from theta rollup state when one serves
         # (and the honesty gates pass); an unserved idiom records its
         # shape for the theta advisor and executes exactly below.
-        overlap_plan = self._route_overlap_sql(
-            sql, max_rel_error=max_rel_error, prefer_exact=prefer_exact
+        from_state = self._route_overlap_sql(
+            try_parse_overlap(sql),
+            max_rel_error=max_rel_error,
+            prefer_exact=prefer_exact,
         )
         # Continuous-aggregate routing (round 6): a fresh rollup that can
         # answer the query losslessly beats EVERY strategy the planner
         # could pick — exact result, pre-aggregated scan — so it
         # short-circuits planning (and the ML path) outright.
         rollup_declines: list[str] = []
-        rolled = (
-            None
-            if overlap_plan is not None
-            else self._route_rollup(
-                sql,
+        if from_state is None:
+            from_state = self._route_rollup(
+                parsed,
                 max_rel_error=max_rel_error,
                 prefer_exact=prefer_exact,
                 max_rank_error=max_rank_error,
                 declines=rollup_declines,
             )
-        )
-        if overlap_plan is None and rolled is None:
-            # advisor evidence: a rollup-SHAPED query just ran without a
-            # rollup (none registered, stale, or not covering) — record
-            # its inferred spec so recommend_rollups can aggregate
-            # recurring shapes into a concrete materialization
-            self._record_rollup_candidate(sql)
-        if overlap_plan is not None:
-            plan = overlap_plan
-        elif rolled is not None:
-            routed_sql, note, approx_distinct = rolled
-            plan = {
-                # COUNT(DISTINCT) served from merged HLL state and
-                # MEDIAN/PERCENTILE served from merged KLL state are
-                # approximate — labeled sketch plans (and only taken when
-                # the tolerance covers the sketch's error bound);
-                # everything else re-aggregates losslessly
-                "type": "sketch" if approx_distinct else "exact",
-                "sql": routed_sql,
-                "reason": note,
-            }
+            if from_state is None:
+                # advisor evidence: a rollup-SHAPED query just ran
+                # without a rollup (none registered, stale, or not
+                # covering) — record its inferred spec so
+                # recommend_rollups can aggregate recurring shapes into
+                # a concrete materialization
+                self._record_rollup_candidate(parsed)
+        if from_state is not None:
+            plan = from_state
         elif use_ml_optimization and not prefer_exact:
-            ml_optimization = self.optimizer.optimize_query(sql, max_rel_error)
+            ml_optimization = self.optimizer.optimize_query(
+                sql, max_rel_error, parsed=parsed
+            )
             plan = ml_optimization.pop("_plan", None) or self.planner.plan(
                 sql,
                 max_rel_error,
                 prefer_exact=False,
                 forced_strategy=ml_optimization["strategy"],
+                parsed=parsed,
             )
         else:
-            plan = self.planner.plan(sql, max_rel_error, prefer_exact=prefer_exact)
+            plan = self.planner.plan(
+                sql, max_rel_error, prefer_exact=prefer_exact, parsed=parsed
+            )
 
         # Partition routing applies to EVERY plan type (round 6): exact
         # plans route the base-table scan; sample plans route their
@@ -339,14 +366,14 @@ class AQEngine:
                 "sql": routed[0],
                 "reason": f"{plan.get('reason', 'exact')}; {routed[1]}",
             }
-        elif rolled is None and overlap_plan is None:
+        elif from_state is None:
             # layout-advisor evidence: a time-bounded query just ran with
             # no layout to prune through (and no rollup served it) —
             # record its (table, ts_col) shape for
-            # recommend_partition_layouts. Recorded on the ORIGINAL sql:
-            # a sample-plan rewrite references the sample view, but the
-            # advice target is the base table.
-            self._record_layout_candidate(sql)
+            # recommend_partition_layouts. Recorded on the ORIGINAL
+            # query: a sample-plan rewrite references the sample view,
+            # but the advice target is the base table.
+            self._record_layout_candidate(parsed)
 
         if explain:
             # include Spark's physical plan so `explain` shows what would
@@ -368,7 +395,7 @@ class AQEngine:
                 "ml_optimization": ml_optimization,
             }
 
-        if rolled is None and rollup_declines:
+        if rollup_declines and from_state is None:
             plan = {
                 **plan,
                 "reason": f"{plan.get('reason', '')}; rollup declined: "
@@ -712,6 +739,7 @@ class AQEngine:
         from pyspark.sql import functions as F
 
         from approximate_query_engine_spark.operators.partitioning import (
+            list_bucket_dirs,
             partition_by_time,
             read_partitioned,
         )
@@ -721,6 +749,12 @@ class AQEngine:
             self.catalog.workdir, f"partitioned_{out_name}"
         )
         partition_by_time(self.spark.table(table), path, ts_col, grain=grain)
+        if not list_bucket_dirs(self.spark, path):
+            # an empty source writes no bucket directory, and a layout
+            # without files cannot be read back
+            raise ValueError(
+                f"{table} has no rows: there is no layout to build"
+            )
         df = read_partitioned(self.spark, path)
         df.createOrReplaceTempView(out_name)
         # one aggregation over the fresh layout gets both the drift
@@ -1828,7 +1862,6 @@ class AQEngine:
             _PDATE,
             RollupSpec,
             bucket_seconds,
-            can_derive_rollup,
             derive_rollup_state,
             is_week_bucket,
             materialize_rollup,
@@ -2062,7 +2095,6 @@ class AQEngine:
         against exactly ``base_rows``; a stale fine would bake its drift
         into the derived state."""
         from approximate_query_engine_spark.operators.rollup import (
-            RollupSpec,
             can_derive_rollup,
         )
 
@@ -2073,22 +2105,7 @@ class AQEngine:
                 continue
             if e.get("time_col") != spec.time_col:
                 continue
-            fine = RollupSpec(
-                table,
-                e["time_col"],
-                e["bucket"],
-                list(e.get("dims", [])),
-                list(e.get("measures", [])),
-                list(e.get("distinct_cols", [])),
-                int(e.get("hll_lgk", 12)),
-                list(e.get("quantile_cols", [])),
-                int(e.get("kll_k", 200)),
-                list(e.get("topk_cols", [])),
-                int(e.get("topk_budget", 1024)),
-                list(e.get("theta_cols", [])),
-                int(e.get("theta_lgk", 12)),
-                theta_key_native=bool(e.get("theta_key_native")),
-            )
+            fine = _entry_spec(table, e)
             if can_derive_rollup(fine, spec) is not None:
                 continue
             try:
@@ -2130,7 +2147,6 @@ class AQEngine:
             list_bucket_dirs,
         )
         from approximate_query_engine_spark.operators.rollup import (
-            RollupSpec,
             refresh_rollup_buckets,
         )
 
@@ -2143,25 +2159,7 @@ class AQEngine:
                 + (f" with view {view!r}" if view else "")
             )
         info = entries[0]
-        spec = RollupSpec(
-            table,
-            info["time_col"],
-            info["bucket"],
-            list(info.get("dims", [])),
-            list(info.get("measures", [])),
-            list(info.get("distinct_cols", [])),
-            int(info.get("hll_lgk", 12)),
-            list(info.get("quantile_cols", [])),
-            int(info.get("kll_k", 200)),
-            list(info.get("topk_cols", [])),
-            int(info.get("topk_budget", 1024)),
-            list(info.get("theta_cols", [])),
-            int(info.get("theta_lgk", 12)),
-            # refresh rebuilds state from raw rows: the key encoding MUST
-            # be the layout's recorded one or the refreshed directories
-            # would hash a different key space than untouched history
-            theta_key_native=bool(info.get("theta_key_native")),
-        )
+        spec = _entry_spec(table, info)
         if since is None:
             dates = list_bucket_dirs(
                 self.spark, info["path"], partition_col="p_date"
@@ -2281,19 +2279,25 @@ class AQEngine:
             ]:
                 del book[k]
 
-    def _record_rollup_candidate(self, sql: str) -> None:
-        """Best-effort advisor bookkeeping — never fails the query."""
-        try:
-            import json as _json
+    def _observe(self, book: dict, shape: dict) -> None:
+        """Count one observation of ``shape`` in an advisor ``book``,
+        keyed by its JSON signature, then cap the book."""
+        import json
 
+        sig = json.dumps(shape, sort_keys=True)
+        book.setdefault(sig, {**shape, "count": 0})["count"] += 1
+        self._evict_candidates(book)
+
+    def _record_rollup_candidate(self, parsed: ParsedQuery | None) -> None:
+        """Best-effort advisor bookkeeping for the query's single-table
+        parse — never fails the query."""
+        try:
             from approximate_query_engine_spark.operators.rollup import (
                 infer_rollup_shape,
             )
-            from approximate_query_engine_spark.sqlparser import try_parse
 
-            parsed = try_parse(sql)
-            if parsed is None:
-                return
+            if type(parsed) is not ParsedQuery:
+                return  # out of grammar, or a join
             shape = infer_rollup_shape(parsed)
             if shape is None:
                 return
@@ -2307,12 +2311,7 @@ class AQEngine:
             )
             if not referenced <= cols:
                 return  # alias/typo noise — don't advise on it
-            sig = _json.dumps(shape, sort_keys=True)
-            rec = self.catalog.rollup_candidates.setdefault(
-                sig, {**shape, "count": 0}
-            )
-            rec["count"] += 1
-            self._evict_candidates(self.catalog.rollup_candidates)
+            self._observe(self.catalog.rollup_candidates, shape)
         except Exception:  # noqa: BLE001 - advice must never break queries
             return
 
@@ -2701,7 +2700,7 @@ class AQEngine:
             },
         }
 
-    def _record_layout_candidate(self, sql: str) -> None:
+    def _record_layout_candidate(self, parsed: ParsedQuery | None) -> None:
         """Best-effort LAYOUT-advisor bookkeeping (the partitioned-layout
         sibling of _record_rollup_candidate): a single-table query whose
         WHERE carries a derivable literal time bound just ran against a
@@ -2709,7 +2708,6 @@ class AQEngine:
         recommend_partition_layouts can aggregate recurring shapes. Never
         fails the query."""
         try:
-            import json as _json
             import re as _re
 
             from approximate_query_engine_spark.operators.partitioning import (
@@ -2718,11 +2716,9 @@ class AQEngine:
             from approximate_query_engine_spark.operators.rollup import (
                 infer_rollup_shape,
             )
-            from approximate_query_engine_spark.sqlparser import try_parse
 
-            parsed = try_parse(sql)
-            if parsed is None or not parsed.where:
-                return
+            if type(parsed) is not ParsedQuery or not parsed.where:
+                return  # not a single-table parse, or no time bound
             table = parsed.table
             if self.catalog.partitioned_views.get(table):
                 return  # a layout exists — freshness is maintenance's job
@@ -2759,21 +2755,10 @@ class AQEngine:
                     parsed.where, ts_col, "day"
                 ) is None:
                     continue
-                sig = _json.dumps(
+                self._observe(
+                    self.catalog.layout_candidates,
                     {"table": table, "ts_col": ts_col, "grain": "day"},
-                    sort_keys=True,
                 )
-                rec = self.catalog.layout_candidates.setdefault(
-                    sig,
-                    {
-                        "table": table,
-                        "ts_col": ts_col,
-                        "grain": "day",
-                        "count": 0,
-                    },
-                )
-                rec["count"] += 1
-            self._evict_candidates(self.catalog.layout_candidates)
         except Exception:  # noqa: BLE001 - advice must never break queries
             return
 
@@ -2947,42 +2932,62 @@ class AQEngine:
             report.append({**spec, "applied": True, "built": built})
         return report
 
+    def _fresh_rollups(
+        self, table: str, entries: list[dict], strict: bool = False
+    ) -> list[dict]:
+        """The rollup ``entries`` of ``table`` that are FRESH (built
+        against the catalog's current row count), COARSEST first, each
+        with its views served. Unknown freshness (no catalog row count —
+        dropped/foreign stats file) counts as stale, same as
+        maintenance's "unknown" bucket: never serve a possibly-stale
+        rollup. Among rollups that can answer, the one with the fewest
+        rows wins (a day rollup beats an hour rollup 24:1 on scan size).
+        An entry whose materialization is gone is left out, or raises
+        when ``strict``."""
+        current = self.catalog.get_row_count(table)
+        if current is None:
+            return []
+        fresh = []
+        for info in sorted(entries, key=lambda e: -e.get("bucket_seconds", 0)):
+            if info.get("built_row_count") != current:
+                continue  # stale rollup — raw table has drifted
+            try:
+                # a fresh session lost the temp views — re-register from
+                # the persisted materialization (catalog survives restarts)
+                self._serve_rollup(info)
+            except Exception:
+                if strict:
+                    raise
+                continue  # materialization gone — decline, stay correct
+            fresh.append(info)
+        return fresh
+
     def _fresh_rollups_with(
         self, table: str, field: str, column: str, kind: str
     ) -> list[dict]:
         """ALL of the table's FRESH rollup entries whose ``field`` list
-        tracks ``column``, COARSEST first — raises when none exist or
-        none are fresh (never silently serves stale or untracked state)
-        and re-registers each files view on a fresh session. Callers
-        take the first entry whose bucket grid fits their bounds, so a
-        coarse rollup that cannot serve an off-grid call falls back to
-        a finer fresh one instead of breaking previously-working calls."""
-        # coarsest bucket first, matching _route_rollup: among rollups
-        # that track the column, the fewest-state-rows one wins (a day
-        # rollup beats an hour rollup 24:1 on scan size)
-        entries = sorted(
-            (
-                e
-                for e in self.catalog.rollups.get(table, [])
-                if column in e.get(field, [])
-            ),
-            key=lambda e: -e.get("bucket_seconds", 0),
-        )
+        tracks ``column``, COARSEST first (:meth:`_fresh_rollups`) —
+        raises when none exist or none are fresh (never silently serves
+        stale or untracked state). Callers take the first entry whose
+        bucket grid fits their bounds, so a coarse rollup that cannot
+        serve an off-grid call falls back to a finer fresh one instead of
+        breaking previously-working calls."""
+        entries = [
+            e
+            for e in self.catalog.rollups.get(table, [])
+            if column in e.get(field, [])
+        ]
         if not entries:
             raise ValueError(
                 f"no rollup of {table!r} tracks {kind} state for {column!r}"
             )
-        current = self.catalog.get_row_count(table)
-        fresh = [
-            e for e in entries if e.get("built_row_count") == current
-        ] if current is not None else []
+        fresh = self._fresh_rollups(table, entries, strict=True)
         if not fresh:
+            coarsest = max(entries, key=lambda e: e.get("bucket_seconds", 0))
             raise ValueError(
-                f"rollup {entries[0]['view']} is stale for {table!r}; "
+                f"rollup {coarsest['view']} is stale for {table!r}; "
                 "refresh it"
             )
-        for info in fresh:
-            self._serve_rollup(info)
         return fresh
 
     def _fresh_rollup_with(
@@ -3488,6 +3493,9 @@ class AQEngine:
         both paths."""
         from pyspark.sql import functions as F
 
+        from approximate_query_engine_spark.operators.rollup import (
+            null_ts_decline,
+        )
         from approximate_query_engine_spark.sketches import (
             pairwise_sketch_overlap,
             segment_overlap as raw_segment_overlap,
@@ -3504,6 +3512,8 @@ class AQEngine:
         need_dims = {segment_col, *(dims or {})}
         eligible = [
             e for e in entries if need_dims <= set(e.get("dims", []))
+            # an unwindowed answer counts the NULL-time rows state misses
+            and (bounded or not null_ts_decline(e, False, None))
         ]
         if bounded and time_col is None:
             clocks = {e.get("time_col") for e in eligible}
@@ -3651,8 +3661,6 @@ class AQEngine:
         if time_col is None or bucket is None:
             return False
         try:
-            import json as _json
-
             cols = self._table_columns(table)
             if not {*dims, key_col, time_col} <= cols:
                 return False
@@ -3666,12 +3674,7 @@ class AQEngine:
                 "quantile_cols": [],
                 "theta_cols": [key_col],
             }
-            sig = _json.dumps(shape, sort_keys=True)
-            rec = self.catalog.rollup_candidates.setdefault(
-                sig, {**shape, "count": 0}
-            )
-            rec["count"] += 1
-            self._evict_candidates(self.catalog.rollup_candidates)
+            self._observe(self.catalog.rollup_candidates, shape)
             return True
         except Exception:  # noqa: BLE001 - advice must never break calls
             return False
@@ -3731,12 +3734,12 @@ class AQEngine:
         )
 
     def _route_overlap_sql(
-        self, sql: str, max_rel_error: float, prefer_exact: bool
+        self, ov: OverlapQuery | None, max_rel_error: float, prefer_exact: bool
     ) -> dict | None:
         """SQL surface for segment overlap (round 11, VERDICT r10 #3;
         round 12 adds the UNION/reach arm per VERDICT r11 #2): when
-        ``sql`` is one of the canonical overlap idioms
-        (sqlparser.parse_overlap — the COUNT(DISTINCT) self-join, the
+        ``ov``, the query's overlap parse, is one of the canonical
+        overlap idioms (sqlparser.parse_overlap — the COUNT(DISTINCT) self-join, the
         INTERSECT/EXCEPT/UNION-count set-op pair, and the one-table
         ``seg IN (a, b)`` COUNT(DISTINCT) reach spelling) and a FRESH
         rollup tracks ``key_col`` in
@@ -3788,11 +3791,10 @@ class AQEngine:
         recurring SQL overlap workloads reach the theta advisor exactly
         like API callers do (q108 family), then returns None — the exact
         idiom executes unchanged."""
-        from approximate_query_engine_spark.sqlparser import (
-            try_parse_overlap,
+        from approximate_query_engine_spark.operators.rollup import (
+            null_ts_decline,
         )
 
-        ov = try_parse_overlap(sql)
         if ov is None:
             return None
         # table-name case: Spark resolves tables case-insensitively, but
@@ -3807,11 +3809,14 @@ class AQEngine:
             | set(self.catalog.partitioned_views)
             | set(self.catalog.table_stats)
         )
-        matches = {t for t in known if t.lower() == ov.table.lower()}
-        if len(matches) == 1 and ov.table not in matches:
-            ov.table = next(iter(matches))
+        # The parse is shared with the other routers: the canonical name
+        # goes into a local, never back into ``ov``.
+        table = ov.table
+        matches = {t for t in known if t.lower() == table.lower()}
+        if len(matches) == 1 and table not in matches:
+            table = next(iter(matches))
         try:
-            cmap = {c.lower(): c for c in self._table_columns(ov.table)}
+            cmap = {c.lower(): c for c in self._table_columns(table)}
         except Exception:  # noqa: BLE001 - unknown table: pass through
             return None
         key = cmap.get(ov.key_col.lower())
@@ -3829,7 +3834,7 @@ class AQEngine:
                 return None  # not a plausible clock — pass through
         try:
             entries = self._fresh_rollups_with(
-                ov.table, "theta_cols", key, "theta set-algebra"
+                table, "theta_cols", key, "theta set-algebra"
             )
         except ValueError:
             entries = []
@@ -3842,6 +3847,8 @@ class AQEngine:
             if seg is not None and seg not in cand.get("dims", []):
                 continue
             if tcol is None:
+                if null_ts_decline(cand, False, None):
+                    continue  # the unwindowed idiom counts NULL-time rows
                 info = cand
                 break
             if cand.get("time_col") != tcol:
@@ -3897,7 +3904,7 @@ class AQEngine:
                 else [ov.lo, ov.hi, ov.lo_b, ov.hi_b]
             )
             self._record_overlap_candidate(
-                ov.table,
+                table,
                 [seg] if seg is not None else [],
                 key,
                 tcol,
@@ -3907,9 +3914,9 @@ class AQEngine:
         if prefer_exact:
             return None
         lgk = int(info.get("theta_lgk", 12))
-        ndv = self.catalog.column_ndv.get((ov.table, key))
+        ndv = self.catalog.column_ndv.get((table, key))
         if not (
-            self._stats_fresh(ov.table)
+            self._stats_fresh(table)
             and ndv is not None
             and ndv * 1.1 <= 2**lgk
         ):
@@ -3923,7 +3930,7 @@ class AQEngine:
             # The seg_in spelling is COUNT(DISTINCT), which IGNORES
             # NULLs — exactly theta_union's semantics — so it routes
             # without the gate.
-            nf = self.catalog.column_null_frac.get((ov.table, key))
+            nf = self.catalog.column_null_frac.get((table, key))
             if nf != 0.0:
                 return None  # NULL set-op row unprovable — decline
         src = info.get("files_view") or info["view"]
@@ -4088,16 +4095,16 @@ class AQEngine:
 
     def _route_rollup(
         self,
-        sql: str,
+        parsed: ParsedQuery | None,
         max_rel_error: float = 0.05,
         prefer_exact: bool = False,
         max_rank_error: float | None = None,
         declines: list[str] | None = None,
-    ) -> tuple[str, str, bool] | None:
-        """Continuous-aggregate rewrite: when ``sql`` is a single-table
+    ) -> dict | None:
+        """Continuous-aggregate rewrite: when ``parsed`` is a single-table
         aggregate — or a star join whose FACT side has a rollup — whose
-        shape a registered FRESH rollup can answer, return (rollup_sql,
-        note, used_approx_distinct). Runs BEFORE planning — an exact
+        shape a registered FRESH rollup can answer, return the plan that
+        scans the rollup. Runs BEFORE planning — an exact
         answer from a pre-aggregated table dominates every approximate
         strategy (faster AND error-free), so a hit short-circuits the
         planner entirely. COUNT(DISTINCT c) over a tracked sketch column
@@ -4112,27 +4119,20 @@ class AQEngine:
             rewrite_to_rollup_hybrid,
             rewrite_topk_to_rollup,
         )
-        from approximate_query_engine_spark.sqlparser import (
-            try_parse,
-            try_parse_join,
-        )
 
-        if not self.catalog.rollups:
+        if not self.catalog.rollups or parsed is None:
             return None
-        parsed = try_parse(sql)
         jq = None
-        table_columns: dict[str, list[str]] = {}
-        if parsed is not None:
+        table_columns: dict[str, frozenset[str]] = {}
+        if not isinstance(parsed, JoinedQuery):
             target = parsed.table
         else:
             # star-join shape: exactly ONE joined table may own a rollup
             # (two would make the rewrite ambiguous — decline)
-            jq = try_parse_join(sql)
-            if jq is None:
-                return None
+            jq, parsed = parsed, None  # the phases below key on parsed
             for t, _a in jq.tables:
                 try:
-                    table_columns[t] = self.spark.table(t).columns
+                    table_columns[t] = self._table_columns(t)
                 except Exception:
                     return None
             with_rollups = [
@@ -4141,28 +4141,9 @@ class AQEngine:
             if len(with_rollups) != 1:
                 return None
             target = with_rollups[0]
-        current = self.catalog.get_row_count(target)
-        # coarsest bucket first: among rollups that can answer, the one
-        # with the fewest rows wins (a day rollup beats an hour rollup
-        # 24:1 on scan size; unsound candidates decline individually)
-        candidates = sorted(
-            self.catalog.rollups.get(target, []),
-            key=lambda i: -i.get("bucket_seconds", 0),
+        usable = self._fresh_rollups(
+            target, self.catalog.rollups.get(target, [])
         )
-        usable = []
-        for info in candidates:
-            # unknown freshness (no catalog row count — dropped/foreign
-            # stats file) is treated as stale, same as maintenance's
-            # "unknown" bucket: never serve a possibly-stale rollup
-            if current is None or info.get("built_row_count") != current:
-                continue  # stale rollup — raw table has drifted
-            try:
-                # a fresh session lost the temp views — re-register from
-                # the persisted materialization (catalog survives restarts)
-                self._serve_rollup(info)
-            except Exception:
-                continue  # materialization gone — decline, stay correct
-            usable.append(info)
 
         def _allow_distinct(info) -> bool:
             # 2-standard-error gate; COUNT(DISTINCT) may be served from
@@ -4207,24 +4188,6 @@ class AQEngine:
                 and bool(info.get("quantile_cols"))
                 and budget >= kll_rank_error(info.get("kll_k", 200))
             )
-
-        def _allow_topk(info, k: int) -> bool:
-            # top-items-from-state gate: routed ONLY in the CERTIFIED
-            # exact regime — the column's distinct count is known to fit
-            # the tracked budget, so no Misra–Gries purge can occur in
-            # any partial and combined counts are exact. Beyond the
-            # budget the MG additive bound 3.5·n/budget has NO bound
-            # relative to the k-th item's count (an earlier draft gated
-            # on the best-case 3.5·k/budget, which a heavy tail violates
-            # by orders of magnitude), so no tolerance can honestly
-            # admit it — decline and let the planner answer.
-            # Certification sources, cheapest first: the catalog's
-            # learned whole-table ndv (≥ any range ndv), else the
-            # rollup's OWN distinct-sketch state for the column (one
-            # state-sized agg, ±2σ margin applied).
-            if prefer_exact or k <= 0 or not info.get("topk_cols"):
-                return False
-            return True  # per-column certification happens post-rewrite
 
         def _topk_certified(info, col: str) -> str | None:
             """Certification note when serving ``col``'s top-k from state
@@ -4326,13 +4289,19 @@ class AQEngine:
                     allow_approx_quantile=_allow_quantile(info),
                     declines=declines,
                 )
-                if routed is None and _allow_topk(
-                    info, int(parsed.limit or 0)
+                if (
+                    routed is None
+                    and not prefer_exact
+                    and parsed.limit
+                    and info.get("topk_cols")
                 ):
                     # the canonical top-items dashboard shape: the group
                     # key is a tracked topk column (too high-cardinality
                     # to be a dim), served from combined sketch state —
-                    # only when the exact (no-purge) regime is certified
+                    # only in the CERTIFIED exact regime (no Misra–Gries
+                    # purge in any partial). Beyond the budget the MG
+                    # bound 3.5·n/budget has no bound relative to the
+                    # k-th item's count, so no tolerance can admit it.
                     tk = rewrite_topk_to_rollup(parsed, info, declines)
                     if tk is not None:
                         cert = _topk_certified(info, tk[3])
@@ -4352,7 +4321,7 @@ class AQEngine:
                     declines=declines,
                 )
             if routed:
-                return self._with_served_note(routed, info)
+                return self._rollup_plan(routed, info)
         # phase 2: off-grid time bounds — real-time hybrid (complete
         # buckets from state + raw edge slices, routed through the
         # table's fresh partitioned layout when one exists). FINEST
@@ -4367,21 +4336,38 @@ class AQEngine:
                     allow_approx_quantile=_allow_quantile(info),
                 )
                 if routed:
-                    return self._with_served_note(routed, info)
+                    return self._rollup_plan(routed, info)
         return None
 
-    def _with_served_note(self, routed: tuple, info: dict) -> tuple:
-        """A routed rollup answer's reason names the copy serving it."""
-        return (
-            routed[0],
-            routed[1] + self.served.note(info["files_view"]),
-            *routed[2:],
-        )
+    def _rollup_plan(self, routed: tuple, info: dict) -> dict:
+        """The plan of a rewrite's ``(sql, note, used_approx)``. COUNT
+        (DISTINCT) served from merged HLL state and MEDIAN/PERCENTILE
+        served from merged KLL state are approximate — labeled sketch
+        plans (and only taken when the tolerance covers the sketch's
+        error bound); everything else re-aggregates losslessly. The
+        reason names the copy serving the answer."""
+        return {
+            "type": "sketch" if routed[2] else "exact",
+            "sql": routed[0],
+            "reason": routed[1] + self.served.note(info["files_view"]),
+        }
 
     def _fresh_layout_info(self, table: str) -> dict | None:
         """The table's partitioned-layout routing entry when it is FRESH
-        (row count matches) and its view is registered — used by the
-        hybrid rollup rewrite to prune the raw edge-slice scan."""
+        (row count matches) and its view is registered, else None — the
+        one gate of partition routing (:meth:`_route_rewrite`) and of the
+        hybrid rollup rewrite's raw edge-slice scan.
+
+        FRESHNESS CONTRACT: the gate detects append drift via the
+        catalog row count (kept current by register_data/maintenance);
+        same-count in-place mutation is undetectable from counts alone,
+        so every data-replacement path (register_view/register_file)
+        invalidates the layout entry outright. Out-of-band temp-view
+        swaps that bypass the engine's register methods are outside the
+        contract — run maintenance or re-register through the engine.
+        Unknown freshness (no catalog row count — dropped/foreign stats
+        file) declines, matching the rollup routing policy: never serve
+        a possibly-stale layout labeled exact."""
         info = self.catalog.partitioned_views.get(table)
         if not info:
             return None
@@ -4390,6 +4376,9 @@ class AQEngine:
             return None
         try:
             if not self.spark.catalog.tableExists(info["view"]):
+                # a persisted mapping from a prior session: re-register
+                # the layout from its parquet path (temp views die with
+                # sessions)
                 from approximate_query_engine_spark.operators.partitioning import (
                     read_partitioned,
                 )
@@ -4414,14 +4403,13 @@ class AQEngine:
         their base scan to the layout view: rand(seed)'s per-partition
         stream makes that a DIFFERENT (equally valid) Bernoulli draw;
         deterministic md5-keyed predicates are row-stable and unaffected.
-        Returns ``(routed_sql, note)`` or None."""
+        Returns ``(routed_sql, note)`` or None. It parses the PLAN's SQL
+        (a sample rewrite scans the sample), so only when a layout is
+        registered at all."""
         import re
 
-        from approximate_query_engine_spark.sqlparser import (
-            try_parse,
-            try_parse_join,
-        )
-
+        if not self.catalog.partitioned_views:
+            return None
         # try_parse accepts scalar subqueries in the select list (their
         # parens are skipped by its top-level scan), but the regex
         # injections below anchor on the FIRST `FROM|JOIN <table>` /
@@ -4438,10 +4426,10 @@ class AQEngine:
             for item in m.group(1).split(",")
         ):
             return None
-        parsed = try_parse(sql)
-        if parsed is not None:
-            if not parsed.where:
-                return None
+        parsed = try_parse_any(sql)
+        if parsed is None or not parsed.where:
+            return None
+        if not isinstance(parsed, JoinedQuery):
             return self._route_rewrite(
                 sql,
                 parsed.table,
@@ -4451,9 +4439,7 @@ class AQEngine:
         # JOIN shape (round 6): route the ONE joined table that owns the
         # time-bounded column — typically the fact scan, the expensive
         # side of every star join.
-        jq = try_parse_join(sql)
-        if jq is None or not jq.where:
-            return None
+        jq = parsed
         for table, alias in jq.tables:
             info = self.catalog.partitioned_views.get(table)
             if not info:
@@ -4464,7 +4450,7 @@ class AQEngine:
             owners = []
             for t, _a in jq.tables:
                 try:
-                    cols = self.spark.table(t).columns
+                    cols = self._table_columns(t)
                 except Exception:
                     return None
                 if info["ts_col"] in cols:
@@ -4503,24 +4489,10 @@ class AQEngine:
 
         from approximate_query_engine_spark.operators.partitioning import (
             derive_bucket_predicate,
-            read_partitioned,
         )
 
-        info = self.catalog.partitioned_views.get(table)
-        if not info:
-            return None
-        # FRESHNESS CONTRACT: the gate below detects append drift via the
-        # catalog row count (kept current by register_data/maintenance);
-        # same-count in-place mutation is undetectable from counts alone,
-        # so every data-replacement path (register_view/register_file)
-        # invalidates the layout entry outright. Out-of-band temp-view
-        # swaps that bypass the engine's register methods are outside the
-        # contract — run maintenance or re-register through the engine.
-        # Unknown freshness (no catalog row count — dropped/foreign stats
-        # file) declines, matching the rollup routing policy: never serve
-        # a possibly-stale layout labeled exact.
-        current = self.catalog.get_row_count(table)
-        if current is None or info.get("built_row_count") != current:
+        info = self._fresh_layout_info(table)
+        if info is None:
             return None
         partition_col = info["partition_col"]
         pred = derive_bucket_predicate(
@@ -4532,13 +4504,6 @@ class AQEngine:
         if not pred:
             return None
         view = info["view"]
-        if not self.spark.catalog.tableExists(view):
-            # a persisted mapping from a prior session: re-register the
-            # layout from its parquet path (temp views die with sessions)
-            try:
-                read_partitioned(self.spark, info["path"]).createOrReplaceTempView(view)
-            except Exception:
-                return None
         fm = re.search(
             rf"\b(FROM|JOIN)\s+{re.escape(table)}\b", sql, re.I
         )

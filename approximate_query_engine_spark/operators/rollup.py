@@ -22,6 +22,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from approximate_query_engine_spark.operators.partitioning import (
+    list_bucket_dirs,
+)
+
 #: storage partition column of a materialized rollup (date of the bucket
 #: start) — never part of the registered view's schema
 _PDATE = "p_date"
@@ -124,6 +128,13 @@ def materialize_rollup(
         # the affected date directories (dynamic partition overwrite) and
         # dashboard queries on a date range prune at file-listing time
         rolled.write.mode("overwrite").partitionBy(_PDATE).parquet(path)
+        if not list_bucket_dirs(spark, path, _PDATE):
+            # an empty or all-NULL-time source writes no date directory,
+            # and a layout without files cannot be read back
+            raise ValueError(
+                f"{spec.source_table} has no rows with a non-NULL "
+                f"{spec.time_col}: there is no state to roll up"
+            )
         # the registered view keeps the same schema as the unmaterialized
         # form; the partition column is a storage detail
         return serve_layout(spark, spec.rollup_name, path).df.drop(_PDATE)

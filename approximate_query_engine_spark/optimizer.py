@@ -31,7 +31,12 @@ from approximate_query_engine_spark.planner import (
     inline_fraction_for,
     per_row_agg_work,
 )
-from approximate_query_engine_spark.sqlparser import ParsedQuery, try_parse
+from approximate_query_engine_spark.sqlparser import (
+    UNPARSED,
+    JoinedQuery,
+    ParsedQuery,
+    try_parse_any,
+)
 
 
 def _clamp(x: float, lo: float, hi: float) -> float:
@@ -115,62 +120,65 @@ class MLOptimizer:
         self.planner = planner
 
     # ------------------------------------------------------------------
-    def optimize_query(self, sql: str, max_rel_error: float = 0.05) -> dict[str, Any]:
+    def optimize_query(
+        self,
+        sql: str,
+        max_rel_error: float = 0.05,
+        parsed: ParsedQuery | None = UNPARSED,
+    ) -> dict[str, Any]:
         """Return the reference-shaped optimization dict
         (ml_optimizer.py:41-50): {strategy, modified_sql, original_sql,
         confidence, estimated_speedup, estimated_error, reasoning,
-        transformations}."""
-        parsed = try_parse(sql)
-        if parsed is None:
+        transformations}. ``parsed`` is the caller's parse of ``sql``, as
+        for :meth:`Planner.plan`."""
+        if parsed is UNPARSED:
+            parsed = try_parse_any(sql)
+        if isinstance(parsed, JoinedQuery):
             # Inner star joins are approximable since round 4: delegate to
             # the planner's join path and report its decision in the
             # reference-shaped envelope (the realized plan rides along so
             # the engine doesn't plan twice).
-            from approximate_query_engine_spark.sqlparser import (
-                try_parse_join,
+            jq = parsed
+            plan = self.planner.plan(sql, max_rel_error, parsed=jq)
+            # cost-model ratio, same honesty rule as _estimates;
+            # calibrated from JOIN-cell history (is_join separates
+            # the cells — join plan economics differ from a
+            # single-table scan at the same per-row work)
+            raw_join_est = _wall_clock_ratio(plan) or (
+                1.0 / plan["sample_fraction"]
+                if plan.get("sample_fraction")
+                else 1.0
             )
-
-            jq = try_parse_join(sql)
-            if jq is not None:
-                plan = self.planner.plan(sql, max_rel_error)
-                # cost-model ratio, same honesty rule as _estimates;
-                # calibrated from JOIN-cell history (is_join separates
-                # the cells — join plan economics differ from a
-                # single-table scan at the same per-row work)
-                raw_join_est = _wall_clock_ratio(plan) or (
-                    1.0 / plan["sample_fraction"]
-                    if plan.get("sample_fraction")
-                    else 1.0
+            join_work = per_row_agg_work(jq)
+            est = raw_join_est
+            if plan["type"] != "exact":
+                est *= self._speedup_correction(
+                    plan["type"],
+                    bool(jq.group_by),
+                    join_work,
+                    is_join=True,
                 )
-                join_work = per_row_agg_work(jq)
-                est = raw_join_est
-                if plan["type"] != "exact":
-                    est *= self._speedup_correction(
-                        plan["type"],
-                        bool(jq.group_by),
-                        join_work,
-                        is_join=True,
-                    )
-                return {
-                    "_plan": plan,
-                    "strategy": plan["type"],
-                    "modified_sql": plan["sql"],
-                    "original_sql": sql,
-                    "confidence": 0.9,
-                    "estimated_speedup": est,
-                    "estimated_error": plan.get("estimated_error", 0.0),
-                    "reasoning": (
-                        "inner star join: the fact side samples inside the "
-                        f"join while dims stay exact — {plan['reason']}"
-                    ),
-                    "transformations": plan.get("reason", ""),
-                    "features": {
-                        "has_group_by": bool(jq.group_by),
-                        "raw_est_speedup": float(raw_join_est),
-                        "per_row_work": float(join_work),
-                        "is_join": True,
-                    },
-                }
+            return {
+                "_plan": plan,
+                "strategy": plan["type"],
+                "modified_sql": plan["sql"],
+                "original_sql": sql,
+                "confidence": 0.9,
+                "estimated_speedup": est,
+                "estimated_error": plan.get("estimated_error", 0.0),
+                "reasoning": (
+                    "inner star join: the fact side samples inside the "
+                    f"join while dims stay exact — {plan['reason']}"
+                ),
+                "transformations": plan.get("reason", ""),
+                "features": {
+                    "has_group_by": bool(jq.group_by),
+                    "raw_est_speedup": float(raw_join_est),
+                    "per_row_work": float(join_work),
+                    "is_join": True,
+                },
+            }
+        if parsed is None:
             return self._exact_optimization(
                 sql, 0.95, "Query outside the approximable grammar "
                 "(subqueries/windows/set-ops run exactly on Spark SQL)."
@@ -200,7 +208,7 @@ class MLOptimizer:
                 strategy = "sample"
 
         plan = self.planner.plan(
-            sql, max_rel_error, forced_strategy=strategy
+            sql, max_rel_error, forced_strategy=strategy, parsed=parsed
         )
         est_speedup, est_error = self._estimates(plan, feats, max_rel_error)
         raw_est_speedup = est_speedup

@@ -36,11 +36,12 @@ from pyspark.sql import SparkSession
 from approximate_query_engine_spark import rewriter
 from approximate_query_engine_spark.catalog import Catalog, SampleInfo
 from approximate_query_engine_spark.sqlparser import (
+    UNPARSED,
+    JoinedQuery,
     ParsedQuery,
     UnsupportedQueryError,
     flatten_and_parens,
-    try_parse,
-    try_parse_join,
+    try_parse_any,
 )
 
 SCAN_COST_PER_ROW = 1.0
@@ -598,22 +599,24 @@ class Planner:
         prefer_exact: bool = False,
         forced_strategy: str | None = None,
         seed: int = 42,
+        parsed: ParsedQuery | None = UNPARSED,
     ) -> dict[str, Any]:
         """Produce a reference-shaped plan dict with the rewritten SQL.
 
         Short-circuits mirror reference planner.py:21-78: unparseable/
         unsupported → exact; direct sample-table query → scaled sample plan;
-        prefer_exact → exact; no stats → exact.
+        prefer_exact → exact; no stats → exact. ``parsed``: the caller's
+        ``try_parse_any(sql)``, if it has one.
         """
-        parsed = try_parse(sql)
-        if parsed is None:
-            jq = try_parse_join(sql)
+        if parsed is UNPARSED:
+            parsed = try_parse_any(sql)
+        if parsed is None or isinstance(parsed, JoinedQuery):
             if (
-                jq is not None
+                parsed is not None
                 and not prefer_exact
                 and forced_strategy in (None, "sample")
             ):
-                return self._plan_join(jq, sql, max_rel_error, seed)
+                return self._plan_join(parsed, sql, max_rel_error, seed)
             return self._exact(sql, None, "query outside approximable grammar "
                                "(joins/subqueries/set-ops execute exactly)")
 

@@ -31,7 +31,7 @@ from approximate_query_engine_spark.rewriter import (
     rewrite_join_fact_sample,
     rewrite_systematic_sample,
 )
-from approximate_query_engine_spark.sqlparser import try_parse, try_parse_join
+from approximate_query_engine_spark.sqlparser import JoinedQuery, try_parse_any
 
 #: geometric fraction ladder for refinement steps (bernoulli mode)
 DEFAULT_LADDER = (0.001, 0.004, 0.016, 0.064, 0.25)
@@ -107,9 +107,8 @@ def progressive_query(
         raise ValueError(f"unknown progressive mode {mode!r}")
     if mode == "systematic" and not key_expr:
         raise ValueError("systematic mode requires key_expr")
-    parsed = try_parse(sql)
-    jq = try_parse_join(sql) if parsed is None else None
-    q = parsed if parsed is not None else jq
+    q = try_parse_any(sql)
+    jq = q if isinstance(q, JoinedQuery) else None
     fact = None
     if jq is not None:
         fact = fact_table or jq.tables[0][0]
@@ -138,10 +137,10 @@ def progressive_query(
                             f"rand({seed}) < CAST({fraction!r} AS DOUBLE)"
                         )
                 elif k is not None:
-                    rw = rewrite_systematic_sample(parsed, k, key_expr)
+                    rw = rewrite_systematic_sample(q, k, key_expr)
                     predicate = f"(({key_expr}) % {k}) = 0"
                 else:
-                    rw = rewrite_inline_sample(parsed, fraction, seed=seed)
+                    rw = rewrite_inline_sample(q, fraction, seed=seed)
                     predicate = f"rand({seed}) < CAST({fraction!r} AS DOUBLE)"
             except UnsupportedRewriteError:
                 break
@@ -157,7 +156,7 @@ def progressive_query(
                     f"SELECT COUNT(*) AS __n FROM {fact} WHERE {predicate}"
                 ).collect()[0]["__n"]
             else:
-                support = _min_group_support(spark, parsed, predicate)
+                support = _min_group_support(spark, q, predicate)
             steps.append(
                 {
                     "fraction": fraction,

@@ -618,6 +618,18 @@ def try_parse_join(sql: str) -> JoinedQuery | None:
         return None
 
 
+def try_parse_any(sql: str) -> ParsedQuery | None:
+    """The single-table parse, else the star-join parse (a
+    :class:`JoinedQuery`), else None → exact pass-through."""
+    parsed = try_parse(sql)
+    return parsed if parsed is not None else try_parse_join(sql)
+
+
+#: ``parsed=`` default: none handed in, so parse ``sql`` here. A handed-in
+#: None means "outside the grammar" and is never parsed again.
+UNPARSED: object = object()
+
+
 # ---------------------------------------------------------------------------
 # WHERE-clause normalization shared by the selectivity estimator
 # (planner.estimate_selectivity) and partition-pruning derivation

@@ -141,6 +141,23 @@ def test_null_timestamp_rows_decline_topk_and_star_join_routes(spark):
     assert {d["fam"] for d in r["result"]} == {"x", "y", "z"}
 
 
+def test_null_timestamp_rows_decline_unwindowed_segment_overlap(spark):
+    """``segment_overlap`` with no window must not answer from theta
+    state that misses the NULL-ts rows (it gave 3 distinct users per
+    segment where the table holds 4); a windowed call still routes."""
+    rows = [(BASE + datetime.timedelta(hours=h), "ab"[h % 2], 1.0, h % 3)
+            for h in range(6)]
+    rows += [(None, "a", 1.0, 7), (None, "b", 1.0, 7)]
+    e, _ = _engine(spark, "nts_ov", rows, theta_cols=["user_id"])
+    r = e.segment_overlap("nts_ov", "event_type", "user_id")
+    assert r["source"] == "raw_scan", r["reason"]
+    row = r["df"].collect()[0]
+    assert (row["distinct_a"], row["overlap_cnt"]) == (4, 4)
+    w = e.segment_overlap("nts_ov", "event_type", "user_id",
+                          lo="2024-04-01 00:00:00", hi="2024-04-01 06:00:00")
+    assert w["source"] == "rollup_state", w["reason"]
+
+
 # ------------------------------------------------- correctness after writes
 def test_tail_refresh_with_late_rows_serves_new_copy(spark):
     rows = _rows()
