@@ -372,7 +372,10 @@ class Catalog:
 
     # ---- samples (reference storage.py:46-55, sampler.py:120-143) ----
     def register_sample(self, info: SampleInfo) -> None:
-        self.samples[info.sample_table] = info
+        """Register ``info``. A rebuilt sample updates its entry in place,
+        so code holding the entry follows it to the new version."""
+        old = self.samples.setdefault(info.sample_table, info)
+        vars(old).update(vars(info))
 
     def samples_for_table(self, table: str) -> list[SampleInfo]:
         return [s for s in self.samples.values() if s.table_name == table]

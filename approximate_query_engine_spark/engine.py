@@ -733,7 +733,8 @@ class AQEngine:
         (``<table>__by_<grain>`` unless ``name``). Predicates on the
         derived ``p_bucket`` column then prune at file-listing time —
         the 100 TB fact-table layout (operators/partitioning.py, pruning
-        measured by scan_metrics in tests)."""
+        measured by scan_metrics in tests). Each build is a new version
+        directory of the layout's root (versions.py)."""
         import os
 
         from pyspark.sql import functions as F
@@ -743,42 +744,50 @@ class AQEngine:
             partition_by_time,
             read_partitioned,
         )
+        from approximate_query_engine_spark.versions import write_version
 
         out_name = name or f"{table}__by_{grain}"
-        path = os.path.join(
-            self.catalog.workdir, f"partitioned_{out_name}"
-        )
-        partition_by_time(self.spark.table(table), path, ts_col, grain=grain)
-        if not list_bucket_dirs(self.spark, path):
-            # an empty source writes no bucket directory, and a layout
-            # without files cannot be read back
-            raise ValueError(
-                f"{table} has no rows: there is no layout to build"
+
+        def write(path):
+            partition_by_time(
+                self.spark.table(table), path, ts_col, grain=grain
             )
-        df = read_partitioned(self.spark, path)
-        df.createOrReplaceTempView(out_name)
-        # one aggregation over the fresh layout gets both the drift
-        # baseline and the partition count (two separate full scans here
-        # would double the post-write cost at scale)
-        row = df.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.countDistinct("p_bucket").alias("__p"),
-        ).collect()[0]
-        self.catalog.partitioned_views[table] = {
-            "view": out_name,
-            "path": path,
-            "ts_col": ts_col,
-            "grain": grain,
-            "partition_col": "p_bucket",
-            # drift baseline for the maintenance policy (layout rows ==
-            # base rows at build time)
-            "built_row_count": int(row["__n"]),
-        }
-        # the layout count IS the base row count at this instant — record
-        # it so the freshness gate (which declines on UNKNOWN counts)
-        # can route immediately, without waiting for a stats refresh
-        self.catalog.upsert_table_stats(table, int(row["__n"]))
-        self.catalog.save()
+            if not list_bucket_dirs(self.spark, path):
+                # an empty source writes no bucket directory, and a layout
+                # without files cannot be read back
+                raise ValueError(
+                    f"{table} has no rows: there is no layout to build"
+                )
+
+        def publish(path, _version):
+            df = read_partitioned(self.spark, path)
+            df.createOrReplaceTempView(out_name)
+            # one aggregation over the fresh layout gets both the drift
+            # baseline and the partition count (two separate full scans
+            # here would double the post-write cost at scale)
+            row = df.agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.countDistinct("p_bucket").alias("__p"),
+            ).collect()[0]
+            self.catalog.partitioned_views[table] = {
+                "view": out_name,
+                "path": path,
+                "ts_col": ts_col,
+                "grain": grain,
+                "partition_col": "p_bucket",
+                # drift baseline for the maintenance policy (layout rows
+                # == base rows at build time)
+                "built_row_count": int(row["__n"]),
+            }
+            # the layout count IS the base row count at this instant —
+            # record it so the freshness gate (which declines on UNKNOWN
+            # counts) can route immediately, without a stats refresh
+            self.catalog.upsert_table_stats(table, int(row["__n"]))
+            self.catalog.save()
+            return path, row
+
+        root = os.path.join(self.catalog.workdir, f"partitioned_{out_name}")
+        path, row = write_version(self.spark, root, write, publish)
         # samples built BEFORE the layout existed are flat parquet and
         # can't route; re-materializing through the sampler rebuilds each
         # bucket-partitioned (identical subsets: seeded df.sample and the
@@ -832,12 +841,10 @@ class AQEngine:
             line_doc_frequency,
             write_line_frequency,
         )
+        from approximate_query_engine_spark.versions import write_version
 
         df = self.spark.table(table)
         root = os.path.join(self.catalog.workdir, f"boilerplate_{table}")
-        prev = self.catalog.boilerplate_indexes.get(table)
-        version = int(prev.get("version", 0)) + 1 if prev else 1
-        path = os.path.join(root, f"v{version}")
         freq = line_doc_frequency(df, text_col, id_col, min_chars)
         seen = df.select(F.col(id_col)).distinct()
         meta = {
@@ -846,24 +853,37 @@ class AQEngine:
             "min_docs": int(min_docs),
             "min_chars": int(min_chars),
         }
-        write_line_frequency(freq, path, seen_ids=seen, meta=meta)
+        base = {**meta, "root": root, "created_at": _time.time()}
+        return write_version(
+            self.spark,
+            root,
+            lambda path: write_line_frequency(
+                freq, path, seen_ids=seen, meta=meta
+            ),
+            lambda path, version: self._register_boilerplate_index(
+                table, base, path, version
+            ),
+        )
+
+    def _register_boilerplate_index(
+        self, table: str, base: dict, path: str, version: int
+    ) -> dict:
+        """Shared registration (publish step) for build and update: the
+        entry ``base`` at ``path``, then move the pointer."""
         n_docs = self.spark.read.parquet(
             path.rstrip("/") + "/_seen_ids"
         ).count()
         entry = {
-            **meta,
+            **base,
             "path": path,
-            "root": root,
             "version": version,
             # drift baseline: the doc count this index accounts for —
             # equal to the base table's distinct-doc count at build/update
             # time, so an unfed base mutation shows up as drift
             "built_row_count": int(n_docs),
-            "created_at": _time.time(),
         }
         self.catalog.boilerplate_indexes[table] = entry
         self.catalog.save()
-        self._prune_artifact_versions(root, keep=path)
         return dict(entry)
 
     def update_boilerplate_index(self, table: str, batch) -> tuple:
@@ -872,19 +892,16 @@ class AQEngine:
         DataFrame, updated catalog entry). The disjoint-batch contract
         is ENFORCED (the batch's ids anti-join the persisted seen-id
         set; an overlap raises before any count is double-added). The
-        merged table is written to a NEW versioned directory before the
-        catalog pointer moves — Spark cannot safely overwrite a Parquet
-        path it is lazily reading, and a reader crash mid-rewrite must
-        never corrupt the only copy of the corpus state."""
-        import os
-
+        merged table is the index's next version (versions.py)."""
         from pyspark.sql import functions as F
 
         from approximate_query_engine_spark.functions.boilerplate import (
+            _strip_flagged_lines,
             incremental_remove_boilerplate,
             read_line_frequency,
             write_line_frequency,
         )
+        from approximate_query_engine_spark.versions import write_version
 
         info = self.catalog.boilerplate_indexes.get(table)
         if info is None:
@@ -907,48 +924,38 @@ class AQEngine:
             min_chars=int(info["min_chars"]),
             seen_ids=seen,
         )
-        version = int(info.get("version", 1)) + 1
-        path = os.path.join(info["root"], f"v{version}")
         new_seen = (
             seen.unionByName(batch.select(F.col(id_col)).distinct())
             if seen is not None
             else batch.select(F.col(id_col)).distinct()
         )
-        write_line_frequency(
-            merged,
-            path,
-            seen_ids=new_seen.distinct(),
-            meta={k: info[k] for k in (
-                "text_col", "id_col", "min_docs", "min_chars"
-            )},
-        )
-        # re-derive the cleaned batch from the persisted new version:
-        # value-identical (the written merged table IS the threshold
-        # evidence) and pinned to files that outlive the prune below
-        from approximate_query_engine_spark.functions.boilerplate import (
-            _strip_flagged_lines,
-        )
 
-        freq_new, _, _ = read_line_frequency(self.spark, path)
-        bp = freq_new.where(
-            F.col("doc_count") >= int(info["min_docs"])
-        ).select("nline", F.lit(True).alias("is_bp"))
-        cleaned = _strip_flagged_lines(
-            batch, bp, info["text_col"], id_col
-        )
-        n_docs = self.spark.read.parquet(
-            path.rstrip("/") + "/_seen_ids"
-        ).count()
-        entry = {
-            **info,
-            "path": path,
-            "version": version,
-            "built_row_count": int(n_docs),
-        }
-        self.catalog.boilerplate_indexes[table] = entry
-        self.catalog.save()
-        self._prune_artifact_versions(info["root"], keep=path)
-        return cleaned, dict(entry)
+        def write(path):
+            write_line_frequency(
+                merged,
+                path,
+                seen_ids=new_seen.distinct(),
+                meta={k: info[k] for k in (
+                    "text_col", "id_col", "min_docs", "min_chars"
+                )},
+            )
+
+        def publish(path, version):
+            # re-derive the cleaned batch from the persisted new version:
+            # value-identical (the written merged table IS the threshold
+            # evidence) and pinned to files that outlive the prune
+            freq_new, _, _ = read_line_frequency(self.spark, path)
+            bp = freq_new.where(
+                F.col("doc_count") >= int(info["min_docs"])
+            ).select("nline", F.lit(True).alias("is_bp"))
+            cleaned = _strip_flagged_lines(
+                batch, bp, info["text_col"], id_col
+            )
+            return cleaned, self._register_boilerplate_index(
+                table, info, path, version
+            )
+
+        return write_version(self.spark, info["root"], write, publish)
 
     def build_lm_index(
         self,
@@ -980,33 +987,33 @@ class AQEngine:
             fit_bigram_lm,
             write_bigram_lm,
         )
+        from approximate_query_engine_spark.versions import write_version
 
         df = self.spark.table(table)
-        root = os.path.join(self.catalog.workdir, f"lm_{table}")
-        prev = self.catalog.lm_indexes.get(table)
-        version = int(prev.get("version", 0)) + 1 if prev else 1
-        path = os.path.join(root, f"v{version}")
         uni, bi = fit_bigram_lm(df, text_col=text_col)
         seen = df.select(F.col(id_col)).distinct()
         meta = {"text_col": text_col, "id_col": id_col}
-        write_bigram_lm(uni, bi, path, seen_ids=seen, meta=meta)
-        return self._register_lm_index(table, path, root, version, meta,
-                                       created_at=_time.time())
+        root = os.path.join(self.catalog.workdir, f"lm_{table}")
+        base = {**meta, "root": root, "created_at": _time.time()}
+        return write_version(
+            self.spark,
+            root,
+            lambda path: write_bigram_lm(
+                uni, bi, path, seen_ids=seen, meta=meta
+            ),
+            lambda path, version: self._register_lm_index(
+                table, base, path, version
+            ),
+        )
 
     def _register_lm_index(
-        self,
-        table: str,
-        path: str,
-        root: str,
-        version: int,
-        meta: dict,
-        created_at: float,
+        self, table: str, base: dict, path: str, version: int
     ) -> dict:
-        """Shared registration tail for build and update: re-read the
-        PERSISTED sidecars (vocab size, counted doc ids) through the
-        artifact's own reader so the catalog entry describes what is
-        actually on disk (one sidecar-format parser, not two), move the
-        pointer, prune superseded versions."""
+        """Shared registration (publish step) for build and update: the
+        entry ``base`` at ``path``, after re-reading the PERSISTED sidecars (vocab size, counted doc ids)
+        through the artifact's own reader so the catalog entry describes
+        what is actually on disk (one sidecar-format parser, not two),
+        then move the pointer."""
         from approximate_query_engine_spark.functions.lm import (
             read_bigram_lm_state,
         )
@@ -1014,18 +1021,15 @@ class AQEngine:
         _, _, vocab, seen, _ = read_bigram_lm_state(self.spark, path)
         n_docs = seen.count() if seen is not None else 0
         entry = {
-            **meta,
+            **base,
             "path": path,
-            "root": root,
             "version": version,
             "vocab_size": vocab,
             # drift baseline: the reference docs this model accounts for
             "built_row_count": int(n_docs),
-            "created_at": created_at,
         }
         self.catalog.lm_indexes[table] = entry
         self.catalog.save()
-        self._prune_artifact_versions(root, keep=path)
         return dict(entry)
 
     def update_lm_index(self, table: str, batch) -> dict:
@@ -1048,7 +1052,6 @@ class AQEngine:
         next drift-triggered refit (the drift measure itself flags the
         mismatch: built_row_count counts fed docs, the catalog counts
         table rows)."""
-        import os
         import time as _time
 
         from pyspark.sql import functions as F
@@ -1059,6 +1062,7 @@ class AQEngine:
             read_bigram_lm_state,
             write_bigram_lm,
         )
+        from approximate_query_engine_spark.versions import write_version
 
         info = self.catalog.lm_indexes.get(table)
         if info is None:
@@ -1120,28 +1124,23 @@ class AQEngine:
                 )
         buni, bbi = fit_bigram_lm(batch, text_col=text_col)
         muni, mbi = merge_bigram_lm(uni, bi, buni, bbi)
-        version = int(info.get("version", 1)) + 1
-        path = os.path.join(info["root"], f"v{version}")
         new_seen = (
             seen.unionByName(batch.select(F.col(id_col)).distinct())
             .distinct()
             if seen is not None
             else batch.select(F.col(id_col)).distinct()
         )
-        write_bigram_lm(
-            muni,
-            mbi,
-            path,
-            seen_ids=new_seen,
-            meta={"text_col": text_col, "id_col": id_col},
-        )
-        return self._register_lm_index(
-            table,
-            path,
+        meta = {"text_col": text_col, "id_col": id_col}
+        base = {**meta, "root": info["root"], "created_at": _time.time()}
+        return write_version(
+            self.spark,
             info["root"],
-            version,
-            {"text_col": text_col, "id_col": id_col},
-            created_at=_time.time(),
+            lambda path: write_bigram_lm(
+                muni, mbi, path, seen_ids=new_seen, meta=meta
+            ),
+            lambda path, version: self._register_lm_index(
+                table, base, path, version
+            ),
         )
 
     def lm_score(
@@ -1224,8 +1223,6 @@ class AQEngine:
         code table). The quantizer params ride the Parquet sidecar
         (quantization.write_quantized_codes), so any session reloads
         codes + params as one consistent pair."""
-        import os
-
         from approximate_query_engine_spark.functions.quantization import (
             ScalarQuantizer,
             write_quantized_codes,
@@ -1239,21 +1236,16 @@ class AQEngine:
             sample_fraction=sample_fraction,
             seed=seed,
         )
-        root = os.path.join(self.catalog.workdir, f"quantized_{table}")
-        prev = self.catalog.quantized_codes.get(table)
-        version = int(prev.get("version", 0)) + 1 if prev else 1
-        path = os.path.join(root, f"v{version}")
-        write_quantized_codes(df, q, path, id_col=id_col, vec_col=vec_col)
         # build-time clamp baseline: ~0 for a full fit, small and
         # EXPECTED for a sample fit (the threshold gates appended-data
         # drift, not the fit's own design clamping)
-        return self._register_quantized_codes(
+        return self._write_quantized_codes(
             table,
             df,
             q,
-            path,
-            root,
-            version,
+            lambda path: write_quantized_codes(
+                df, q, path, id_col=id_col, vec_col=vec_col
+            ),
             vec_col=vec_col,
             id_col=id_col,
             levels=levels,
@@ -1262,14 +1254,12 @@ class AQEngine:
             clamp_threshold=clamp_threshold,
         )
 
-    def _register_quantized_codes(
+    def _write_quantized_codes(
         self,
         table: str,
         df,
         q,
-        path: str,
-        root: str,
-        version: int,
+        write,
         vec_col: str,
         id_col: str,
         levels: int,
@@ -1278,10 +1268,12 @@ class AQEngine:
         clamp_threshold: float,
         extra: dict | None = None,
     ) -> dict:
-        """Shared registration tail for BOTH code-table kinds (flat and
-        IVF): clamp baseline, row count, catalog entry + stats, version
-        prune. One definition so the drift policy's bookkeeping can
-        never diverge between the two kinds."""
+        """Shared write + registration for BOTH code-table kinds (flat
+        and IVF): ``write(path)`` writes the next version (versions.py),
+        then the clamp baseline, row count, catalog entry + stats. One
+        definition so the drift policy's bookkeeping can never diverge
+        between the two kinds."""
+        import os
         import time as _time
 
         from pyspark.sql import functions as F
@@ -1289,37 +1281,42 @@ class AQEngine:
         from approximate_query_engine_spark.functions.quantization import (
             clamp_stats,
         )
+        from approximate_query_engine_spark.versions import write_version
 
-        row = (
-            clamp_stats(df, q, vec_col)
-            .agg(
-                F.coalesce(F.sum("clamped"), F.lit(0)).alias("c"),
-                F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
+        root = os.path.join(self.catalog.workdir, f"quantized_{table}")
+
+        def publish(path, version):
+            row = (
+                clamp_stats(df, q, vec_col)
+                .agg(
+                    F.coalesce(F.sum("clamped"), F.lit(0)).alias("c"),
+                    F.coalesce(F.sum("n"), F.lit(0)).alias("n"),
+                )
+                .collect()[0]
             )
-            .collect()[0]
-        )
-        frac = float(row["c"]) / float(row["n"]) if row["n"] else 0.0
-        n_rows = self.spark.read.parquet(path).count()
-        entry = {
-            "path": path,
-            "root": root,
-            "version": version,
-            "vec_col": vec_col,
-            "id_col": id_col,
-            "levels": int(levels),
-            "sample_fraction": sample_fraction,
-            "seed": int(seed),
-            "clamp_threshold": float(clamp_threshold),
-            "built_row_count": int(n_rows),
-            "built_clamp_fraction": frac,
-            "created_at": _time.time(),
-            **(extra or {}),
-        }
-        self.catalog.quantized_codes[table] = entry
-        self.catalog.upsert_table_stats(table, int(n_rows))
-        self.catalog.save()
-        self._prune_artifact_versions(root, keep=path)
-        return dict(entry)
+            frac = float(row["c"]) / float(row["n"]) if row["n"] else 0.0
+            n_rows = self.spark.read.parquet(path).count()
+            entry = {
+                "path": path,
+                "root": root,
+                "version": version,
+                "vec_col": vec_col,
+                "id_col": id_col,
+                "levels": int(levels),
+                "sample_fraction": sample_fraction,
+                "seed": int(seed),
+                "clamp_threshold": float(clamp_threshold),
+                "built_row_count": int(n_rows),
+                "built_clamp_fraction": frac,
+                "created_at": _time.time(),
+                **(extra or {}),
+            }
+            self.catalog.quantized_codes[table] = entry
+            self.catalog.upsert_table_stats(table, int(n_rows))
+            self.catalog.save()
+            return dict(entry)
+
+        return write_version(self.spark, root, write, publish)
 
     def build_ivf_codes(
         self,
@@ -1363,8 +1360,6 @@ class AQEngine:
         max/mean crosses ``skew_threshold`` a coarse re-train is
         advised (budget-gated; deferral costs probe time, never
         correctness). Query with :meth:`knn`."""
-        import os
-
         from approximate_query_engine_spark.functions.quantization import (
             ScalarQuantizer,
             centroid_codes_from_index,
@@ -1423,25 +1418,19 @@ class AQEngine:
                 seed=seed,
             )
         cents = centroid_codes_from_index(index, q)
-        root = os.path.join(self.catalog.workdir, f"quantized_{table}")
-        version = int(prev.get("version", 0)) + 1 if prev else 1
-        path = os.path.join(root, f"v{version}")
-        write_ivf_quantized_codes(
-            df,
-            q,
-            cents,
-            path,
-            id_col=id_col,
-            vec_col=vec_col,
-            float_centroids=index.centroids,
-        )
-        return self._register_quantized_codes(
+        return self._write_quantized_codes(
             table,
             df,
             q,
-            path,
-            root,
-            version,
+            lambda path: write_ivf_quantized_codes(
+                df,
+                q,
+                cents,
+                path,
+                id_col=id_col,
+                vec_col=vec_col,
+                float_centroids=index.centroids,
+            ),
             vec_col=vec_col,
             id_col=id_col,
             levels=levels,
@@ -1753,61 +1742,6 @@ class AQEngine:
                 cached.pop(next(iter(cached)))
         return info, assigned, quant, cents
 
-    def _prune_artifact_versions(
-        self, root: str, keep: str, grace: int = 1
-    ) -> None:
-        """Best-effort removal of superseded version directories (the
-        catalog pointer has already moved; old versions only cost
-        disk). Never fails the caller.
-
-        Keeps the pointer's directory PLUS the ``grace`` newest
-        superseded versions (round 13, VERDICT r12 #6): another session
-        that resolved the catalog pointer just before this update may
-        still be lazily scanning the previous version — deleting it mid
-        scan fails that reader for no reason, while one extra version
-        of bounded artifacts (count tables, code tables — never corpus
-        copies) is cheap. Versions older than the grace window are
-        deleted; the next update retires the graced one in turn.
-
-        Goes through the Hadoop FileSystem API, not os.listdir — the
-        artifacts it prunes are written by Spark writers that are
-        S3/HDFS-safe (write_line_frequency, write_ivf_quantized_codes),
-        so the prune must resolve the same scheme the writes did or
-        superseded versions on a remote workdir would leak silently
-        forever (r12 ADVICE)."""
-        import os
-
-        keep_name = os.path.basename(keep.rstrip("/"))
-
-        def _vnum(name: str) -> int:
-            try:
-                return int(name[1:])
-            except ValueError:
-                return -1
-
-        try:
-            jvm = self.spark.sparkContext._jvm
-            hroot = jvm.org.apache.hadoop.fs.Path(root)
-            fs = hroot.getFileSystem(
-                self.spark.sparkContext._jsc.hadoopConfiguration()
-            )
-            if not fs.exists(hroot):
-                return
-            superseded = sorted(
-                (
-                    st.getPath()
-                    for st in fs.listStatus(hroot)
-                    if st.getPath().getName().startswith("v")
-                    and st.getPath().getName() != keep_name
-                ),
-                key=lambda p: _vnum(p.getName()),
-                reverse=True,
-            )
-            for p in superseded[max(int(grace), 0):]:
-                fs.delete(p, True)
-        except Exception:  # noqa: BLE001 - prune never fails the build
-            pass
-
     def create_rollup(
         self,
         table: str,
@@ -1824,7 +1758,7 @@ class AQEngine:
         theta_cols: list[str] | None = None,
         theta_lgk: int = 12,
         derive: bool = True,
-        theta_key_native: bool = False,
+        theta_key_native: bool | None = None,
     ) -> dict:
         """Materialize a continuous-aggregate rollup of ``table`` (partial
         count/sum/min/max state per (time bucket, dims)) under the catalog
@@ -1854,19 +1788,26 @@ class AQEngine:
         (``rollup.THETA_NATIVE_TYPES``); refused loudly otherwise.
         Certified-exact routed answers are IDENTICAL under either
         encoding (exact regime = exact counts); only beyond-budget raw
-        estimates differ, which routing never serves. Existing layouts
-        keep v1 until maintenance's advised migration rebuilds them."""
+        estimates differ, which routing never serves. Not passed (None):
+        native exactly when the types allow, so a fresh build is never
+        advised a migration; existing layouts keep v1 until
+        maintenance's advised migration rebuilds them.
+
+        Every build is a new version directory of the rollup's root
+        (versions.py): the previous version keeps serving until this one
+        is written, served and cataloged."""
         import os
 
         from approximate_query_engine_spark.operators.rollup import (
-            _PDATE,
+            _partial_state,
             RollupSpec,
             bucket_seconds,
             derive_rollup_state,
             is_week_bucket,
-            materialize_rollup,
             serve_layout,
+            write_rollup_state,
         )
+        from approximate_query_engine_spark.versions import write_version
         from pyspark.sql import functions as F
 
         bsec = bucket_seconds(bucket)
@@ -1889,24 +1830,16 @@ class AQEngine:
                 "queries route from day-grain state (Monday weeks are "
                 "day-aligned)."
             )
-        if theta_key_native and theta_cols:
-            from approximate_query_engine_spark.operators.rollup import (
-                THETA_NATIVE_TYPES,
+        native_ok = self._theta_native_ok(table, theta_cols)
+        if theta_key_native is None:
+            theta_key_native = native_ok
+        elif theta_key_native and theta_cols and not native_ok:
+            raise ValueError(
+                "theta_key_native requires natively hashable theta "
+                f"columns (rollup.THETA_NATIVE_TYPES); {theta_cols} have "
+                f"types {self.spark.table(table).select(*theta_cols).dtypes}"
+                " — keep the string encoding for these"
             )
-
-            types = dict(self.spark.table(table).dtypes)
-            bad = [
-                c
-                for c in theta_cols
-                if types.get(c) not in THETA_NATIVE_TYPES
-            ]
-            if bad:
-                raise ValueError(
-                    "theta_key_native requires natively hashable theta "
-                    f"columns; {bad} have types "
-                    f"{[types.get(c) for c in bad]} — keep the default "
-                    "string encoding for these"
-                )
         spec = RollupSpec(
             table,
             time_col,
@@ -1927,156 +1860,154 @@ class AQEngine:
         if base_rows is None:
             base_rows = self.spark.table(table).count()
             self.catalog.upsert_table_stats(table, base_rows)
-        path = os.path.join(self.catalog.workdir, f"rollup_{spec.rollup_name}")
-        derived_from = None
-        fine_entry = None
-        if derive:
-            fine = self._derivable_fine(table, spec, base_rows)
-            if fine is not None:
-                fine_entry = next(
-                    (
-                        e
-                        for e in self.catalog.rollups.get(table, [])
-                        if e["view"] == fine.rollup_name
-                    ),
-                    None,
-                )
-                rolled = derive_rollup_state(self.spark, fine, spec)
-                rolled.write.mode("overwrite").partitionBy(_PDATE).parquet(
-                    path
-                )
-                serve_layout(self.spark, spec.rollup_name, path)
-                derived_from = fine.rollup_name
-        if derived_from is None:
-            materialize_rollup(self.spark, spec, path=path)
-        # one aggregate over the served state: the bucket count, and the
-        # source rows the buckets hold — the rest have a NULL time column
-        n_buckets, state_rows = (
-            self.spark.table(spec.files_view)
-            .agg(F.count(F.lit(1)), F.sum("n_rows"))
-            .collect()[0]
+        root = os.path.join(self.catalog.workdir, f"rollup_{spec.rollup_name}")
+        fine_entry = (
+            self._derivable_fine(table, spec, base_rows) if derive else None
         )
-        # NULL evidence for the top-k SQL routing gate: approx_top_k
-        # state never sees NULLs, so a routed GROUP BY would silently
-        # drop the NULL group — record whether each tracked column was
-        # null-free at build time (one column-pruned agg; the derived
-        # path copies the fine rollup's flags — same data lineage —
-        # instead of re-scanning the fact table)
-        topk_notnull: dict[str, bool] = {}
-        topk_exact_ndv: dict[str, dict] = {}
-        if topk_cols:
-            inherited = (
-                (fine_entry or {}).get("topk_notnull") or {}
-                if derived_from is not None
-                else {}
+        fine = _entry_spec(table, fine_entry) if fine_entry else None
+        derived_from = fine_entry["view"] if fine_entry else None
+
+        def write(path):
+            state = (
+                derive_rollup_state(self.spark, fine, spec)
+                if fine is not None
+                else _partial_state(self.spark.table(table), spec)
             )
-            # exact-ndv build evidence rides the same lineage rule: a
-            # derived build re-aggregates the fine rollup's state over
-            # the same base rows, so its per-column evidence holds
-            inh_ndv = (
-                (fine_entry or {}).get("topk_exact_ndv") or {}
-                if derived_from is not None
-                else {}
+            write_rollup_state(self.spark, state, spec, path)
+
+        def publish(path, _version):
+            serve_layout(self.spark, spec.rollup_name, path)
+            # one aggregate over the served state: the bucket count, and the
+            # source rows the buckets hold — the rest have a NULL time column
+            n_buckets, state_rows = (
+                self.spark.table(spec.files_view)
+                .agg(F.count(F.lit(1)), F.sum("n_rows"))
+                .collect()[0]
             )
-            missing = [
-                c
-                for c in topk_cols
-                if c not in inherited or c not in inh_ndv
-            ]
-            topk_notnull = {
-                c: bool(inherited[c]) for c in topk_cols if c in inherited
-            }
-            topk_exact_ndv = {
-                c: dict(inh_ndv[c]) for c in topk_cols if c in inh_ndv
-            }
-            if missing:
-                # one column-pruned pass records BOTH the NULL evidence
-                # and the EXACT distinct count per tracked column — the
-                # build already pays a fact scan, and exact ndv is what
-                # lets _topk_certified say "exact regime" literally
-                # (countDistinct skips NULLs: exactly the values that
-                # can enter the approx_top_k state)
-                aggs = []
-                for i, c in enumerate(missing):
-                    aggs.append(
-                        F.sum(F.col(c).isNull().cast("long")).alias(
-                            f"__nulls_{i}"
+            # NULL evidence for the top-k SQL routing gate: approx_top_k
+            # state never sees NULLs, so a routed GROUP BY would silently
+            # drop the NULL group — record whether each tracked column was
+            # null-free at build time (one column-pruned agg; the derived
+            # path copies the fine rollup's flags — same data lineage —
+            # instead of re-scanning the fact table)
+            topk_notnull: dict[str, bool] = {}
+            topk_exact_ndv: dict[str, dict] = {}
+            if topk_cols:
+                inherited = (
+                    (fine_entry or {}).get("topk_notnull") or {}
+                    if derived_from is not None
+                    else {}
+                )
+                # exact-ndv build evidence rides the same lineage rule: a
+                # derived build re-aggregates the fine rollup's state over
+                # the same base rows, so its per-column evidence holds
+                inh_ndv = (
+                    (fine_entry or {}).get("topk_exact_ndv") or {}
+                    if derived_from is not None
+                    else {}
+                )
+                missing = [
+                    c
+                    for c in topk_cols
+                    if c not in inherited or c not in inh_ndv
+                ]
+                topk_notnull = {
+                    c: bool(inherited[c]) for c in topk_cols if c in inherited
+                }
+                topk_exact_ndv = {
+                    c: dict(inh_ndv[c]) for c in topk_cols if c in inh_ndv
+                }
+                if missing:
+                    # one column-pruned pass records BOTH the NULL evidence
+                    # and the EXACT distinct count per tracked column — the
+                    # build already pays a fact scan, and exact ndv is what
+                    # lets _topk_certified say "exact regime" literally
+                    # (countDistinct skips NULLs: exactly the values that
+                    # can enter the approx_top_k state)
+                    aggs = []
+                    for i, c in enumerate(missing):
+                        aggs.append(
+                            F.sum(F.col(c).isNull().cast("long")).alias(
+                                f"__nulls_{i}"
+                            )
                         )
-                    )
-                    aggs.append(
-                        F.countDistinct(F.col(c)).alias(f"__ndv_{i}")
-                    )
-                row = self.spark.table(table).agg(*aggs).collect()[0]
-                for i, c in enumerate(missing):
-                    topk_notnull[c] = int(row[f"__nulls_{i}"] or 0) == 0
-                    topk_exact_ndv[c] = {
-                        "ndv": int(row[f"__ndv_{i}"] or 0),
-                        # True = exact count at build; refresh degrades
-                        # it to an exact UPPER BOUND (old + tail ndv)
-                        "exact": True,
-                    }
-        files_view = spec.files_view
-        info = {
-            "source_table": table,
-            "view": spec.rollup_name,
-            "files_view": files_view,
-            "path": path,
-            "time_col": time_col,
-            "bucket": bucket,
-            "bucket_seconds": bsec,
-            "dims": list(dims or []),
-            "measures": list(measures or []),
-            "distinct_cols": list(distinct_cols or []),
-            "hll_lgk": int(hll_lgk),
-            "quantile_cols": list(quantile_cols or []),
-            "kll_k": int(kll_k),
-            "topk_cols": list(topk_cols or []),
-            "topk_budget": int(topk_budget),
-            "theta_cols": list(theta_cols or []),
-            "theta_lgk": int(theta_lgk),
-            # v2 theta key encoding (round 15): every later state builder
-            # (refresh, hybrid edge slices, migration check) reads THIS —
-            # the layout's hash space is defined here, never re-derived
-            "theta_key_native": bool(theta_key_native),
-            # build-time null evidence per topk column (see above) —
-            # the SQL routing gate requires True (refresh re-checks the
-            # tail and can only flip True -> False)
-            "topk_notnull": topk_notnull,
-            # build-time EXACT distinct count per topk column: the
-            # first (strongest) certification tier for top-k routing.
-            # exact=True at build; refresh turns it into an exact upper
-            # bound (old + tail distinct count, exact=False)
-            "topk_exact_ndv": topk_exact_ndv,
-            # provenance (observability only — routing never reads it):
-            # which finer rollup's state this build re-aggregated
-            "derived_from": derived_from,
-            # freshness gate: routing declines when the base table's
-            # catalog row count drifts from this (same contract as
-            # partitioned layouts — maintenance/register keep it current)
-            "built_row_count": int(base_rows),
-            # source rows with a NULL time column: the state holds none of
-            # them, so a query with no time conjunct declines while > 0
-            "null_ts_rows": max(0, int(base_rows) - int(state_rows or 0)),
-        }
-        entries = [
-            e
-            for e in self.catalog.rollups.get(table, [])
-            if e["view"] != spec.rollup_name
-        ]
-        entries.append(info)
-        self.catalog.rollups[table] = entries
-        self.catalog.save()
-        return {
-            "rollup": spec.rollup_name,
-            "path": path,
-            "buckets": int(n_buckets),
-            "bucket": bucket,
-            "dims": info["dims"],
-            "measures": info["measures"],
-            # provenance: which finer rollup's state this build
-            # re-aggregated (None = built from the raw table)
-            "derived_from": derived_from,
-        }
+                        aggs.append(
+                            F.countDistinct(F.col(c)).alias(f"__ndv_{i}")
+                        )
+                    row = self.spark.table(table).agg(*aggs).collect()[0]
+                    for i, c in enumerate(missing):
+                        topk_notnull[c] = int(row[f"__nulls_{i}"] or 0) == 0
+                        topk_exact_ndv[c] = {
+                            "ndv": int(row[f"__ndv_{i}"] or 0),
+                            # True = exact count at build; refresh degrades
+                            # it to an exact UPPER BOUND (old + tail ndv)
+                            "exact": True,
+                        }
+            files_view = spec.files_view
+            info = {
+                "source_table": table,
+                "view": spec.rollup_name,
+                "files_view": files_view,
+                "path": path,
+                "time_col": time_col,
+                "bucket": bucket,
+                "bucket_seconds": bsec,
+                "dims": list(dims or []),
+                "measures": list(measures or []),
+                "distinct_cols": list(distinct_cols or []),
+                "hll_lgk": int(hll_lgk),
+                "quantile_cols": list(quantile_cols or []),
+                "kll_k": int(kll_k),
+                "topk_cols": list(topk_cols or []),
+                "topk_budget": int(topk_budget),
+                "theta_cols": list(theta_cols or []),
+                "theta_lgk": int(theta_lgk),
+                # v2 theta key encoding (round 15): every later state builder
+                # (refresh, hybrid edge slices, migration check) reads THIS —
+                # the layout's hash space is defined here, never re-derived
+                "theta_key_native": bool(theta_key_native),
+                # build-time null evidence per topk column (see above) —
+                # the SQL routing gate requires True (refresh re-checks the
+                # tail and can only flip True -> False)
+                "topk_notnull": topk_notnull,
+                # build-time EXACT distinct count per topk column: the
+                # first (strongest) certification tier for top-k routing.
+                # exact=True at build; refresh turns it into an exact upper
+                # bound (old + tail distinct count, exact=False)
+                "topk_exact_ndv": topk_exact_ndv,
+                # provenance (observability only — routing never reads it):
+                # which finer rollup's state this build re-aggregated
+                "derived_from": derived_from,
+                # freshness gate: routing declines when the base table's
+                # catalog row count drifts from this (same contract as
+                # partitioned layouts — maintenance/register keep it current)
+                "built_row_count": int(base_rows),
+                # source rows with a NULL time column: the state holds none of
+                # them, so a query with no time conjunct declines while > 0
+                "null_ts_rows": max(0, int(base_rows) - int(state_rows or 0)),
+            }
+            # a rebuild updates its entry in place (moved last), so code
+            # holding the entry follows it to the new version
+            entries = self.catalog.rollups.get(table, [])
+            entry = next((e for e in entries if e["view"] == info["view"]), {})
+            entry.update(info)
+            self.catalog.rollups[table] = [
+                e for e in entries if e is not entry
+            ] + [entry]
+            self.catalog.save()
+            return {
+                "rollup": spec.rollup_name,
+                "path": path,
+                "buckets": int(n_buckets),
+                "bucket": bucket,
+                "dims": info["dims"],
+                "measures": info["measures"],
+                # provenance: which finer rollup's state this build
+                # re-aggregated (None = built from the raw table)
+                "derived_from": derived_from,
+            }
+
+        return write_version(self.spark, root, write, publish)
 
     def _serve_rollup(self, info: dict) -> None:
         """Serve a cataloged rollup's two views unless the registry
@@ -2089,9 +2020,9 @@ class AQEngine:
             serve_layout(self.spark, info["view"], info["path"])
 
     def _derivable_fine(self, table, spec, base_rows):
-        """The FRESH finer-grain rollup spec of ``table`` whose state can
-        derive ``spec`` (create/refresh hierarchy source), with its temp
-        view registered — or None. Freshness = the fine entry was built
+        """The catalog entry of the FRESH finer-grain rollup of ``table``
+        whose state can derive ``spec`` (create/refresh hierarchy source),
+        with its views served — or None. Freshness = the fine entry was built
         against exactly ``base_rows``; a stale fine would bake its drift
         into the derived state."""
         from approximate_query_engine_spark.operators.rollup import (
@@ -2105,14 +2036,13 @@ class AQEngine:
                 continue
             if e.get("time_col") != spec.time_col:
                 continue
-            fine = _entry_spec(table, e)
-            if can_derive_rollup(fine, spec) is not None:
+            if can_derive_rollup(_entry_spec(table, e), spec) is not None:
                 continue
             try:
                 self._serve_rollup(e)
             except Exception:
                 continue  # materialization gone — not usable
-            return fine
+            return e
         return None
 
     def refresh_rollup(
@@ -2180,12 +2110,13 @@ class AQEngine:
             if _source_rows is None
             else int(_source_rows)
         )
-        fine = self._derivable_fine(table, spec, current)
-        if fine is not None:
+        fine_entry = self._derivable_fine(table, spec, current)
+        if fine_entry is not None:
             from approximate_query_engine_spark.operators.rollup import (
                 refresh_rollup_buckets_from_state,
             )
 
+            fine = _entry_spec(table, fine_entry)
             refresh_rollup_buckets_from_state(
                 self.spark, fine, spec, info["path"], since
             )
@@ -2539,15 +2470,9 @@ class AQEngine:
                 quantile_cols=spec["quantile_cols"],
                 topk_cols=spec.get("topk_cols") or [],
                 topk_budget=int(spec.get("topk_budget", 1024)),
+                # theta key encoding left to create_rollup: native
+                # whenever the types allow
                 theta_cols=spec.get("theta_cols") or [],
-                # round 15: NEW advisor-materialized theta state has no
-                # legacy hash space to stay compatible with — opt into
-                # the native key encoding whenever the types allow
-                # (~18% off every sketch-build scan; certified routed
-                # answers identical by the exact-regime argument)
-                theta_key_native=self._theta_native_ok(
-                    spec["table"], spec.get("theta_cols") or []
-                ),
             )
             return self._repair_topk_budget(spec, built, max_state_rows)
 
@@ -2652,40 +2577,22 @@ class AQEngine:
                     ),
                 },
             }
-        try:
-            rebuilt = self.create_rollup(
-                spec["table"],
-                spec["time_col"],
-                spec["bucket"],
-                dims=spec["dims"],
-                measures=spec["measures"],
-                distinct_cols=spec["distinct_cols"],
-                quantile_cols=spec["quantile_cols"],
-                topk_cols=topk_cols,
-                topk_budget=need,
-                theta_cols=spec.get("theta_cols") or [],
-            )
-        except Exception as exc:  # noqa: BLE001
-            # The rebuild OVERWRITES the same parquet path, so a
-            # mid-write failure may have destroyed the first build's
-            # files — DEREGISTER the entry (routing disarmed, no partial
-            # reads), persist the exact-ndv upsert the docstring
-            # promises, then RE-RAISE: with zero state materialized the
-            # suggestion genuinely failed, and _apply_advice must report
-            # applied: False, not a success the next query can't route
-            # through.
-            self.catalog.rollups[spec["table"]] = [
-                e
-                for e in self.catalog.rollups.get(spec["table"], [])
-                if e["view"] != built.get("rollup")
-            ]
-            self.catalog.save()
-            raise RuntimeError(
-                f"evidence-sized rebuild (budget {budget} -> {need}) "
-                f"failed and the rollup was deregistered — the "
-                f"overwrite may have destroyed the first build's "
-                f"files: {exc}"
-            ) from exc
+        # persist the exact-ndv upsert first: the resize writes a new
+        # version (versions.py), so if it fails the first build keeps
+        # serving and the error reaches _apply_advice's report
+        self.catalog.save()
+        rebuilt = self.create_rollup(
+            spec["table"],
+            spec["time_col"],
+            spec["bucket"],
+            dims=spec["dims"],
+            measures=spec["measures"],
+            distinct_cols=spec["distinct_cols"],
+            quantile_cols=spec["quantile_cols"],
+            topk_cols=topk_cols,
+            topk_budget=need,
+            theta_cols=spec.get("theta_cols") or [],
+        )
         return {
             **rebuilt,
             "topk_budget_repair": {

@@ -268,12 +268,8 @@ def write_line_frequency(
     SAME filesystem (S3/HDFS included); the underscore prefixes keep
     the sidecars out of the Parquet reader's listing of ``path``.
 
-    This function OVERWRITES ``path`` in place — fine for a standalone
-    artifact, but state another session may be lazily reading must go
-    through the engine lifecycle (engine.build_boilerplate_index /
-    update_boilerplate_index), which writes each version to a NEW
-    directory before the catalog pointer moves and prunes superseded
-    versions behind a one-version grace window."""
+    It OVERWRITES ``path``; the engine's builders write each version
+    into a fresh directory instead (versions.py)."""
     import json
 
     spark = freq.sparkSession

@@ -120,11 +120,8 @@ def write_bigram_lm(
     filesystem (S3/HDFS included); the underscore prefixes hide the
     sidecars from the Parquet listing of ``path``.
 
-    This function OVERWRITES ``path`` in place — fine for a standalone
-    fit-once artifact, but a model another session may be lazily
-    reading must go through the engine's versioned-directory lifecycle
-    (engine.build_lm_index / update_lm_index), which always writes a
-    NEW version directory before the catalog pointer moves."""
+    It OVERWRITES ``path``; the engine's builders write each version
+    into a fresh directory instead (versions.py)."""
     import json
 
     spark = unigrams.sparkSession

@@ -250,12 +250,8 @@ def write_quantized_codes(
     out of the Parquet reader's file listing. Returns the reloaded codes
     frame.
 
-    This function OVERWRITES ``path`` in place — fine for a standalone
-    build-once artifact, but a code table another session may be lazily
-    reading must go through the engine lifecycle
-    (engine.build_quantized_codes / build_ivf_codes), which writes each
-    rebuild to a NEW version directory before the catalog pointer moves
-    and prunes superseded versions behind a one-version grace window."""
+    It OVERWRITES ``path``; the engine's builders write each version
+    into a fresh directory instead (versions.py)."""
     import json
 
     spark = df.sparkSession

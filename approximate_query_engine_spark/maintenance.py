@@ -167,6 +167,21 @@ def _rollup_tail_repair(
     return None, source_rows, null_rows, "layout has no date directories"
 
 
+def _rebuild_rollup(engine, table: str, info: dict, **kw) -> dict:
+    """Full rebuild of the cataloged rollup ``info`` with its own
+    parameters (``kw`` overrides create_rollup options); the theta key
+    encoding follows the key types unless ``kw`` sets it."""
+    from approximate_query_engine_spark.engine import _entry_spec
+
+    spec = _entry_spec(table, info)
+    opts = ("dims", "measures", "distinct_cols", "hll_lgk", "quantile_cols",
+            "kll_k", "topk_cols", "topk_budget", "theta_cols", "theta_lgk")
+    return engine.create_rollup(
+        table, spec.time_col, spec.bucket,
+        **{k: getattr(spec, k) for k in opts}, **kw,
+    )
+
+
 def _reprove_topk_evidence(engine, table, info, dry_run, defer=False):
     """Restore the EXACT certification tier for a FRESH rollup's top-k
     evidence (round 9): refresh maintains ``topk_exact_ndv`` as an exact
@@ -538,21 +553,7 @@ def run_maintenance(
                             _null_ts_rows=null_rows,
                         )
                     else:
-                        engine.create_rollup(
-                            table,
-                            info["time_col"],
-                            info["bucket"],
-                            dims=info.get("dims"),
-                            measures=info.get("measures"),
-                            distinct_cols=info.get("distinct_cols"),
-                            hll_lgk=int(info.get("hll_lgk", 12)),
-                            quantile_cols=info.get("quantile_cols"),
-                            kll_k=int(info.get("kll_k", 200)),
-                            topk_cols=info.get("topk_cols"),
-                            topk_budget=int(info.get("topk_budget", 1024)),
-                            theta_cols=info.get("theta_cols"),
-                            theta_lgk=int(info.get("theta_lgk", 12)),
-                        )
+                        _rebuild_rollup(engine, table, info)
                 except Exception as exc:
                     report.errors.append(
                         {"rollup": label, "error": str(exc)[:200]}
@@ -1073,8 +1074,10 @@ def run_maintenance(
     # advised-action budget as quantizer refits (a migration is a cost
     # trade, never correctness: certified routed answers are exact-regime
     # counts, identical under either encoding). v1 layouts keep serving
-    # until their migration is applied — there is no window where mixed
-    # encodings could union.
+    # until their migration is applied, and on every branch: the rebuild
+    # writes a new version directory (versions.py), so a migration that
+    # fails leaves the v1 layout and its catalog entry as they were —
+    # there is no window where mixed encodings could union.
     theta_migrations = 0
     for table in sorted(list(catalog.rollups.keys())):
         for info in list(catalog.rollups.get(table, [])):
@@ -1106,20 +1109,10 @@ def run_maintenance(
                 continue
             if apply_advice and theta_migrations < advice_max_apply:
                 try:
-                    engine.create_rollup(
+                    _rebuild_rollup(
+                        engine,
                         table,
-                        info["time_col"],
-                        info["bucket"],
-                        dims=list(info.get("dims", [])),
-                        measures=list(info.get("measures", [])),
-                        distinct_cols=list(info.get("distinct_cols", [])),
-                        hll_lgk=int(info.get("hll_lgk", 12)),
-                        quantile_cols=list(info.get("quantile_cols", [])),
-                        kll_k=int(info.get("kll_k", 200)),
-                        topk_cols=list(info.get("topk_cols", [])),
-                        topk_budget=int(info.get("topk_budget", 1024)),
-                        theta_cols=tcols,
-                        theta_lgk=int(info.get("theta_lgk", 12)),
+                        info,
                         theta_key_native=True,
                         # migration must NOT derive from a sibling
                         # rollup's v1-encoded state — the rebuild's
@@ -1156,6 +1149,13 @@ def run_maintenance(
         except Exception as exc:  # noqa: BLE001 - advice never fails sweep
             report.errors.append(
                 {"advisor": "apply_layouts", "error": str(exc)[:200]}
+            )
+    from approximate_query_engine_spark.versions import UNPRUNED
+
+    for root, failed in sorted(UNPRUNED.items()):
+        if root.startswith(catalog.workdir):
+            report.errors.append(
+                {"versions": root, "error": "; ".join(failed)[:200]}
             )
     try:
         # recomputed AFTER any apply so the report shows what is STILL

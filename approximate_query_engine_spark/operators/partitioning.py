@@ -57,6 +57,19 @@ def partition_by_time(
     return path
 
 
+def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Replace only the ``partition_col`` directories of the layout at
+    ``path`` that ``df`` holds (dynamic partition overwrite, swapped in at
+    job commit: a failed write leaves the old ones). A writer-level
+    option: no global conf juggling, no race with concurrent writers."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
+
+
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read a :func:`partition_by_time` layout (partition col inferred
     from the directory names by Spark's parquet source)."""
@@ -142,14 +155,7 @@ def refresh_partition_layout(
     fresh = source_df.withColumn(
         partition_col, F.date_format(F.col(ts_col), _GRAIN_FMT[grain])
     ).filter(F.col(partition_col) >= F.lit(str(since)))
-    # writer-level option: per-write dynamic overwrite, no global conf
-    # juggling (and no race with concurrent writers on the same session)
-    (
-        fresh.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+    overwrite_partitions(fresh, path, partition_col)
     # views registered over the layout cached the replaced buckets' file
     # listing — invalidate so their next read re-lists
     spark.catalog.refreshByPath(path)
@@ -222,13 +228,7 @@ def compact_partition_layout(
         .partitionBy(partition_col)
         .parquet(tmp)
     )
-    (
-        spark.read.parquet(tmp)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+    overwrite_partitions(spark.read.parquet(tmp), path, partition_col)
     fs.delete(hadoop_path(tmp), True)
     # registered views hold an InMemoryFileIndex snapshot of the OLD
     # files — invalidate it or their next read hits FILE_NOT_EXIST

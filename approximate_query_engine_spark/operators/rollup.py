@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from approximate_query_engine_spark.operators.partitioning import (
     list_bucket_dirs,
+    overwrite_partitions,
 )
 
 #: storage partition column of a materialized rollup (date of the bucket
@@ -116,25 +117,32 @@ def serve_layout(
     )
 
 
+def write_rollup_state(
+    spark: SparkSession, state: DataFrame, spec: RollupSpec, path: str
+) -> None:
+    """Write rollup ``state`` (from the source or derived) into the new
+    directory ``path``, partitioned by date: a tail refresh then replaces
+    only its dates and a date-range query prunes at file-listing time."""
+    state.write.partitionBy(_PDATE).parquet(path)
+    if not list_bucket_dirs(spark, path, _PDATE):
+        # an empty or all-NULL-time source writes no date directory,
+        # and a layout without files cannot be read back
+        raise ValueError(
+            f"{spec.source_table} has no rows with a non-NULL "
+            f"{spec.time_col}: there is no state to roll up"
+        )
+
+
 def materialize_rollup(
     spark: SparkSession, spec: RollupSpec, path: str | None = None
 ) -> DataFrame:
     """Build + register the rollup table. One shuffle on
-    (bucket, dims); partial-agg state per measure: count/sum/min/max."""
+    (bucket, dims); partial-agg state per measure: count/sum/min/max.
+    ``path``: a new directory to write the layout into and serve from."""
     src = spark.table(spec.source_table)
     rolled = _partial_state(src, spec)
     if path:
-        # date-partitioned layout: incremental refresh then replaces only
-        # the affected date directories (dynamic partition overwrite) and
-        # dashboard queries on a date range prune at file-listing time
-        rolled.write.mode("overwrite").partitionBy(_PDATE).parquet(path)
-        if not list_bucket_dirs(spark, path, _PDATE):
-            # an empty or all-NULL-time source writes no date directory,
-            # and a layout without files cannot be read back
-            raise ValueError(
-                f"{spec.source_table} has no rows with a non-NULL "
-                f"{spec.time_col}: there is no state to roll up"
-            )
+        write_rollup_state(spark, rolled, spec, path)
         # the registered view keeps the same schema as the unmaterialized
         # form; the partition column is a storage detail
         return serve_layout(spark, spec.rollup_name, path).df.drop(_PDATE)
@@ -207,6 +215,46 @@ def can_derive_rollup(fine: RollupSpec, coarse: RollupSpec) -> str | None:
     return None
 
 
+def merge_state_aggs(spec: RollupSpec) -> list[Column]:
+    """The aggregates that merge rows of ``spec``'s state into one:
+    counts/sums add, min/max combine, HLL/theta union, KLL merges, top-k
+    combines. ONE definition for the derived build and the streaming
+    merge, so both merge every state column the same way."""
+    aggs = [F.sum("n_rows").alias("n_rows")]
+    for m in spec.measures:
+        aggs += [
+            F.sum(f"{m}_count").alias(f"{m}_count"),
+            F.sum(f"{m}_sum").alias(f"{m}_sum"),
+            F.min(f"{m}_min").alias(f"{m}_min"),
+            F.max(f"{m}_max").alias(f"{m}_max"),
+        ]
+    for dc in spec.distinct_cols:
+        aggs.append(F.hll_union_agg(f"{dc}_hll").alias(f"{dc}_hll"))
+    for qc in spec.quantile_cols:
+        aggs.append(
+            F.expr(
+                f"kll_merge_agg_double(`{qc}_kll`, {int(spec.kll_k)})"
+            ).alias(f"{qc}_kll")
+        )
+    for tc in spec.topk_cols:
+        aggs.append(
+            F.expr(
+                f"approx_top_k_combine(`{tc}_topk`, "
+                f"{int(spec.topk_budget)})"
+            ).alias(f"{tc}_topk")
+        )
+    for sc in spec.theta_cols:
+        # union at the spec's nominal (the state was built at the same
+        # lg_k) — the function default would downsample any state built
+        # above lg_k 12
+        aggs.append(
+            F.expr(
+                f"theta_union_agg(`{sc}_theta`, {int(spec.theta_lgk)})"
+            ).alias(f"{sc}_theta")
+        )
+    return aggs
+
+
 def derive_rollup_state(
     spark: SparkSession,
     fine: RollupSpec,
@@ -225,38 +273,6 @@ def derive_rollup_state(
         raise ValueError(f"cannot derive {coarse.rollup_name}: {reason}")
     if src is None:
         src = spark.table(fine.rollup_name)
-    aggs = [F.sum("n_rows").alias("n_rows")]
-    for m in coarse.measures:
-        aggs += [
-            F.sum(f"{m}_count").alias(f"{m}_count"),
-            F.sum(f"{m}_sum").alias(f"{m}_sum"),
-            F.min(f"{m}_min").alias(f"{m}_min"),
-            F.max(f"{m}_max").alias(f"{m}_max"),
-        ]
-    for dc in coarse.distinct_cols:
-        aggs.append(F.hll_union_agg(f"{dc}_hll").alias(f"{dc}_hll"))
-    for qc in coarse.quantile_cols:
-        aggs.append(
-            F.expr(
-                f"kll_merge_agg_double(`{qc}_kll`, {int(coarse.kll_k)})"
-            ).alias(f"{qc}_kll")
-        )
-    for tc in coarse.topk_cols:
-        aggs.append(
-            F.expr(
-                f"approx_top_k_combine(`{tc}_topk`, "
-                f"{int(coarse.topk_budget)})"
-            ).alias(f"{tc}_topk")
-        )
-    for sc in coarse.theta_cols:
-        # union at the spec's nominal (can_derive_rollup proved the fine
-        # state was built at the same lg_k) — the function default would
-        # downsample any state built above lg_k 12
-        aggs.append(
-            F.expr(
-                f"theta_union_agg(`{sc}_theta`, {int(coarse.theta_lgk)})"
-            ).alias(f"{sc}_theta")
-        )
     out = (
         src.groupBy(
             F.window(F.col("bucket_start"), coarse.bucket)["start"].alias(
@@ -264,7 +280,7 @@ def derive_rollup_state(
             ),
             *coarse.dims,
         )
-        .agg(*aggs)
+        .agg(*merge_state_aggs(coarse))
         .select(
             "bucket_start",
             *coarse.dims,
@@ -2106,39 +2122,10 @@ def merge_rollup_batch(
         existing = spark.read.parquet(path).filter(
             F.col(_PDATE).isin(affected)
         )
-        merge_aggs = [F.sum("n_rows").alias("n_rows")]
-        for m in spec.measures:
-            merge_aggs += [
-                F.sum(f"{m}_count").alias(f"{m}_count"),
-                F.sum(f"{m}_sum").alias(f"{m}_sum"),
-                F.min(f"{m}_min").alias(f"{m}_min"),
-                F.max(f"{m}_max").alias(f"{m}_max"),
-            ]
-        for dc in spec.distinct_cols:
-            merge_aggs.append(F.hll_union_agg(f"{dc}_hll").alias(f"{dc}_hll"))
-        for qc in spec.quantile_cols:
-            merge_aggs.append(
-                F.expr(
-                    f"kll_merge_agg_double(`{qc}_kll`, {int(spec.kll_k)})"
-                ).alias(f"{qc}_kll")
-            )
-        for tc in spec.topk_cols:
-            merge_aggs.append(
-                F.expr(
-                    f"approx_top_k_combine(`{tc}_topk`, "
-                    f"{int(spec.topk_budget)})"
-                ).alias(f"{tc}_topk")
-            )
-        for sc in spec.theta_cols:
-            merge_aggs.append(
-                F.expr(
-                    f"theta_union_agg(`{sc}_theta`, {int(spec.theta_lgk)})"
-                ).alias(f"{sc}_theta")
-            )
         merged = (
             existing.unionByName(rolled)
             .groupBy("bucket_start", *spec.dims, _PDATE)
-            .agg(*merge_aggs)
+            .agg(*merge_state_aggs(spec))
         )
     # a swapped date dir REPLACES the old one, so its marker must carry
     # the old high-water mark forward even for untracked (batch_id=None)
@@ -2212,17 +2199,7 @@ def refresh_rollup_buckets(
     # history — a refreshed directory can never drop a sketch column
     # (the round-7 mixed-schema bug) or hash a different key space
     fresh = _partial_state(src, spec)
-    old_markers = _snapshot_markers(path)
-    # writer-level option: per-write dynamic overwrite, no global conf
-    # juggling (and no race with concurrent writers on the same session)
-    (
-        fresh.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(_PDATE)
-        .parquet(path)
-    )
-    _restore_markers(path, old_markers)
-    return serve_layout(spark, spec.rollup_name, path, since=since_date).df
+    return _replace_dates(spark, fresh, spec.rollup_name, path, since_date)
 
 
 def refresh_rollup_buckets_from_state(
@@ -2247,15 +2224,19 @@ def refresh_rollup_buckets_from_state(
         bucket_date_col("bucket_start", coarse.bucket) >= F.lit(since_date)
     )
     fresh = derive_rollup_state(spark, fine, coarse, src=src)
+    return _replace_dates(spark, fresh, coarse.rollup_name, path, since_date)
+
+
+def _replace_dates(
+    spark: SparkSession, fresh: DataFrame, view: str, path: str, since: str
+) -> DataFrame:
+    """Swap ``fresh``'s date directories into the layout at ``path`` (the
+    rest stay), carry the streaming replay markers over and serve the
+    result (see :func:`refresh_rollup_buckets`)."""
     old_markers = _snapshot_markers(path)
-    (
-        fresh.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(_PDATE)
-        .parquet(path)
-    )
+    overwrite_partitions(fresh, path, _PDATE)
     _restore_markers(path, old_markers)
-    return serve_layout(spark, coarse.rollup_name, path, since=since_date).df
+    return serve_layout(spark, view, path, since=since).df
 
 
 def _snapshot_markers(path: str) -> dict[str, int]:

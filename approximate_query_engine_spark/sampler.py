@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from approximate_query_engine_spark.catalog import Catalog, SampleInfo, StratumInfo
 from approximate_query_engine_spark.served import served_state
+from approximate_query_engine_spark.versions import write_version
 
 
 def _strata_key(df: DataFrame, strata_col: str):
@@ -79,8 +80,12 @@ class Sampler:
 
     # ------------------------------------------------------------------
     def _materialize(self, sampled: DataFrame, table: str, sample_table: str,
-                     path: str) -> tuple[DataFrame, int]:
-        """Write a sample as parquet + register its temp view.
+                     describe) -> SampleInfo:
+        """Write a sample as the next version directory of its root
+        (versions.py), serve its temp view, then register and save its
+        :class:`SampleInfo`, whose remaining fields ``describe(out, rows)``
+        returns for the served frame and its row count. The previous
+        version keeps serving until all of that succeeded.
 
         When the base table has a registered time-partitioned layout, the
         sample is materialized PARTITIONED BY the same time bucket and
@@ -96,31 +101,47 @@ class Sampler:
         )
 
         layout = self.catalog.partitioned_views.get(table)
-        if layout:
-            partition_by_time(
-                sampled,
-                path,
-                layout["ts_col"],
-                grain=layout["grain"],
-                partition_col=layout["partition_col"],
+
+        def write(path):
+            if layout:
+                partition_by_time(
+                    sampled,
+                    path,
+                    layout["ts_col"],
+                    grain=layout["grain"],
+                    partition_col=layout["partition_col"],
+                )
+            else:
+                sampled.write.parquet(path)
+
+        def publish(path, _version):
+            served = served_state(self.spark).serve(path, {sample_table: ()})
+            out = served.df
+            # an in-memory copy was counted by its build job
+            rows = served.rows if served.in_memory else out.count()
+            info = SampleInfo(
+                table_name=table,
+                sample_table=sample_table,
+                path=path,
+                row_count=rows,
+                **describe(out, rows),
             )
-        else:
-            sampled.write.mode("overwrite").parquet(path)
-        served = served_state(self.spark).serve(path, {sample_table: ()})
-        out = served.df
-        # an in-memory copy was counted by its build job
-        rows = served.rows if served.in_memory else out.count()
-        if layout:
-            self.catalog.partitioned_views[sample_table] = {
-                "view": sample_table,
-                "path": path,
-                "ts_col": layout["ts_col"],
-                "grain": layout["grain"],
-                "partition_col": layout["partition_col"],
-                "built_row_count": rows,
-            }
-            self.catalog.upsert_table_stats(sample_table, rows)
-        return out, rows
+            if layout:
+                self.catalog.partitioned_views[sample_table] = {
+                    "view": sample_table,
+                    "path": path,
+                    "ts_col": layout["ts_col"],
+                    "grain": layout["grain"],
+                    "partition_col": layout["partition_col"],
+                    "built_row_count": rows,
+                }
+                self.catalog.upsert_table_stats(sample_table, rows)
+            self.catalog.register_sample(info)
+            self.catalog.save()
+            return info
+
+        root = os.path.join(self.samples_dir, sample_table)
+        return write_version(self.spark, root, write, publish)
 
     # ------------------------------------------------------------------
     def create_uniform_sample(
@@ -135,28 +156,20 @@ class Sampler:
             raise ValueError("sample_fraction must be in (0, 1)")
         df = self.spark.table(table)
         sample_table = f"{table}__sample_{_fraction_tag(fraction)}"
-        path = os.path.join(self.samples_dir, sample_table)
         sampled = df.sample(withReplacement=False, fraction=fraction, seed=seed)
-        out, rows = self._materialize(sampled, table, sample_table, path)
 
-        base_rows = self.catalog.get_row_count(table)
-        if base_rows is None:
-            base_rows = df.count()
-            self.catalog.upsert_table_stats(table, base_rows)
-        achieved = rows / base_rows if base_rows else fraction
+        def describe(out, rows):
+            base_rows = self.catalog.get_row_count(table)
+            if base_rows is None:
+                base_rows = df.count()
+                self.catalog.upsert_table_stats(table, base_rows)
+            return dict(
+                sample_fraction=rows / base_rows if base_rows else fraction,
+                target_fraction=fraction,
+                seed=seed,
+            )
 
-        info = SampleInfo(
-            table_name=table,
-            sample_table=sample_table,
-            sample_fraction=achieved,
-            target_fraction=fraction,
-            path=path,
-            row_count=rows,
-            seed=seed,
-        )
-        self.catalog.register_sample(info)
-        self.catalog.save()
-        return info
+        return self._materialize(sampled, table, sample_table, describe)
 
     # ------------------------------------------------------------------
     def create_systematic_sample(
@@ -179,34 +192,27 @@ class Sampler:
             raise ValueError(f"systematic sample k={k} must be >= 2")
         df = self.spark.table(table)
         sample_table = f"{table}__sys_{k}"
-        path = os.path.join(self.samples_dir, sample_table)
         pred = (
             f"CONV(SUBSTRING(md5(CAST(({key_expr}) AS STRING)), 1, 8), 16, 10)"
             f" % {k} = 0"
         )
         sampled = df.where(pred)
-        out, rows = self._materialize(sampled, table, sample_table, path)
-        base_rows = self.catalog.get_row_count(table)
-        if base_rows is None:
-            base_rows = df.count()
-            self.catalog.upsert_table_stats(table, base_rows)
-        info = SampleInfo(
-            table_name=table,
-            sample_table=sample_table,
-            # design fraction, exactly: the deterministic estimator is
-            # scale-by-k (the hash decides membership, not a draw whose
-            # achieved rate needs correcting)
-            sample_fraction=1.0 / k,
-            target_fraction=1.0 / k,
-            path=path,
-            allocation_type="systematic",
-            pps_key_expr=key_expr,
-            row_count=rows,
-            seed=0,
-        )
-        self.catalog.register_sample(info)
-        self.catalog.save()
-        return info
+
+        def describe(out, rows):
+            if self.catalog.get_row_count(table) is None:
+                self.catalog.upsert_table_stats(table, df.count())
+            return dict(
+                # design fraction, exactly: the deterministic estimator is
+                # scale-by-k (the hash decides membership, not a draw whose
+                # achieved rate needs correcting)
+                sample_fraction=1.0 / k,
+                target_fraction=1.0 / k,
+                allocation_type="systematic",
+                pps_key_expr=key_expr,
+                seed=0,
+            )
+
+        return self._materialize(sampled, table, sample_table, describe)
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -341,55 +347,49 @@ class Sampler:
             else f"mc{len(source_cols)}_" + "_".join(source_cols)
         )
         sample_table = f"{table}__strat_sample_{name_tag}_{_fraction_tag(total_fraction)}"
-        path = os.path.join(self.samples_dir, sample_table)
-        out, _ = self._materialize(sampled, table, sample_table, path)
 
-        # Post-hoc achieved-fraction correction (reference sampler.py:249-266):
-        # recompute per-stratum achieved sizes in one pass and record the
-        # ACHIEVED fractions — estimator unbiasedness depends on them.
-        achieved_rows = {
-            r["strata_value"]: r["n"]
-            for r in out.groupBy(_strata_key(out, strata_col).alias("strata_value"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        total_pop = sum(s["pop_size"] for s in strata)
-        strata_infos = []
-        total_sampled = 0
-        for s in strata:
-            n_h = int(achieved_rows.get(s["strata_value"], 0))
-            total_sampled += n_h
-            pop = int(s["pop_size"])
-            strata_infos.append(
-                StratumInfo(
-                    is_null=s["strata_value"] is None,
-                    strata_value=stringify_stratum(s["strata_value"]),
-                    pop_size=pop,
-                    sample_size=n_h,
-                    fraction=(n_h / pop) if pop else 0.0,
-                    weight=(pop / total_pop) if total_pop else 0.0,
-                    variance=s.get("variance"),
+        def describe(out, _rows):
+            # Post-hoc achieved-fraction correction (reference sampler.py:249-266):
+            # recompute per-stratum achieved sizes in one pass and record the
+            # ACHIEVED fractions — estimator unbiasedness depends on them.
+            achieved_rows = {
+                r["strata_value"]: r["n"]
+                for r in out.groupBy(_strata_key(out, strata_col).alias("strata_value"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            total_pop = sum(s["pop_size"] for s in strata)
+            strata_infos = []
+            total_sampled = 0
+            for s in strata:
+                n_h = int(achieved_rows.get(s["strata_value"], 0))
+                total_sampled += n_h
+                pop = int(s["pop_size"])
+                strata_infos.append(
+                    StratumInfo(
+                        is_null=s["strata_value"] is None,
+                        strata_value=stringify_stratum(s["strata_value"]),
+                        pop_size=pop,
+                        sample_size=n_h,
+                        fraction=(n_h / pop) if pop else 0.0,
+                        weight=(pop / total_pop) if total_pop else 0.0,
+                        variance=s.get("variance"),
+                    )
                 )
+
+            self.catalog.upsert_table_stats(table, total_pop)
+            return dict(
+                sample_fraction=(total_sampled / total_pop) if total_pop else 0.0,
+                target_fraction=total_fraction,
+                strata_column=strata_col,
+                allocation_type=allocation,
+                variance_column=variance_col,
+                strata_source_cols=source_cols,
+                seed=seed,
+                strata=strata_infos,
             )
 
-        self.catalog.upsert_table_stats(table, total_pop)
-        info = SampleInfo(
-            table_name=table,
-            sample_table=sample_table,
-            sample_fraction=(total_sampled / total_pop) if total_pop else 0.0,
-            target_fraction=total_fraction,
-            path=path,
-            strata_column=strata_col,
-            allocation_type=allocation,
-            variance_column=variance_col,
-            strata_source_cols=source_cols,
-            row_count=total_sampled,
-            seed=seed,
-            strata=strata_infos,
-        )
-        self.catalog.register_sample(info)
-        self.catalog.save()
-        return info
+        return self._materialize(sampled, table, sample_table, describe)
 
     # ------------------------------------------------------------------
     def create_weighted_sample(
@@ -460,24 +460,19 @@ class Sampler:
         else:
             u = F.rand(seed)
         sampled = df.withColumn("__p", p).filter(u < F.col("__p"))
-        path = os.path.join(self.samples_dir, sample_table)
-        out, rows = self._materialize(sampled, table, sample_table, path)
-        self.catalog.upsert_table_stats(table, n)
-        info = SampleInfo(
-            table_name=table,
-            sample_table=sample_table,
-            sample_fraction=rows / n if n else fraction,
-            target_fraction=fraction,
-            path=path,
-            row_count=rows,
-            seed=seed,
-            allocation_type="weighted",
-            variance_column=measure_col,
-            pps_key_expr=key_expr,
-        )
-        self.catalog.register_sample(info)
-        self.catalog.save()
-        return info
+
+        def describe(out, rows):
+            self.catalog.upsert_table_stats(table, n)
+            return dict(
+                sample_fraction=rows / n if n else fraction,
+                target_fraction=fraction,
+                seed=seed,
+                allocation_type="weighted",
+                variance_column=measure_col,
+                pps_key_expr=key_expr,
+            )
+
+        return self._materialize(sampled, table, sample_table, describe)
 
     # ------------------------------------------------------------------
     def refresh_sample(self, sample_table: str) -> SampleInfo:

@@ -11,13 +11,14 @@ shuffling partial aggregates. Larger state keeps the pruned file scan.
 
 The copy is NOT tied to the artifact's path: ``cache()`` would be
 invalidated by every write to the path (``refreshByPath``), while a local
-checkpoint holds its own blocks, so an overwrite of the files under a
-served view never breaks a running query. Each serve is a new VERSION of
-the artifact: the new copy is built first, then the views swap to it,
-then the copy from two versions back is released — at most two copies
-per artifact are resident, so a query already running on the previous
-copy still finishes. Copies whose blocks are lost are rebuilt from the
-files (:meth:`ServedState.recover`).
+checkpoint holds its own blocks, so a write or a prune (versions.py) of
+the files under a served view never breaks a running query. Artifacts
+are keyed by ROOT, not by ``<root>/v<n>``, and each serve — tail refresh
+or full rebuild — is a new VERSION: the new copy is built first, then
+the views swap to it, then the copy from two versions back is released
+— at most two copies per artifact are resident, so a query already
+running on the previous copy still finishes. Copies whose blocks are
+lost are rebuilt from the files (:meth:`ServedState.recover`).
 
 The registry is per SparkSession (temp views are session-scoped), so
 several engines over one session share it and a view re-pointed at a
@@ -33,6 +34,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from approximate_query_engine_spark.versions import split_version
 
 #: resident copies kept per artifact: the current one and the previous
 #: one, which queries planned before the last swap may still be reading
@@ -63,6 +66,7 @@ class Served:
 
 @dataclass
 class _Artifact:
+    #: the version directory (``<root>/v<n>``) the current version read
     path: str
     #: view name -> columns the view drops (e.g. the storage p_date)
     views: dict[str, tuple[str, ...]] = field(default_factory=dict)
@@ -75,15 +79,25 @@ class ServedState:
         self.spark = spark
         self._lock = threading.RLock()
         self._artifacts: dict[str, _Artifact] = {}
-        #: view name -> artifact path it currently serves
+        #: view name -> root of the artifact it currently serves
         self._views: dict[str, str] = {}
 
     # -- queries on the registry (no Spark RPC) ----------------------------
     def has(self, view: str, path: str) -> bool:
         """Whether ``view`` is registered through this helper over the
-        artifact at ``path`` — answers what a per-query
-        ``spark.catalog.tableExists`` call used to."""
-        return self._views.get(view) == path
+        artifact at ``path``, from that version or a newer one (a query
+        holding the catalog entry from before a rebuild answers from the
+        rebuilt state) — no per-query ``spark.catalog.tableExists``."""
+        root, version = split_version(path)
+        art = self._artifacts.get(self._views.get(view, ""))
+        served_root, served = split_version(art.path) if art else ("", -1)
+        return served_root == root and served >= version
+
+    def in_memory(self, path: str) -> bool:
+        """Whether the version directory ``path`` is served from an
+        in-memory copy, i.e. no view reads its artifact's files."""
+        art = self._artifacts.get(split_version(path)[0])
+        return bool(art and art.path == path and art.versions[-1].in_memory)
 
     def current(self, view: str) -> Served | None:
         art = self._artifacts.get(self._views.get(view, ""))
@@ -99,7 +113,7 @@ class ServedState:
         return f"; served from {kind} v{cur.version} of {view}"
 
     def resident_copies(self, path: str) -> int:
-        art = self._artifacts.get(path)
+        art = self._artifacts.get(split_version(path)[0])
         return sum(1 for s in art.versions if s.in_memory) if art else 0
 
     # -- serving -----------------------------------------------------------
@@ -122,9 +136,14 @@ class ServedState:
         only those directories, read with the known schema. Above the
         line the views get the file scan."""
         with self._lock:
-            art = self._artifacts.get(path)
+            art = self._artifacts.get(split_version(path)[0])
             prev = art.versions[-1] if art and art.versions else None
-            tail = since is not None and prev is not None and prev.in_memory
+            tail = (
+                since is not None
+                and prev is not None
+                and prev.in_memory
+                and art.path == path
+            )
             reader = self.spark.read
             if tail:  # same spec, same schema: no footer inference
                 reader = reader.schema(prev.df.schema)
@@ -171,10 +190,11 @@ class ServedState:
                         return True  # an older copy: the views moved on
                 return False
             m = _MISSING_VIEW.search(msg)
-            path = self._views.get(m.group(1).split(".")[-1]) if m else None
-            if path is None:
+            root = self._views.get(m.group(1).split(".")[-1]) if m else None
+            if root is None:
                 return False
-            self.serve(path, dict(self._artifacts[path].views))
+            art = self._artifacts[root]
+            self.serve(art.path, dict(art.views))
             return True
 
     # -- internals ---------------------------------------------------------
@@ -188,14 +208,16 @@ class ServedState:
         return threshold >= 0 and size <= threshold
 
     def _swap(self, path: str, views: dict, served: Served) -> None:
-        art = self._artifacts.setdefault(path, _Artifact(path))
+        root = split_version(path)[0]
+        art = self._artifacts.setdefault(root, _Artifact(path))
+        art.path = path
         served.version = art.next_version
         art.next_version += 1
         for name, drop in views.items():
             served.df.drop(*drop).createOrReplaceTempView(name)
-            if self._views.get(name) != path:
+            if self._views.get(name) != root:
                 self._unmap(name)
-            self._views[name] = path
+            self._views[name] = root
             art.views[name] = tuple(drop)
         art.versions.append(served)
         while len(art.versions) > _RESIDENT:
@@ -203,16 +225,16 @@ class ServedState:
 
     def _unmap(self, view: str) -> str | None:
         """Forget ``view``; release its artifact once no view serves it.
-        Returns the artifact path the view served, if any."""
-        path = self._views.pop(view, None)
-        art = self._artifacts.get(path) if path else None
+        Returns the root of the artifact the view served, if any."""
+        root = self._views.pop(view, None)
+        art = self._artifacts.get(root) if root else None
         if art is not None:
             art.views.pop(view, None)
             if not art.views:
-                del self._artifacts[path]
+                del self._artifacts[root]
                 for s in art.versions:
                     _unpersist(s)
-        return path
+        return root
 
 
 def _unpersist(served: Served) -> None:

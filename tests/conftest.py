@@ -35,6 +35,35 @@ def above_size_line(spark):
     return _above
 
 
+@pytest.fixture
+def failing_writes(spark):
+    """Context manager: every DataFrame write started inside it fails in
+    its Spark job. The written frame is filtered through a Python UDF
+    that raises on the first row each task sees, so the write stage
+    itself fails after Spark has set up the output, as a crash mid-write
+    would. Writes behave normally again on exit."""
+    from pyspark.sql import functions as F
+
+    cls = type(spark.range(1))
+    write = cls.write
+
+    @F.udf("boolean")
+    def _fail(_):
+        raise RuntimeError("injected write failure")
+
+    @contextmanager
+    def _armed():
+        cls.write = property(
+            lambda df: write.fget(df.filter(_fail(F.spark_partition_id())))
+        )
+        try:
+            yield
+        finally:
+            cls.write = write
+
+    return _armed
+
+
 @pytest.fixture(scope="session")
 def engine(spark):
     """Engine over sf0.001 with a fresh workdir for the whole test session."""

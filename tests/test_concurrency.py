@@ -35,8 +35,10 @@ def test_concurrent_rollup_routed_queries(spark):
     """Routed rollup reads are thread-safe: 8 threads × mixed routed
     shapes (plain, hybrid, sketch-state) against one shared engine all
     return the same answers as a single-threaded pass — also while a
-    ninth thread keeps refreshing the rollup, so queries run across
-    swaps of its served in-memory copy (served.py)."""
+    ninth thread alternates tail refreshes with full rebuilds of the
+    rollup, so queries run across swaps of its served in-memory copy
+    (served.py) and of its version directory (versions.py)."""
+    import os
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
@@ -47,15 +49,18 @@ def test_concurrent_rollup_routed_queries(spark):
         workdir=tempfile.mkdtemp(prefix="aqe_conc_rollup_"),
         data_dir="/root/testdata/sf0.001",
     )
-    e.create_rollup(
-        "events",
-        "ts",
-        "1 hour",
-        dims=["event_type"],
-        measures=["value"],
-        quantile_cols=["value"],
-        kll_k=800,
-    )
+    def build():
+        return e.create_rollup(
+            "events",
+            "ts",
+            "1 hour",
+            dims=["event_type"],
+            measures=["value"],
+            quantile_cols=["value"],
+            kll_k=800,
+        )
+
+    build()
     sqls = [
         "SELECT event_type, COUNT(*) AS n FROM events "
         "WHERE ts >= TIMESTAMP '2024-01-02 00:00:00' "
@@ -85,8 +90,10 @@ def test_concurrent_rollup_routed_queries(spark):
     v0 = e.served.current(info["files_view"]).version
 
     def refresh(_):
-        for _ in range(4):
-            e.refresh_rollup("events")  # same data: a new copy version
+        for i in range(4):
+            # same data: each is a new copy version; a full rebuild also
+            # writes the next version directory and prunes the last one
+            e.refresh_rollup("events") if i % 2 == 0 else build()
         return None
 
     with ThreadPoolExecutor(max_workers=9) as pool:
@@ -96,3 +103,6 @@ def test_concurrent_rollup_routed_queries(spark):
         swaps.result()
     assert e.served.current(info["files_view"]).version == v0 + 4
     assert e.served.resident_copies(info["path"]) <= 2
+    path = e.catalog.rollups["events"][0]["path"]
+    assert path.endswith("/v3")
+    assert os.listdir(os.path.dirname(path)) == ["v3"]

@@ -259,7 +259,8 @@ def test_theta_migration_serves_rebuilt_copy(spark):
     e = AQEngine(spark, workdir=tempfile.mkdtemp(prefix="aqe_served_th_"),
                  data_dir=SF)
     e.create_rollup("events", "ts", "1 hour", dims=["event_type"],
-                    measures=["value"], theta_cols=["user_id"])
+                    measures=["value"], theta_cols=["user_id"],
+                    theta_key_native=False)
     info = e.catalog.rollups["events"][0]
     v1 = e.served.current(info["files_view"]).version
     rep = e.maintain(refresh_stats=False, apply_advice=True)

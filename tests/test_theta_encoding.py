@@ -93,7 +93,7 @@ def test_maintenance_migrates_v1_layout_under_budget(spark, engine):
     )
     eng.create_rollup(
         "events", "ts", "1 hour",
-        dims=["event_type"], theta_cols=["user_id"],
+        dims=["event_type"], theta_cols=["user_id"], theta_key_native=False,
     )
     assert not eng.catalog.rollups["events"][0].get("theta_key_native")
     before = _rows(eng.segment_overlap("events", "event_type", "user_id")["df"])
@@ -138,7 +138,7 @@ def test_string_keyed_v1_layout_gets_no_migration_advice(spark, engine):
     )
     eng.create_rollup(
         "events_str_uid", "ts", "1 hour",
-        dims=["event_type"], theta_cols=["uid"],
+        dims=["event_type"], theta_cols=["uid"], theta_key_native=False,
     )
     assert not eng.catalog.rollups["events_str_uid"][0].get("theta_key_native")
     for kw in ({"dry_run": True}, {"apply_advice": True}):
