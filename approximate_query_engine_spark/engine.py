@@ -110,30 +110,6 @@ def _overlap_advice_bucket(*bounds: str | None) -> str | None:
     return None
 
 
-def _entry_spec(table: str, info: dict):
-    """The RollupSpec a catalog rollup entry describes. Its theta key
-    encoding is the recorded one: state rebuilt from raw rows must hash
-    the same key space as the layout's untouched history."""
-    from approximate_query_engine_spark.operators.rollup import RollupSpec
-
-    return RollupSpec(
-        table,
-        info["time_col"],
-        info["bucket"],
-        list(info.get("dims", [])),
-        list(info.get("measures", [])),
-        list(info.get("distinct_cols", [])),
-        int(info.get("hll_lgk", 12)),
-        list(info.get("quantile_cols", [])),
-        int(info.get("kll_k", 200)),
-        list(info.get("topk_cols", [])),
-        int(info.get("topk_budget", 1024)),
-        list(info.get("theta_cols", [])),
-        int(info.get("theta_lgk", 12)),
-        theta_key_native=bool(info.get("theta_key_native")),
-    )
-
-
 class AQEngine:
     def __init__(
         self,
@@ -1803,6 +1779,7 @@ class AQEngine:
             RollupSpec,
             bucket_seconds,
             derive_rollup_state,
+            entry_spec,
             is_week_bucket,
             serve_layout,
             write_rollup_state,
@@ -1864,7 +1841,7 @@ class AQEngine:
         fine_entry = (
             self._derivable_fine(table, spec, base_rows) if derive else None
         )
-        fine = _entry_spec(table, fine_entry) if fine_entry else None
+        fine = entry_spec(table, fine_entry) if fine_entry else None
         derived_from = fine_entry["view"] if fine_entry else None
 
         def write(path):
@@ -2027,6 +2004,7 @@ class AQEngine:
         into the derived state."""
         from approximate_query_engine_spark.operators.rollup import (
             can_derive_rollup,
+            entry_spec,
         )
 
         for e in self.catalog.rollups.get(table, []):
@@ -2036,7 +2014,7 @@ class AQEngine:
                 continue
             if e.get("time_col") != spec.time_col:
                 continue
-            if can_derive_rollup(_entry_spec(table, e), spec) is not None:
+            if can_derive_rollup(entry_spec(table, e), spec) is not None:
                 continue
             try:
                 self._serve_rollup(e)
@@ -2077,6 +2055,7 @@ class AQEngine:
             list_bucket_dirs,
         )
         from approximate_query_engine_spark.operators.rollup import (
+            entry_spec,
             refresh_rollup_buckets,
         )
 
@@ -2089,7 +2068,7 @@ class AQEngine:
                 + (f" with view {view!r}" if view else "")
             )
         info = entries[0]
-        spec = _entry_spec(table, info)
+        spec = entry_spec(table, info)
         if since is None:
             dates = list_bucket_dirs(
                 self.spark, info["path"], partition_col="p_date"
@@ -2116,7 +2095,7 @@ class AQEngine:
                 refresh_rollup_buckets_from_state,
             )
 
-            fine = _entry_spec(table, fine_entry)
+            fine = entry_spec(table, fine_entry)
             refresh_rollup_buckets_from_state(
                 self.spark, fine, spec, info["path"], since
             )
@@ -4018,9 +3997,9 @@ class AQEngine:
         is the one approximate derivation: it is offered only when the
         caller's tolerance covers ~2 standard errors of the HLL estimate
         and exactness wasn't requested."""
-        import math
-
         from approximate_query_engine_spark.operators.rollup import (
+            family_error,
+            kll_rank_error,
             rewrite_join_to_rollup,
             rewrite_to_rollup,
             rewrite_to_rollup_hybrid,
@@ -4029,21 +4008,20 @@ class AQEngine:
 
         if not self.catalog.rollups or parsed is None:
             return None
-        jq = None
+        joined = isinstance(parsed, JoinedQuery)
         table_columns: dict[str, frozenset[str]] = {}
-        if not isinstance(parsed, JoinedQuery):
+        if not joined:
             target = parsed.table
         else:
             # star-join shape: exactly ONE joined table may own a rollup
             # (two would make the rewrite ambiguous — decline)
-            jq, parsed = parsed, None  # the phases below key on parsed
-            for t, _a in jq.tables:
+            for t, _a in parsed.tables:
                 try:
                     table_columns[t] = self._table_columns(t)
                 except Exception:
                     return None
             with_rollups = [
-                t for t, _a in jq.tables if self.catalog.rollups.get(t)
+                t for t, _a in parsed.tables if self.catalog.rollups.get(t)
             ]
             if len(with_rollups) != 1:
                 return None
@@ -4061,15 +4039,12 @@ class AQEngine:
             # conservative when the two are configured at different lgk
             if prefer_exact:
                 return False
-            gates = []
-            if info.get("distinct_cols"):
-                gates.append(
-                    1.04 / math.sqrt(2 ** int(info.get("hll_lgk", 12)))
-                )
-            if info.get("theta_cols"):
-                gates.append(
-                    1.0 / math.sqrt(2 ** int(info.get("theta_lgk", 12)))
-                )
+            gates = [
+                family_error(info, fam)
+                for fam, cols in (("HLL", "distinct_cols"),
+                                  ("theta", "theta_cols"))
+                if info.get(cols)
+            ]
             return bool(gates) and all(
                 max_rel_error >= 2 * e for e in gates
             )
@@ -4082,10 +4057,6 @@ class AQEngine:
             # error. The caller's explicit max_rank_error wins; absent
             # one, the value tolerance doubles as the rank budget
             # (conservative in the declining direction — see query()).
-            from approximate_query_engine_spark.operators.rollup import (
-                kll_rank_error,
-            )
-
             budget = (
                 max_rank_error if max_rank_error is not None
                 else max_rel_error
@@ -4117,8 +4088,6 @@ class AQEngine:
             is cached per (view, build, budget, col) — state only
             changes on rebuild, so routing pays the agg once, not per
             query; register_view clears the cache."""
-            import math
-
             budget = int(info.get("topk_budget", 1024))
             # analyze freshness: catalog column stats describe the table
             # AS OF their analyze pass — post-append they can be stale
@@ -4153,21 +4122,18 @@ class AQEngine:
             cached = self._topk_cert_cache.get(cache_key)
             if cached is not None:
                 return cached or None
-            sk = None
             if col in info.get("distinct_cols", []):
-                lgk = int(info.get("hll_lgk", 12))
                 sk, err = (
                     f"hll_sketch_estimate(hll_union_agg({col}_hll))",
-                    1.04 / math.sqrt(2**lgk),
+                    family_error(info, "HLL"),
                 )
             elif col in info.get("theta_cols", []):
-                lgk = int(info.get("theta_lgk", 12))
                 sk, err = (
-                    f"theta_sketch_estimate("
-                    f"theta_union_agg({col}_theta, {lgk}))",
-                    1.0 / math.sqrt(2**lgk),
+                    f"theta_sketch_estimate(theta_union_agg({col}_theta, "
+                    f"{int(info.get('theta_lgk', 12))}))",
+                    family_error(info, "theta"),
                 )
-            if sk is None:
+            else:
                 return None
             try:
                 src = info.get("files_view") or info["view"]
@@ -4188,7 +4154,15 @@ class AQEngine:
         # phase 1: pure state answers (any candidate's plain rewrite
         # beats any hybrid — no raw rows read at all)
         for info in usable:
-            if parsed is not None:
+            if joined:
+                routed = rewrite_join_to_rollup(
+                    parsed,
+                    info,
+                    table_columns,
+                    allow_approx_distinct=_allow_distinct(info),
+                    declines=declines,
+                )
+            else:
                 routed = rewrite_to_rollup(
                     parsed,
                     info,
@@ -4196,44 +4170,33 @@ class AQEngine:
                     allow_approx_quantile=_allow_quantile(info),
                     declines=declines,
                 )
-                if (
-                    routed is None
-                    and not prefer_exact
-                    and parsed.limit
-                    and info.get("topk_cols")
-                ):
-                    # the canonical top-items dashboard shape: the group
-                    # key is a tracked topk column (too high-cardinality
-                    # to be a dim), served from combined sketch state —
-                    # only in the CERTIFIED exact regime (no Misra–Gries
-                    # purge in any partial). Beyond the budget the MG
-                    # bound 3.5·n/budget has no bound relative to the
-                    # k-th item's count, so no tolerance can admit it.
-                    tk = rewrite_topk_to_rollup(parsed, info, declines)
-                    if tk is not None:
-                        cert = _topk_certified(info, tk[3])
-                        if cert is not None:
-                            routed = (
-                                tk[0],
-                                f"{tk[1]}; exact regime certified: "
-                                f"{cert}",
-                                tk[2],
-                            )
-            else:
-                routed = rewrite_join_to_rollup(
-                    jq,
-                    info,
-                    table_columns,
-                    allow_approx_distinct=_allow_distinct(info),
-                    declines=declines,
-                )
+            if (
+                routed is None
+                and not joined
+                and not prefer_exact
+                and parsed.limit
+                and info.get("topk_cols")
+            ):
+                # the canonical top-items dashboard shape: the group
+                # key is a tracked topk column (too high-cardinality
+                # to be a dim), served from combined sketch state —
+                # only in the CERTIFIED exact regime (no Misra–Gries
+                # purge in any partial). Beyond the budget the MG
+                # bound 3.5·n/budget has no bound relative to the
+                # k-th item's count, so no tolerance can admit it.
+                tk = rewrite_topk_to_rollup(parsed, info, declines)
+                cert = tk and _topk_certified(info, tk[1])
+                if cert:
+                    routed = tk[0]._replace(
+                        note=f"{tk[0].note}; exact regime certified: {cert}"
+                    )
             if routed:
                 return self._rollup_plan(routed, info)
         # phase 2: off-grid time bounds — real-time hybrid (complete
         # buckets from state + raw edge slices, routed through the
         # table's fresh partitioned layout when one exists). FINEST
         # bucket first: a finer rollup leaves smaller raw slices.
-        if parsed is not None:
+        if not joined:
             for info in reversed(usable):
                 routed = rewrite_to_rollup_hybrid(
                     parsed,
@@ -4246,17 +4209,18 @@ class AQEngine:
                     return self._rollup_plan(routed, info)
         return None
 
-    def _rollup_plan(self, routed: tuple, info: dict) -> dict:
-        """The plan of a rewrite's ``(sql, note, used_approx)``. COUNT
-        (DISTINCT) served from merged HLL state and MEDIAN/PERCENTILE
-        served from merged KLL state are approximate — labeled sketch
-        plans (and only taken when the tolerance covers the sketch's
-        error bound); everything else re-aggregates losslessly. The
-        reason names the copy serving the answer."""
+    def _rollup_plan(self, routed, info: dict) -> dict:
+        """The plan of a rollup ``Rewrite``. COUNT(DISTINCT) served from
+        merged HLL/theta state, MEDIAN/PERCENTILE served from merged KLL
+        state and top items from frequent-items state read approximate
+        state families — labeled sketch plans (and only taken when the
+        tolerance covers the sketch's error bound or the exact regime is
+        certified); everything else re-aggregates losslessly. The reason
+        names the copy serving the answer."""
         return {
-            "type": "sketch" if routed[2] else "exact",
-            "sql": routed[0],
-            "reason": routed[1] + self.served.note(info["files_view"]),
+            "type": "sketch" if routed.families else "exact",
+            "sql": routed.sql,
+            "reason": routed.note + self.served.note(info["files_view"]),
         }
 
     def _fresh_layout_info(self, table: str) -> dict | None:

@@ -171,9 +171,9 @@ def _rebuild_rollup(engine, table: str, info: dict, **kw) -> dict:
     """Full rebuild of the cataloged rollup ``info`` with its own
     parameters (``kw`` overrides create_rollup options); the theta key
     encoding follows the key types unless ``kw`` sets it."""
-    from approximate_query_engine_spark.engine import _entry_spec
+    from approximate_query_engine_spark.operators.rollup import entry_spec
 
-    spec = _entry_spec(table, info)
+    spec = entry_spec(table, info)
     opts = ("dims", "measures", "distinct_cols", "hll_lgk", "quantile_cols",
             "kll_k", "topk_cols", "topk_budget", "theta_cols", "theta_lgk")
     return engine.create_rollup(

@@ -16,8 +16,10 @@ state).
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,9 +90,57 @@ class RollupSpec:
     #: exact regime (range ndv ≤ 2^theta_lgk — the only regime routing
     #: certifies) estimates are exact counts under EITHER encoding, so
     #: flipping encodings via a REBUILD (maintenance's advised
-    #: migration) never changes a certified answer. False = v1
-    #: byte-compatible default; existing callers/layouts unchanged.
+    #: migration) never changes a certified answer. create_rollup sets
+    #: it from the key types (native whenever every theta column's type
+    #: allows it); a layout built under the string encoding keeps that
+    #: encoding until maintenance's advised migration rebuilds it.
     theta_key_native: bool = False
+
+    def state_columns(self) -> list[tuple[str, str, str]]:
+        """The rollup's state layout, defined once: ``(column, build,
+        merge)`` per state column in layout order (after
+        ``bucket_start`` and the dims). ``build`` is the SQL aggregate
+        that makes the column from source rows; ``merge`` is the one
+        that combines state rows — counts and sums add, min/max combine,
+        HLL/theta union, KLL merges, top-k combines. The build, the
+        derived build, the streaming merge, the hybrid rewrite's fresh
+        edge slices and the rewrites' column checks all read it."""
+        cols = [("n_rows", "COUNT(1)", "SUM(`n_rows`)")]
+        for m in self.measures:
+            for part, build, merge in zip(
+                ("count", "sum", "min", "max"),
+                ("COUNT", "SUM", "MIN", "MAX"),
+                ("SUM", "SUM", "MIN", "MAX"),
+            ):
+                cols.append(
+                    (f"{m}_{part}", f"{build}(`{m}`)", f"{merge}(`{m}_{part}`)")
+                )
+        lgk, k = int(self.hll_lgk), int(self.kll_k)
+        for c in self.distinct_cols:
+            cols.append((f"{c}_hll", f"hll_sketch_agg(`{c}`, {lgk})",
+                         f"hll_union_agg(`{c}_hll`)"))
+        for c in self.quantile_cols:
+            cols.append((f"{c}_kll",
+                         f"kll_sketch_agg_double(CAST(`{c}` AS DOUBLE), {k})",
+                         f"kll_merge_agg_double(`{c}_kll`, {k})"))
+        budget = int(self.topk_budget)
+        for c in self.topk_cols:
+            cols.append((f"{c}_topk",
+                         f"approx_top_k_accumulate(`{c}`, {budget})",
+                         f"approx_top_k_combine(`{c}_topk`, {budget})"))
+        # union at the spec's nominal (the state was built at the same
+        # lg_k) — the function default would downsample any state built
+        # above lg_k 12
+        lgk = int(self.theta_lgk)
+        for c in self.theta_cols:
+            key = theta_key_sql(c, self.theta_key_native)
+            cols.append((f"{c}_theta", f"theta_sketch_agg({key}, {lgk})",
+                         f"theta_union_agg(`{c}_theta`, {lgk})"))
+        return cols
+
+    @property
+    def state_names(self) -> list[str]:
+        return [name for name, _build, _merge in self.state_columns()]
 
     @property
     def rollup_name(self) -> str:
@@ -101,6 +151,28 @@ class RollupSpec:
     def files_view(self) -> str:
         """The layout's view WITH ``p_date`` — routed SQL prunes on it."""
         return f"{self.rollup_name}__files"
+
+
+def entry_spec(table: str, info: dict) -> RollupSpec:
+    """The RollupSpec a catalog rollup entry describes. Its theta key
+    encoding is the recorded one: state rebuilt from raw rows must hash
+    the same key space as the layout's untouched history."""
+    return RollupSpec(
+        table,
+        info["time_col"],
+        info["bucket"],
+        list(info.get("dims", [])),
+        list(info.get("measures", [])),
+        list(info.get("distinct_cols", [])),
+        int(info.get("hll_lgk", 12)),
+        list(info.get("quantile_cols", [])),
+        int(info.get("kll_k", 200)),
+        list(info.get("topk_cols", [])),
+        int(info.get("topk_budget", 1024)),
+        list(info.get("theta_cols", [])),
+        int(info.get("theta_lgk", 12)),
+        theta_key_native=bool(info.get("theta_key_native")),
+    )
 
 
 def serve_layout(
@@ -216,43 +288,12 @@ def can_derive_rollup(fine: RollupSpec, coarse: RollupSpec) -> str | None:
 
 
 def merge_state_aggs(spec: RollupSpec) -> list[Column]:
-    """The aggregates that merge rows of ``spec``'s state into one:
-    counts/sums add, min/max combine, HLL/theta union, KLL merges, top-k
-    combines. ONE definition for the derived build and the streaming
-    merge, so both merge every state column the same way."""
-    aggs = [F.sum("n_rows").alias("n_rows")]
-    for m in spec.measures:
-        aggs += [
-            F.sum(f"{m}_count").alias(f"{m}_count"),
-            F.sum(f"{m}_sum").alias(f"{m}_sum"),
-            F.min(f"{m}_min").alias(f"{m}_min"),
-            F.max(f"{m}_max").alias(f"{m}_max"),
-        ]
-    for dc in spec.distinct_cols:
-        aggs.append(F.hll_union_agg(f"{dc}_hll").alias(f"{dc}_hll"))
-    for qc in spec.quantile_cols:
-        aggs.append(
-            F.expr(
-                f"kll_merge_agg_double(`{qc}_kll`, {int(spec.kll_k)})"
-            ).alias(f"{qc}_kll")
-        )
-    for tc in spec.topk_cols:
-        aggs.append(
-            F.expr(
-                f"approx_top_k_combine(`{tc}_topk`, "
-                f"{int(spec.topk_budget)})"
-            ).alias(f"{tc}_topk")
-        )
-    for sc in spec.theta_cols:
-        # union at the spec's nominal (the state was built at the same
-        # lg_k) — the function default would downsample any state built
-        # above lg_k 12
-        aggs.append(
-            F.expr(
-                f"theta_union_agg(`{sc}_theta`, {int(spec.theta_lgk)})"
-            ).alias(f"{sc}_theta")
-        )
-    return aggs
+    """The aggregates that merge rows of ``spec``'s state into one, in
+    layout order (:meth:`RollupSpec.state_columns`): the derived build
+    and the streaming merge both use them."""
+    return [
+        F.expr(merge).alias(name) for name, _b, merge in spec.state_columns()
+    ]
 
 
 def derive_rollup_state(
@@ -273,31 +314,16 @@ def derive_rollup_state(
         raise ValueError(f"cannot derive {coarse.rollup_name}: {reason}")
     if src is None:
         src = spark.table(fine.rollup_name)
-    out = (
+    return (
         src.groupBy(
-            F.window(F.col("bucket_start"), coarse.bucket)["start"].alias(
+            bucket_start_col("bucket_start", coarse.bucket).alias(
                 "bucket_start"
             ),
             *coarse.dims,
         )
         .agg(*merge_state_aggs(coarse))
-        .select(
-            "bucket_start",
-            *coarse.dims,
-            "n_rows",
-            *[
-                f"{m}_{s}"
-                for m in coarse.measures
-                for s in ("count", "sum", "min", "max")
-            ],
-            *[f"{dc}_hll" for dc in coarse.distinct_cols],
-            *[f"{qc}_kll" for qc in coarse.quantile_cols],
-            *[f"{tc}_topk" for tc in coarse.topk_cols],
-            *[f"{sc}_theta" for sc in coarse.theta_cols],
-        )
         .withColumn(_PDATE, F.date_format("bucket_start", "yyyy-MM-dd"))
     )
-    return out
 
 
 def query_rollup(
@@ -694,193 +720,418 @@ def null_ts_decline(
     return True
 
 
-def rewrite_to_rollup(
+class Rewrite(NamedTuple):
+    """A query rewritten to scan rollup state: the SQL, the plan note,
+    and the APPROXIMATE state families the answer reads ("HLL",
+    "theta", "KLL", "top-k"). No family means every aggregate
+    re-aggregated losslessly, so the answer is exact."""
+
+    sql: str
+    note: str
+    families: frozenset = frozenset()
+
+
+def family_error(info: dict, family: str) -> float:
+    """The published error of an approximate state family at ``info``'s
+    sketch parameters: HLL's relative standard error 1.04/√2^lgk,
+    theta's 1/√2^lgk, and KLL's normalized rank error
+    (:func:`kll_rank_error`)."""
+    if family == "HLL":
+        return 1.04 / math.sqrt(2 ** int(info.get("hll_lgk", 12)))
+    if family == "theta":
+        return 1.0 / math.sqrt(2 ** int(info.get("theta_lgk", 12)))
+    return kll_rank_error(int(info.get("kll_k", 200)))
+
+
+def _approx_parts(
+    info: dict, used: dict[str, list[str]], hybrid: bool = False
+) -> list[str]:
+    """One note part per approximate family in ``used`` (family → the
+    columns served from it), with the family's error bound. The hybrid
+    names the families merged across its two branches instead of the
+    columns."""
+    parts = []
+    for fam in ("HLL", "theta", "KLL"):
+        if fam not in used:
+            continue
+        err = family_error(info, fam)
+        bound = f"rank err ≤ {err:.2%}" if fam == "KLL" else f"rel err ≈ {err:.1%}"
+        if hybrid:
+            what = "quantiles" if fam == "KLL" else "COUNT(DISTINCT)"
+            parts.append(
+                f"{what} from {fam} state merged across both branches, {bound}"
+            )
+            continue
+        cols = ", ".join(sorted(set(used[fam])))
+        what = f"quantiles of {cols}" if fam == "KLL" else f"COUNT(DISTINCT {cols})"
+        parts.append(f"{what} from merged {fam} sketch state, {bound}")
+    return parts
+
+
+class _Single:
+    """Column naming of a one-table query: the source table's name and
+    alias qualify its columns, and rollup state is referenced
+    unqualified."""
+
+    prefix = ""  # qualifier of rollup state columns in the routed SQL
+    route = ""  # what the note says was answered
+    approx_lead = ""
+    exact_note = "exact — partial-agg state re-aggregated"
+
+    def __init__(self, parsed, info: dict):
+        self.scopes = {info["source_table"]}
+        if parsed.table_alias:
+            self.scopes.add(parsed.table_alias)
+        self.dims = set(info["dims"])
+        #: every column the rewritten SQL may reference besides dims —
+        #: the post-rewrite soundness check for HAVING
+        self.state = {
+            "bucket_start",
+            *entry_spec(info["source_table"], info).state_names,
+        }
+
+    def strip(self, e: str) -> str:
+        return _strip_qualifier(e, self.scopes).strip()
+
+    def fact_col(self, ref: str) -> str:
+        """``ref`` as a source-table column name (qualifier stripped)."""
+        return self.strip(ref)
+
+    def key_col(self, e: str) -> str | None:
+        """A plain group key: only rollup dims re-group."""
+        c = self.strip(e)
+        return c if c in self.dims else None
+
+    def col_name(self, raw: str) -> str | None:
+        """The name Spark gives an unaliased select item that is a plain
+        (possibly qualified) dim column: its bare name."""
+        return self.key_col(raw)
+
+    def where_term(self, c: str, ids: set[str]) -> tuple[str, str | None]:
+        """``("filter", sql)`` for a conjunct over dims only, which
+        passes through; ``("time", None)`` for anything else, which
+        must be a time bound."""
+        bare = {self.strip(i) for i in ids}
+        if bare and bare <= self.dims:
+            return "filter", self.strip(c)
+        return "time", None
+
+    def having(self, h: str, ids: set[str]) -> str | None:
+        # everything the rewritten HAVING references must be a dim or
+        # rollup partial-agg state — anything else means an original
+        # reference this rewrite didn't account for
+        if {self.strip(i) for i in ids} - self.dims - self.state:
+            return None
+        return _strip_qualifier(h, self.scopes)
+
+    def source(self, src: str) -> str:
+        return src
+
+
+class _Star:
+    """Column naming of a star join whose FACT table is the rollup's
+    source: references resolve to exactly one joined table, rollup
+    state is qualified with the fact's alias, and the fact scan is
+    replaced in the FROM body."""
+
+    route = "star join "
+    approx_lead = "fact scan replaced by partial-agg state; "
+    exact_note = (
+        "fact scan replaced by partial-agg state — exact, dims broadcast "
+        "as before"
+    )
+
+    def __init__(self, jq, info: dict, table_columns: dict):
+        self.jq, self.table_columns = jq, table_columns
+        self.fact = info["source_table"]
+        self.ts = info["time_col"]
+        self.dims = set(info["dims"])
+        alias = jq.alias_of(self.fact)  # alias if present, else table name
+        self.scopes = {self.fact, alias}
+        # the rollup keeps the fact's alias in the FROM body
+        self.alias, self.prefix = alias, f"{alias}."
+        #: columns the rollup view ADDS relative to the fact table — an
+        #: unqualified reference to a same-named DIM column would become
+        #: ambiguous once the fact reference is swapped for the rollup
+        self.state = {
+            "bucket_start",
+            "p_date",
+            *entry_spec(self.fact, info).state_names,
+        }
+        self.own: dict[str, set[str]] = {}
+        for t, _a in jq.tables:
+            for c in table_columns[t]:
+                self.own.setdefault(c, set()).add(t)
+
+    def resolve(self, ref: str) -> tuple[str, str] | None:
+        """qualified/unqualified column reference → (table, column)."""
+        ref = ref.strip()
+        if "." in ref:
+            q, c = ref.split(".", 1)
+            for t, a in self.jq.tables:
+                if q == (a or t):
+                    return (t, c) if c in self.table_columns.get(t, []) else None
+            return None
+        owners = self.own.get(ref)
+        if owners is None or len(owners) != 1:
+            return None
+        owner = next(iter(owners))
+        if owner != self.fact and ref in self.state:
+            return None  # would collide with a rollup state column
+        return owner, ref
+
+    def fact_col(self, ref: str) -> str | None:
+        r = self.resolve(ref)
+        return r[1] if r is not None and r[0] == self.fact else None
+
+    def key_col(self, e: str) -> str | None:
+        r = self.resolve(e)
+        if r is None:
+            return None
+        t, c = r
+        if t == self.fact:
+            return f"{self.prefix}{c}" if c in self.dims else None
+        return e  # dim-table column — rides through the join unchanged
+
+    def col_name(self, raw: str) -> str | None:
+        # Spark names an unaliased (possibly qualified) plain column by
+        # its bare name; expressions keep their full text
+        r = self.resolve(raw)
+        return r[1] if r is not None else None
+
+    def where_term(self, c: str, ids: set[str]) -> tuple[str, str | None] | None:
+        rs = [self.resolve(i) for i in ids]
+        if any(r is None for r in rs):
+            return None
+        owners = {r[0] for r in rs}
+        if self.fact not in owners:
+            return "filter", c  # constant or dim-only — passes through
+        if owners != {self.fact}:
+            return None  # mixed fact+dim conjunct
+        cols = {r[1] for r in rs}
+        if cols <= self.dims:
+            # fact-dim filter: the rollup carries these columns under
+            # the same alias, so the conjunct passes through verbatim
+            return "filter", c
+        return ("time", None) if cols == {self.ts} else None
+
+    def having(self, h: str, ids: set[str]) -> str | None:
+        # every remaining reference must be rollup state (under the fact
+        # alias), a fact dim, or a dim-table column
+        for i in ids:
+            if "." in i:
+                q, c = i.split(".", 1)
+                if q == self.alias and (c in self.state or c in self.dims):
+                    continue  # rewritten state / fact dim under the alias
+            r = self.resolve(i)
+            if r is None or (r[0] == self.fact and r[1] not in self.dims):
+                return None
+        return h
+
+    def source(self, src: str) -> str:
+        return self.jq.from_with_replacement(self.fact, src)
+
+
+def _day_cast_as_trunc(text: str, col: str = r"[A-Za-z_]\w*") -> str:
+    """``CAST(col AS DATE)`` → ``DATE_TRUNC('DAY', col)``: the two name
+    the same day, so bound matching only needs the DATE_TRUNC form."""
+    return _re.sub(
+        rf"CAST\(\s*({col})\s+AS\s+DATE\s*\)",
+        r"DATE_TRUNC('DAY', \1)",
+        text,
+        flags=_re.I,
+    )
+
+
+def _where_terms(
+    where: str, scope, ts: str
+) -> list[tuple[str | None, str | None]] | None:
+    """The top-level conjuncts of ``where``: ``(filter_sql, None)`` for
+    one that passes through, ``(None, bound)`` for one on the time
+    column (fact qualifiers stripped, ``CAST(ts AS DATE)`` normalized),
+    or None when a top-level OR or an unplaceable conjunct makes the
+    clause underivable."""
+    conjs = _split_conjuncts(where)
+    if conjs is None:
+        return None
+    out = []
+    for c in conjs:
+        ids = _identifiers(c)
+        term = None if ids is None else scope.where_term(c, ids)
+        if term is None:
+            return None
+        kind, filt = term
+        if kind == "filter":
+            out.append((filt, None))
+        else:
+            sc = _strip_qualifier(c, scope.scopes).strip()
+            out.append((None, _day_cast_as_trunc(sc, _re.escape(ts))))
+    return out
+
+
+def _bucket_where(
+    parsed, info: dict, scope, declines: list[str] | None
+) -> list[str] | None:
+    """WHERE → conditions over rollup state: filters pass through and
+    each time bound becomes ``bucket_start`` bounds
+    (:func:`_ts_conjunct_bounds`), plus conservative ``p_date`` prunes
+    on a materialized layout. None when a conjunct is neither or a bound
+    slices a bucket, and when the query has no time bound while the
+    source has NULL-time rows (:func:`null_ts_decline`)."""
+    ts, bsec = info["time_col"], info["bucket_seconds"]
+    terms = _where_terms(parsed.where, scope, ts) if parsed.where else []
+    if terms is None:
+        return None
+    # only the materialized files view carries p_date; the prunes are a
+    # date-directory superset, the bucket_start conjuncts the exact filter
+    materialized = bool(
+        info.get("files_view") and info["files_view"] != info["view"]
+    )
+    conds, prune, ts_bounded = [], [], False
+    for filt, sc in terms:
+        if filt is not None:
+            conds.append(filt)
+            continue
+        tb = _ts_conjunct_bounds(sc, ts, bsec)
+        if tb is None:
+            return None
+        ts_bounded = True
+        for op, iso in tb[0]:
+            conds.append(f"{scope.prefix}bucket_start {op} TIMESTAMP '{iso}'")
+        if materialized:
+            for op, dt in tb[1]:
+                prune.append(f"{scope.prefix}p_date {op} '{dt:%Y-%m-%d}'")
+    if null_ts_decline(info, ts_bounded, declines):
+        return None
+    return conds + prune
+
+
+def _rewrite(
     parsed,
     info: dict,
-    allow_approx_distinct: bool = False,
-    allow_approx_quantile: bool = False,
-    declines: list[str] | None = None,
-) -> tuple[str, str, bool] | None:
-    """Rewrite a parsed single-table aggregate to scan ``info``'s rollup
-    — ``(sql, note, used_approx_distinct)`` — or None when the shape is
-    not derivable.
+    scope,
+    allow_distinct: bool,
+    allow_quantile: bool,
+    declines: list[str] | None,
+) -> Rewrite | None:
+    """The one rewrite core over rollup state: aggregates map to state,
+    group keys to ``bucket_start``/dims, WHERE to bucket bounds and
+    filters, then HAVING and ORDER BY; ``scope`` says how the route
+    names columns (:class:`_Single`, :class:`_Star`)."""
+    from approximate_query_engine_spark.sqlparser import Aggregate
 
-    With ``allow_approx_distinct``, ``COUNT(DISTINCT c)`` over a column
-    in ``info["distinct_cols"]`` rewrites to the merged HLL sketch
-    estimate (DataSketches state unions across buckets; rel. std. err.
-    ≈ 1.04/√2^lgk) — flagged in the returned bool so the caller
-    prices/labels it as a sketch plan.
-
-    With ``allow_approx_quantile``, ``MEDIAN(c)`` / ``PERCENTILE(c, p)``
-    over a column in ``info["quantile_cols"]`` rewrites to the merged
-    KLL sketch quantile (``kll_merge_agg_double`` across buckets →
-    ``kll_sketch_get_quantile_double``) — same flag. The answer is a
-    true data value whose rank is within ε(kll_k) of p
-    (:func:`kll_rank_error`); below the sketch's compaction threshold it
-    is exactly the inclusive-rank order statistic (discrete quantile).
-
-    ``info``: {"view", "files_view", "time_col", "bucket",
-    "bucket_seconds", "dims", "measures"} (engine.create_rollup builds
-    it). Soundness rules, each of which declines rather than risks a
-    wrong answer:
-
-    - aggregates must be COUNT(*)/COUNT(m)/SUM(m)/MIN(m)/MAX(m)/AVG(m)
-      over registered measures, no DISTINCT (n_rows / m_count / m_sum /
-      m_min / m_max state re-aggregates exactly; AVG = Σsum/Σcount —
-      never an average of averages);
-    - group keys must be rollup dims or DATE_TRUNC(unit, ts) at a grain
-      whose boundaries all fall on the bucket grid;
-    - WHERE conjuncts must reference only dims (passed through) or bound
-      ts: raw ``>=``/``<`` literals EXACTLY on bucket boundaries,
-      ``<=``/``>`` literals one microsecond before a boundary (µs is the
-      timestamp tick, so the shift is an identity, not a convention), or
-      ``DATE_TRUNC``/``CAST AS DATE`` comparisons (``=``, ``>=``, ``<``,
-      ``<=``, ``>``) with unit-aligned literals — ``<=``/``>`` shift to
-      the unit's next boundary, which is exact because every row in
-      [literal, next) truncates to the literal. ``BETWEEN`` desugars to
-      the two comparisons first; a misaligned bound would slice a
-      bucket, which the rollup cannot, so it declines;
-    - HAVING rewrites its aggregate calls the same way; the rewritten
-      clause must reference only dims + rollup state, else decline;
-    - OR at the top level of WHERE / quantiles / DISTINCT decline;
-    - while the source has NULL-timestamp rows (which no bucket holds), a
-      query with no time conjunct declines — the reason is appended to
-      ``declines`` (:func:`null_ts_decline`).
-    """
-    ts = info["time_col"]
-    bsec = info["bucket_seconds"]
-    dims = set(info["dims"])
+    ts, bsec = info["time_col"], info["bucket_seconds"]
     measures = set(info["measures"])
-    scopes = {info["source_table"]}
-    if parsed.table_alias:
-        scopes.add(parsed.table_alias)
     distinct_set = set(info.get("distinct_cols", []))
     theta_set = set(info.get("theta_cols", []))
     quantile_set = set(info.get("quantile_cols", []))
     kll_k = int(info.get("kll_k", 200))
-    used_approx: list[str] = []
-    used_quantile: list[str] = []
-    #: every column the rewritten SQL may legitimately reference — the
-    #: post-rewrite soundness check for HAVING
-    state_cols = (
-        {"n_rows", "bucket_start"}
-        | {
-            f"{m}_{s}"
-            for m in measures
-            for s in ("count", "sum", "min", "max")
-        }
-        | {f"{dc}_hll" for dc in distinct_set}
-        | {f"{qc}_kll" for qc in quantile_set}
-        | {f"{sc}_theta" for sc in theta_set}
-    )
+    R = scope.prefix
+    #: approximate family → the columns served from it
+    used: dict[str, list[str]] = {}
 
-    def strip(e: str) -> str:
-        return _strip_qualifier(e, scopes).strip()
-
-    def rewrite_key(expr: str) -> str | None:
-        e = strip(expr)
-        if e in dims:
-            return e
-        m = _re.fullmatch(
-            rf"DATE_TRUNC\(\s*'(\w+)'\s*,\s*{_re.escape(ts)}\s*\)", e, _re.I
-        )
-        if m:
-            unit = m.group(1).lower()
-            mod = _TRUNC_MODULUS.get(unit)
-            if mod is not None and mod % bsec == 0:
-                return f"DATE_TRUNC('{unit.upper()}', bucket_start)"
-        # GROUP BY CAST(ts AS DATE) — the other dashboard day-grain key;
-        # DATE-typed (unlike DATE_TRUNC's timestamp), so it rewrites to
-        # the same cast of bucket_start
-        m = _re.fullmatch(
-            rf"CAST\(\s*{_re.escape(ts)}\s+AS\s+DATE\s*\)", e, _re.I
-        )
-        if m and 86400 % bsec == 0:
-            return "CAST(bucket_start AS DATE)"
-        return None
-
-    def rewrite_agg(agg) -> str | None:
+    def agg_sql(agg) -> str | None:
         if agg.distinct:
-            arg = strip(agg.arg)
-            if allow_approx_distinct and agg.func == "COUNT":
-                if arg in distinct_set:
-                    used_approx.append(arg)
-                    return (
-                        f"hll_sketch_estimate(hll_union_agg({arg}_hll))"
-                    )
-                # theta state serves plain distinct counts too (union
-                # then estimate) — same accuracy family (~1/√2^lgk), so
-                # the caller's HLL tolerance gate covers it
-                if arg in theta_set:
-                    used_approx.append(arg)
-                    return (
-                        f"CAST(ROUND(theta_sketch_estimate("
-                        f"theta_union_agg({arg}_theta, "
-                        f"{int(info.get('theta_lgk', 12))}))) AS BIGINT)"
-                    )
+            c = (
+                scope.fact_col(agg.arg)
+                if allow_distinct and agg.func == "COUNT"
+                else None
+            )
+            if c in distinct_set:
+                used.setdefault("HLL", []).append(c)
+                return f"hll_sketch_estimate(hll_union_agg({R}{c}_hll))"
+            # theta state serves plain distinct counts too (union then
+            # estimate) — same accuracy family (~1/√2^lgk), so the
+            # caller's HLL tolerance gate covers it; like HLL union it is
+            # idempotent, so distinct stays correct under non-unique dim
+            # matches of a star join
+            if c in theta_set:
+                used.setdefault("theta", []).append(c)
+                return (
+                    f"CAST(ROUND(theta_sketch_estimate("
+                    f"theta_union_agg({R}{c}_theta, "
+                    f"{int(info.get('theta_lgk', 12))}))) AS BIGINT)"
+                )
             return None
+        # quantile (KLL) state is offered to the one-table route only: a
+        # dim multiplicity of m repeats each fact value m times in a raw
+        # join, and sketch state cannot be weight-scaled — unlike
+        # counts/sums (multiply via SUM(n_rows)) or HLL/theta
+        # (idempotent union)
         if agg.is_quantile:
-            if not allow_approx_quantile:
+            if not allow_quantile:
                 return None
             try:
                 vexpr, p = agg.quantile_args()
             except Exception:  # noqa: BLE001 - non-literal p: not derivable
                 return None
-            arg = strip(vexpr)
-            if arg not in quantile_set:
+            c = scope.fact_col(vexpr)
+            if c not in quantile_set:
                 return None
-            used_quantile.append(arg)
+            used.setdefault("KLL", []).append(c)
             return (
                 f"kll_sketch_get_quantile_double("
-                f"kll_merge_agg_double({arg}_kll, {kll_k}), "
+                f"kll_merge_agg_double({R}{c}_kll, {kll_k}), "
                 f"CAST({p!r} AS DOUBLE))"
             )
         if agg.func not in ("COUNT", "SUM", "MIN", "MAX", "AVG"):
             return None
-        arg = strip(agg.arg)
+        if agg.func == "COUNT" and (agg.is_star or agg.arg.strip() == "1"):
+            return f"COALESCE(SUM({R}n_rows), CAST(0 AS BIGINT))"
+        c = scope.fact_col(agg.arg)
+        if c not in measures:
+            return None
         if agg.func == "COUNT":
-            if agg.is_star or arg == "1":
-                return "COALESCE(SUM(n_rows), CAST(0 AS BIGINT))"
-            if arg in measures:
-                return f"COALESCE(SUM({arg}_count), CAST(0 AS BIGINT))"
-            return None
-        if arg not in measures:
-            return None
-        if agg.func == "SUM":
-            return f"SUM({arg}_sum)"
-        if agg.func == "MIN":
-            return f"MIN({arg}_min)"
-        if agg.func == "MAX":
-            return f"MAX({arg}_max)"
-        return f"SUM({arg}_sum) / NULLIF(SUM({arg}_count), 0)"
+            return f"COALESCE(SUM({R}{c}_count), CAST(0 AS BIGINT))"
+        if agg.func == "AVG":
+            return f"SUM({R}{c}_sum) / NULLIF(SUM({R}{c}_count), 0)"
+        return f"{agg.func}({R}{c}_{agg.func.lower()})"
+
+    def key_sql(expr: str) -> str | None:
+        e = expr.strip()
+        m = _re.fullmatch(
+            r"DATE_TRUNC\(\s*'(\w+)'\s*,\s*([A-Za-z_][\w.]*)\s*\)", e, _re.I
+        )
+        if m:
+            unit = m.group(1).lower()
+            mod = _TRUNC_MODULUS.get(unit)
+            if scope.fact_col(m.group(2)) != ts or mod is None or mod % bsec:
+                return None
+            return f"DATE_TRUNC('{unit.upper()}', {R}bucket_start)"
+        # GROUP BY CAST(ts AS DATE) — the other dashboard day-grain key;
+        # DATE-typed (unlike DATE_TRUNC's timestamp), so it rewrites to
+        # the same cast of bucket_start
+        m = _re.fullmatch(
+            r"CAST\(\s*([A-Za-z_][\w.]*)\s+AS\s+DATE\s*\)", e, _re.I
+        )
+        if m:
+            if scope.fact_col(m.group(1)) != ts or 86400 % bsec:
+                return None
+            return f"CAST({R}bucket_start AS DATE)"
+        return scope.key_col(e)
 
     # ---- select list ----
     items, aliases = [], set()
     has_agg, nonagg_keys = False, []
     for it in parsed.select_items:
         if it.agg is not None:
-            new = rewrite_agg(it.agg)
+            new = agg_sql(it.agg)
             has_agg = True
         else:
-            new = rewrite_key(it.raw)
+            new = key_sql(it.raw)
             nonagg_keys.append(new)
         if new is None:
             return None
-        if it.alias:
-            alias_sql = it.alias
-        elif strip(it.raw) in dims:
-            # Spark names an unaliased qualified column by its bare name
-            alias_sql = strip(it.raw)
-        else:
-            alias_sql = f"`{it.raw}`"
-        items.append(f"{new} AS {alias_sql}")
+        items.append(
+            f"{new} AS {it.alias or scope.col_name(it.raw) or f'`{it.raw}`'}"
+        )
         if it.alias:
             aliases.add(it.alias)
 
     # ---- group by ----
     keys = []
     for g in parsed.group_by:
-        new = rewrite_key(g)
+        new = key_sql(g)
         if new is None:
             return None
         keys.append(new)
@@ -892,63 +1143,21 @@ def rewrite_to_rollup(
         return None
 
     # ---- where ----
-    conds, prune, ts_bounded = [], [], False
-    if parsed.where:
-        conjs = _split_conjuncts(parsed.where)
-        if conjs is None:
-            return None
-        materialized = bool(
-            info.get("files_view") and info["files_view"] != info["view"]
-        )
-
-        def add_prune(op: str, dt: datetime) -> None:
-            # conservative date-directory pruning superset (the
-            # bucket_start conjuncts are the exact filter); only the
-            # materialized files view carries p_date
-            if materialized:
-                prune.append(f"p_date {op} '{dt.strftime('%Y-%m-%d')}'")
-
-        for c in conjs:
-            ids = _identifiers(c)
-            if ids is None:
-                return None
-            bare = {strip(i) for i in ids}
-            if bare and bare <= dims:
-                conds.append(strip(c))
-                continue
-            sc = strip(c)
-            # CAST(ts AS DATE) ≡ DATE_TRUNC('DAY', ts) — normalize first
-            sc = _re.sub(
-                rf"CAST\(\s*{_re.escape(ts)}\s+AS\s+DATE\s*\)",
-                f"DATE_TRUNC('DAY', {ts})",
-                sc,
-                flags=_re.I,
-            )
-            tb = _ts_conjunct_bounds(sc, ts, bsec)
-            if tb is None:
-                return None
-            ts_bounded = True
-            bconds, bprunes = tb
-            for bop, iso in bconds:
-                conds.append(f"bucket_start {bop} TIMESTAMP '{iso}'")
-            for pop, pdt in bprunes:
-                add_prune(pop, pdt)
-    if null_ts_decline(info, ts_bounded, declines):
+    conds = _bucket_where(parsed, info, scope, declines)
+    if conds is None:
         return None
 
-    # ---- having ----
+    # ---- having: its aggregate calls rewrite through the same rules ----
     having_sql = None
     if parsed.having:
-        from approximate_query_engine_spark.sqlparser import Aggregate
-
         bad = False
 
         def _agg_repl(m):
             nonlocal bad
-            if m.group(2):  # DISTINCT inside an aggregate
+            if m.group(2):  # DISTINCT inside a HAVING aggregate
                 bad = True
                 return m.group(0)
-            new = rewrite_agg(
+            new = agg_sql(
                 Aggregate(m.group(1).upper(), m.group(3), False, m.group(0))
             )
             if new is None:
@@ -963,27 +1172,20 @@ def rewrite_to_rollup(
             flags=_re.I,
         )
         ids = None if bad else _identifiers(h)
-        if ids is None:
+        having_sql = None if ids is None else scope.having(h, ids)
+        if having_sql is None:
             return None
-        # everything the rewritten HAVING references must be a dim or
-        # rollup partial-agg state — anything else means an original
-        # reference this rewrite didn't account for
-        if {strip(i) for i in ids} - dims - state_cols:
-            return None
-        having_sql = _strip_qualifier(h, scopes)
 
     # ---- order by / limit ----
     order = []
     for o in parsed.order_by:
-        new = rewrite_key(o.expr)
+        new = key_sql(o.expr)
         if new is None:
             m = _re.fullmatch(
                 r"(COUNT|SUM|MIN|MAX|AVG)\s*\((.*)\)", o.expr.strip(), _re.I
             )
             if m:
-                from approximate_query_engine_spark.sqlparser import Aggregate
-
-                new = rewrite_agg(
+                new = agg_sql(
                     Aggregate(m.group(1).upper(), m.group(2), False, o.expr)
                 )
         if new is None:
@@ -993,11 +1195,10 @@ def rewrite_to_rollup(
             return None
         order.append(f"{new} DESC" if o.desc else new)
 
-    sql = "SELECT " + ", ".join(items)
-    sql += f" FROM {info.get('files_view') or info['view']}"
-    allconds = conds + prune
-    if allconds:
-        sql += " WHERE " + " AND ".join(allconds)
+    src = scope.source(info.get("files_view") or info["view"])
+    sql = "SELECT " + ", ".join(items) + f" FROM {src}"
+    if conds:
+        sql += " WHERE " + " AND ".join(conds)
     if keys:
         sql += " GROUP BY " + ", ".join(keys)
     if having_sql:
@@ -1006,49 +1207,133 @@ def rewrite_to_rollup(
         sql += " ORDER BY " + ", ".join(order)
     if parsed.limit is not None:
         sql += f" LIMIT {parsed.limit}"
-    if used_approx or used_quantile:
-        import math
-
-        parts = []
-        hll_used = sorted({a for a in used_approx if a in distinct_set})
-        theta_used = sorted(
-            {a for a in used_approx if a in theta_set and a not in distinct_set}
-        )
-        if hll_used:
-            err = 1.04 / math.sqrt(2 ** int(info.get("hll_lgk", 12)))
-            parts.append(
-                f"COUNT(DISTINCT {', '.join(hll_used)}) "
-                f"from merged HLL sketch state, rel err ≈ {err:.1%}"
-            )
-        if theta_used:
-            terr = 1.0 / math.sqrt(2 ** int(info.get("theta_lgk", 12)))
-            parts.append(
-                f"COUNT(DISTINCT {', '.join(theta_used)}) "
-                f"from merged theta sketch state, rel err ≈ {terr:.1%}"
-            )
-        if used_quantile:
-            qerr = kll_rank_error(kll_k)
-            parts.append(
-                f"quantiles of {', '.join(sorted(set(used_quantile)))} "
-                f"from merged KLL sketch state, rank err ≤ {qerr:.2%}"
-            )
-        note = (
-            f"answered from materialized rollup {info['view']} "
-            f"(bucket {info['bucket']}; {'; '.join(parts)}; "
+    note = (
+        f"{scope.route}answered from materialized rollup {info['view']} "
+        f"(bucket {info['bucket']}; "
+    )
+    if used:
+        note += (
+            f"{scope.approx_lead}{'; '.join(_approx_parts(info, used))}; "
             "other aggregates exact)"
         )
     else:
-        note = (
-            f"answered from materialized rollup {info['view']} "
-            f"(bucket {info['bucket']}; exact — partial-agg state "
-            "re-aggregated)"
-        )
-    return sql, note, bool(used_approx or used_quantile)
+        note += f"{scope.exact_note})"
+    return Rewrite(sql, note, frozenset(used))
+
+
+def rewrite_to_rollup(
+    parsed,
+    info: dict,
+    allow_approx_distinct: bool = False,
+    allow_approx_quantile: bool = False,
+    declines: list[str] | None = None,
+) -> Rewrite | None:
+    """Rewrite a parsed single-table aggregate to scan ``info``'s rollup,
+    or None when the shape is not derivable.
+
+    With ``allow_approx_distinct``, ``COUNT(DISTINCT c)`` over a column
+    in ``info["distinct_cols"]`` rewrites to the merged HLL sketch
+    estimate (DataSketches state unions across buckets; rel. std. err.
+    ≈ 1.04/√2^lgk), or over a ``theta_cols`` column to the merged theta
+    estimate — reported in the rewrite's families so the caller
+    prices/labels it as a sketch plan.
+
+    With ``allow_approx_quantile``, ``MEDIAN(c)`` / ``PERCENTILE(c, p)``
+    over a column in ``info["quantile_cols"]`` rewrites to the merged
+    KLL sketch quantile (``kll_merge_agg_double`` across buckets →
+    ``kll_sketch_get_quantile_double``) — same report. The answer is a
+    true data value whose rank is within ε(kll_k) of p
+    (:func:`kll_rank_error`); below the sketch's compaction threshold it
+    is exactly the inclusive-rank order statistic (discrete quantile).
+
+    ``info``: {"view", "files_view", "time_col", "bucket",
+    "bucket_seconds", "dims", "measures"} (engine.create_rollup builds
+    it). Soundness rules, each of which declines rather than risks a
+    wrong answer:
+
+    - aggregates must be COUNT(*)/COUNT(m)/SUM(m)/MIN(m)/MAX(m)/AVG(m)
+      over registered measures (n_rows / m_count / m_sum / m_min /
+      m_max state re-aggregates exactly; AVG = Σsum/Σcount — never an
+      average of averages); COUNT(DISTINCT) and quantiles only from
+      tracked sketch state, and only when the caller's tolerance gates
+      allow them;
+    - group keys must be rollup dims or DATE_TRUNC(unit, ts) at a grain
+      whose boundaries all fall on the bucket grid;
+    - WHERE conjuncts must reference only dims (passed through) or bound
+      ts: raw ``>=``/``<`` literals EXACTLY on bucket boundaries,
+      ``<=``/``>`` literals one microsecond before a boundary (µs is the
+      timestamp tick, so the shift is an identity, not a convention), or
+      ``DATE_TRUNC``/``CAST AS DATE`` comparisons (``=``, ``>=``, ``<``,
+      ``<=``, ``>``) with unit-aligned literals — ``<=``/``>`` shift to
+      the unit's next boundary, which is exact because every row in
+      [literal, next) truncates to the literal. ``BETWEEN`` desugars to
+      the two comparisons first; a misaligned bound would slice a
+      bucket, which the rollup cannot, so it declines;
+    - HAVING rewrites its aggregate calls the same way; the rewritten
+      clause must reference only dims + rollup state, else decline;
+    - OR at the top level of WHERE declines;
+    - while the source has NULL-timestamp rows (which no bucket holds), a
+      query with no time conjunct declines — the reason is appended to
+      ``declines`` (:func:`null_ts_decline`).
+    """
+    return _rewrite(
+        parsed,
+        info,
+        _Single(parsed, info),
+        allow_approx_distinct,
+        allow_approx_quantile,
+        declines,
+    )
+
+
+def _topk_shape(parsed, strip) -> tuple[str, str, str] | None:
+    """``(col, col_alias, count_alias)`` when ``parsed`` is the canonical
+    top-items dashboard shape — exactly one plain group key, select
+    items are the key + one COUNT(*), ORDER BY leads with that count
+    DESC (an optional secondary ASC on the key is absorbed), LIMIT
+    present, no HAVING — else None. The one grammar the top-k rewrite
+    serves and the rollup advisor records."""
+    if parsed.having or not parsed.limit or parsed.limit <= 0:
+        return None
+    if len(parsed.group_by) != 1 or len(parsed.select_items) != 2:
+        return None
+    col = strip(parsed.group_by[0])
+    col_alias = cnt_alias = None
+    for it in parsed.select_items:
+        if it.agg is not None:
+            if it.agg.distinct or it.agg.func != "COUNT":
+                return None
+            if not (it.agg.is_star or strip(it.agg.arg) == "1"):
+                return None
+            cnt_alias = it.alias or f"`{it.raw}`"
+        else:
+            if strip(it.raw) != col:
+                return None
+            col_alias = it.alias or col
+    if col_alias is None or cnt_alias is None:
+        return None
+    # ORDER BY must LEAD with the count DESC; a secondary ASC key on the
+    # grouping column matches the deterministic re-rank we emit anyway
+    if not parsed.order_by or len(parsed.order_by) > 2:
+        return None
+    lead = parsed.order_by[0]
+    lead_e = strip(lead.expr)
+    is_cnt = (
+        lead_e == cnt_alias.strip("`")
+        or _re.fullmatch(r"COUNT\s*\(\s*(\*|1)\s*\)", lead_e, _re.I)
+    )
+    if not (lead.desc and is_cnt):
+        return None
+    if len(parsed.order_by) == 2:
+        sec = parsed.order_by[1]
+        if sec.desc or strip(sec.expr) not in (col, col_alias):
+            return None
+    return col, col_alias, cnt_alias
 
 
 def rewrite_topk_to_rollup(
     parsed, info: dict, declines: list[str] | None = None
-) -> tuple[str, str, bool, str] | None:
+) -> tuple[Rewrite, str] | None:
     """Rewrite the canonical TOP-ITEMS dashboard SQL —
     ``SELECT col, COUNT(*) FROM t [WHERE ...] GROUP BY col
     ORDER BY COUNT(*) DESC LIMIT k`` — to ``info``'s combined
@@ -1068,106 +1353,25 @@ def rewrite_topk_to_rollup(
     for its full budget of items (not a candidate prefix), so the
     deterministic (count DESC, item ASC) re-rank breaks ties globally —
     a valid instance of the user's count-DESC ordering. Returns
-    ``(sql, note, used_approx, column)``.
+    ``(rewrite, column)``.
 
     Soundness rules, each declining rather than risking a wrong answer:
-    exactly one group key (a tracked topk column), select items are the
-    key + one COUNT(*), ORDER BY leads with that count DESC (an
-    optional secondary ASC on the key is absorbed), LIMIT present,
-    WHERE conjuncts are dim filters or bucket-aligned time bounds
-    (combined state cannot slice a bucket), no HAVING/DISTINCT/OR."""
-    ts = info["time_col"]
-    bsec = info["bucket_seconds"]
-    dims = set(info["dims"])
-    topk_set = set(info.get("topk_cols", []))
+    the shape is :func:`_topk_shape`'s with its group key a tracked topk
+    column, and WHERE conjuncts are dim filters or bucket-aligned time
+    bounds (combined state cannot slice a bucket), no DISTINCT/OR."""
+    scope = _Single(parsed, info)
     budget = int(info.get("topk_budget", 1024))
-    scopes = {info["source_table"]}
-    if parsed.table_alias:
-        scopes.add(parsed.table_alias)
-
-    def strip(e: str) -> str:
-        return _strip_qualifier(e, scopes).strip()
-
-    if parsed.having or parsed.limit is None or parsed.limit <= 0:
+    shape = _topk_shape(parsed, scope.strip)
+    if shape is None:
         return None
-    if len(parsed.group_by) != 1:
-        return None
-    col = strip(parsed.group_by[0])
-    if col not in topk_set or col in dims:
+    col, col_alias, cnt_alias = shape
+    if col not in info.get("topk_cols", []) or col in scope.dims:
         return None  # a dim group key re-aggregates exactly — not ours
-    if len(parsed.select_items) != 2:
-        return None
-    col_alias = cnt_alias = None
-    for it in parsed.select_items:
-        if it.agg is not None:
-            if it.agg.distinct or it.agg.func != "COUNT":
-                return None
-            if not (it.agg.is_star or strip(it.agg.arg) == "1"):
-                return None
-            cnt_alias = it.alias or f"`{it.raw}`"
-        else:
-            if strip(it.raw) != col:
-                return None
-            col_alias = it.alias or col
-    if col_alias is None or cnt_alias is None:
-        return None
-    # ORDER BY must LEAD with the count DESC; a secondary ASC key on the
-    # grouping column matches the deterministic re-rank we emit anyway
-    if not parsed.order_by:
-        return None
-    lead = parsed.order_by[0]
-    lead_e = strip(lead.expr)
-    is_cnt = (
-        lead_e == cnt_alias.strip("`")
-        or _re.fullmatch(r"COUNT\s*\(\s*(\*|1)\s*\)", lead_e, _re.I)
-    )
-    if not (lead.desc and is_cnt):
-        return None
-    if len(parsed.order_by) > 2:
-        return None
-    if len(parsed.order_by) == 2:
-        sec = parsed.order_by[1]
-        if sec.desc or strip(sec.expr) not in (col, col_alias):
-            return None
 
-    # ---- where: dim filters pass through; ts bounds translate to the
-    # bucket grid exactly like rewrite_to_rollup (misaligned declines)
-    conds, prune, ts_bounded = [], [], False
-    if parsed.where:
-        conjs = _split_conjuncts(parsed.where)
-        if conjs is None:
-            return None
-        materialized = bool(
-            info.get("files_view") and info["files_view"] != info["view"]
-        )
-        for c in conjs:
-            ids = _identifiers(c)
-            if ids is None:
-                return None
-            bare = {strip(i) for i in ids}
-            if bare and bare <= dims:
-                conds.append(strip(c))
-                continue
-            sc = strip(c)
-            sc = _re.sub(
-                rf"CAST\(\s*{_re.escape(ts)}\s+AS\s+DATE\s*\)",
-                f"DATE_TRUNC('DAY', {ts})",
-                sc,
-                flags=_re.I,
-            )
-            tb = _ts_conjunct_bounds(sc, ts, bsec)
-            if tb is None:
-                return None
-            ts_bounded = True
-            bconds, bprunes = tb
-            for bop, iso in bconds:
-                conds.append(f"bucket_start {bop} TIMESTAMP '{iso}'")
-            if materialized:
-                for pop, pdt in bprunes:
-                    prune.append(
-                        f"p_date {pop} '{pdt.strftime('%Y-%m-%d')}'"
-                    )
-    if null_ts_decline(info, ts_bounded, declines):
+    # dim filters pass through; time bounds translate to the bucket grid
+    # exactly like rewrite_to_rollup (misaligned declines)
+    conds = _bucket_where(parsed, info, scope, declines)
+    if conds is None:
         return None
 
     k = int(parsed.limit)
@@ -1177,10 +1381,7 @@ def rewrite_topk_to_rollup(
     # is still state-scale, so the width costs nothing material
     cand = budget
     src = info.get("files_view") or info["view"]
-    where_sql = ""
-    allconds = conds + prune
-    if allconds:
-        where_sql = " WHERE " + " AND ".join(allconds)
+    where_sql = " WHERE " + " AND ".join(conds) if conds else ""
     # the inner GROUP BY 'all' makes an EMPTY range produce zero groups
     # (no rows) instead of one empty combine buffer, which Spark 4.1's
     # ApproxTopKCombine cannot serialize (genSketchSerDe MatchError);
@@ -1199,7 +1400,7 @@ def rewrite_topk_to_rollup(
         f"materialized rollup {info['view']} (bucket {info['bucket']}, "
         f"budget {budget})"
     )
-    return sql, note, True, col
+    return Rewrite(sql, note, frozenset({"top-k"})), col
 
 
 def _fmt_ts(dt: datetime) -> str:
@@ -1229,26 +1430,28 @@ def rewrite_to_rollup_hybrid(
     layout_info: dict | None = None,
     allow_approx_distinct: bool = False,
     allow_approx_quantile: bool = False,
-) -> tuple[str, str, bool] | None:
+) -> Rewrite | None:
     """REAL-TIME continuous-aggregate rewrite: answer an aggregate whose
     time bounds do NOT align to the bucket grid by unioning the rollup's
     state for every COMPLETE bucket with freshly-built state for the raw
-    edge slices — ``(sql, note, used_approx_distinct)`` or None. This is
-    the hypertable "real-time aggregate" pattern: ``WHERE ts >= <aligned
-    7 days ago> AND ts < <now, mid-bucket>`` reads 7 days of rollup rows
-    plus only the current partial bucket's raw rows, exactly.
+    edge slices, or None. This is the hypertable "real-time aggregate"
+    pattern: ``WHERE ts >= <aligned 7 days ago> AND ts < <now,
+    mid-bucket>`` reads 7 days of rollup rows plus only the current
+    partial bucket's raw rows, exactly.
 
-    Mechanics: the fresh branch aggregates the slice rows to the SAME
-    partial-agg state schema as the rollup (COUNT/SUM/MIN/MAX per
-    measure, hll_sketch_agg per tracked distinct column) — a map-side
-    combine over only the slice rows, so state types match exactly and
-    ``COUNT(DISTINCT)`` over a tracked column merges across both
-    branches via hll_union_agg (flagged approximate, same pricing as the
-    plain sketch path). The slice scan routes through the table's
-    time-partitioned layout when one is registered and fresh
-    (``layout_info``), pruning to the slice's buckets; otherwise it
-    falls back to the base table (parquet min/max pushdown only — fine
-    at test scale, register a layout at warehouse scale).
+    Mechanics: the fresh branch builds the rollup's OWN state over only
+    the slice rows — the spec's build aggregates
+    (:meth:`RollupSpec.state_columns`, sketches included) grouped by the
+    build's bucket (:func:`bucket_start_sql`) and dims, a map-side
+    combine — so state types and bucket assignment match the layout
+    exactly, and ``COUNT(DISTINCT)`` over a tracked column merges across
+    both branches (flagged approximate, same pricing as the plain sketch
+    path). The plain rewrite then runs over the ``UNION ALL`` of both
+    branches. The slice scan routes through the table's time-partitioned
+    layout when one is registered and fresh (``layout_info``), pruning
+    to the slice's buckets; otherwise it falls back to the base table
+    (parquet min/max pushdown only — fine at test scale, register a
+    layout at warehouse scale).
 
     Soundness: bounds compose by max(lower)/min(upper) over the
     conjuncts; only dim conjuncts may remain; at least one complete
@@ -1259,36 +1462,20 @@ def rewrite_to_rollup_hybrid(
     ts = info["time_col"]
     bsec = info["bucket_seconds"]
     dims = list(info["dims"])
-    dim_set = set(dims)
-    measures = list(info["measures"])
-    scopes = {info["source_table"]}
-    if parsed.table_alias:
-        scopes.add(parsed.table_alias)
 
     if not parsed.where:
         return None
-    conjs = _split_conjuncts(parsed.where)
-    if conjs is None:
+    terms = _where_terms(parsed.where, _Single(parsed, info), ts)
+    if terms is None:
         return None
     dim_conjs: list[str] = []
     lowers: list[datetime] = []
     uppers: list[datetime] = []
     saw_misaligned = False
-    for c in conjs:
-        ids = _identifiers(c)
-        if ids is None:
-            return None
-        bare = {_strip_qualifier(i, scopes).strip() for i in ids}
-        if bare and bare <= dim_set:
-            dim_conjs.append(_strip_qualifier(c, scopes).strip())
+    for filt, sc in terms:
+        if filt is not None:
+            dim_conjs.append(filt)
             continue
-        sc = _strip_qualifier(c, scopes).strip()
-        sc = _re.sub(
-            rf"CAST\(\s*{_re.escape(ts)}\s+AS\s+DATE\s*\)",
-            f"DATE_TRUNC('DAY', {ts})",
-            sc,
-            flags=_re.I,
-        )
         tb = _ts_conjunct_bounds(sc, ts, bsec)
         if tb is not None:
             # aligned bound: bucket bounds ARE raw-ts bounds
@@ -1330,26 +1517,8 @@ def rewrite_to_rollup_hybrid(
     if A is not None and B is not None and B <= A:
         return None  # empty range — let the normal path answer it
 
-    distinct_cols = list(info.get("distinct_cols", []))
-    quantile_cols = list(info.get("quantile_cols", []))
-    kll_k = int(info.get("kll_k", 200))
-    topk_cols = list(info.get("topk_cols", []))
-    topk_budget = int(info.get("topk_budget", 1024))
-    theta_cols = list(info.get("theta_cols", []))
-    theta_lgk = int(info.get("theta_lgk", 12))
-    state_cols = (
-        ["n_rows"]
-        + [
-            f"{m_}_{s}"
-            for m_ in measures
-            for s in ("count", "sum", "min", "max")
-        ]
-        + [f"{dc}_hll" for dc in distinct_cols]
-        + [f"{qc}_kll" for qc in quantile_cols]
-        + [f"{tc}_topk" for tc in topk_cols]
-        + [f"{sc}_theta" for sc in theta_cols]
-    )
-    proj = ", ".join(["bucket_start", *dims, *state_cols])
+    state = entry_spec(info["source_table"], info).state_columns()
+    proj = ", ".join(["bucket_start", *dims, *(n for n, _b, _m in state)])
 
     # ---- rollup branch: complete buckets only, date-dir pruned ----
     files_view = info.get("files_view") or info["view"]
@@ -1373,45 +1542,10 @@ def rewrite_to_rollup_hybrid(
     if rconds:
         rollup_part += " WHERE " + " AND ".join(rconds)
 
-    # ---- fresh branch: build the SAME partial-agg state over only the
-    # edge-slice rows (map-side combine; state types match the rollup's
-    # exactly, sketches included) ----
-    fresh_state = ["COUNT(*) AS n_rows"]
-    for m_ in measures:
-        fresh_state += [
-            f"COUNT({m_}) AS {m_}_count",
-            f"SUM({m_}) AS {m_}_sum",
-            f"MIN({m_}) AS {m_}_min",
-            f"MAX({m_}) AS {m_}_max",
-        ]
-    for dc in distinct_cols:
-        fresh_state.append(
-            f"hll_sketch_agg({dc}, {int(info.get('hll_lgk', 12))}) "
-            f"AS {dc}_hll"
-        )
-    for qc in quantile_cols:
-        fresh_state.append(
-            f"kll_sketch_agg_double(CAST(`{qc}` AS DOUBLE), {kll_k}) "
-            f"AS {qc}_kll"
-        )
-    for tc in topk_cols:
-        fresh_state.append(
-            f"approx_top_k_accumulate(`{tc}`, {topk_budget}) "
-            f"AS {tc}_topk"
-        )
-    for sc in theta_cols:
-        # the fresh edge-slice sketches MERGE with the layout's state, so
-        # the key encoding MUST come from the layout's recorded flag —
-        # a mismatched encoding would silently union two hash spaces
-        fresh_state.append(
-            f"theta_sketch_agg("
-            f"{theta_key_sql(sc, bool(info.get('theta_key_native')))}, "
-            f"{theta_lgk}) AS {sc}_theta"
-        )
-    bucket_expr = (
-        f"TIMESTAMP_SECONDS(CAST(FLOOR(UNIX_TIMESTAMP({ts}) / {bsec}) "
-        f"* {bsec} AS BIGINT))"
-    )
+    # ---- fresh branch: the build's own state over only the edge-slice
+    # rows. Its theta sketches MERGE with the layout's state, so their
+    # key encoding comes from the layout's recorded flag (entry_spec) —
+    # a mismatched encoding would silently union two hash spaces ----
     slices: list[tuple[datetime | None, datetime | None]] = []
     if A is not None and (ceilA != A):
         head_hi = ceilA if B is None else min(ceilA, B)
@@ -1439,62 +1573,37 @@ def rewrite_to_rollup_hybrid(
         preds.append("(" + " AND ".join(p) + ")")
     if not preds:
         return None  # misaligned flag without a real slice — bail safely
+    bucket = bucket_start_sql(ts, info["bucket"])
     fresh_proj = ", ".join(
-        [f"{bucket_expr} AS bucket_start", *dims, *fresh_state]
+        [f"{bucket} AS bucket_start", *dims,
+         *(f"{b} AS {n}" for n, b, _m in state)]
     )
-    fresh_keys = ", ".join([bucket_expr, *dims])
+    fresh_keys = ", ".join([bucket, *dims])
     fresh_part = (
         f"SELECT {fresh_proj} FROM {fresh_src} "
         f"WHERE {' OR '.join(preds)} GROUP BY {fresh_keys}"
     )
 
     hybrid_view = f"({rollup_part} UNION ALL {fresh_part}) AS __aqe_rt"
-    parsed2 = _dc_replace(
-        parsed, where=" AND ".join(dim_conjs) if dim_conjs else None
-    )
-    info2 = dict(info)
-    info2["files_view"] = hybrid_view
     routed = rewrite_to_rollup(
-        parsed2,
-        info2,
+        _dc_replace(parsed, where=" AND ".join(dim_conjs) or None),
+        {**info, "files_view": hybrid_view},
         allow_approx_distinct=allow_approx_distinct,
         allow_approx_quantile=allow_approx_quantile,
     )
     if routed is None:
         return None
-    sql, inner_note, used_approx = routed
-    n_slices = len(slices)
-    approx_note = ""
-    if used_approx:
-        import math
-
-        parts = []
-        if "HLL" in inner_note:
-            err = 1.04 / math.sqrt(2 ** int(info.get("hll_lgk", 12)))
-            parts.append(
-                f"COUNT(DISTINCT) from HLL state merged across both "
-                f"branches, rel err ≈ {err:.1%}"
-            )
-        if "theta sketch state" in inner_note:
-            terr = 1.0 / math.sqrt(2 ** int(info.get("theta_lgk", 12)))
-            parts.append(
-                f"COUNT(DISTINCT) from theta state merged across both "
-                f"branches, rel err ≈ {terr:.1%}"
-            )
-        if "KLL" in inner_note:
-            parts.append(
-                f"quantiles from KLL state merged across both branches, "
-                f"rank err ≤ {kll_rank_error(kll_k):.2%}"
-            )
-        approx_note = "; " + "; ".join(parts)
+    approx = "; ".join(
+        _approx_parts(info, dict.fromkeys(routed.families), hybrid=True)
+    )
     note = (
         f"answered from materialized rollup {info['view']} + raw edge "
-        f"slice{'s' if n_slices > 1 else ''}{layout_note} (real-time "
+        f"slice{'s' if len(slices) > 1 else ''}{layout_note} (real-time "
         f"hybrid: complete buckets from partial-agg state, the "
         f"off-grid remainder aggregated in place"
-        f"{approx_note or ' — exact'})"
+        f"{'; ' + approx if routed.families else ' — exact'})"
     )
-    return sql, note, used_approx
+    return routed._replace(note=note)
 
 
 def rewrite_join_to_rollup(
@@ -1503,9 +1612,9 @@ def rewrite_join_to_rollup(
     table_columns: dict[str, list[str]],
     allow_approx_distinct: bool = False,
     declines: list[str] | None = None,
-) -> tuple[str, str, bool] | None:
+) -> Rewrite | None:
     """Rewrite a star-join aggregate so the FACT side is the rollup, not
-    the raw event table — ``(sql, note, used_approx_distinct)`` or None.
+    the raw event table, or None.
 
     The 100 TB dashboard shape is ``fact ⋈ dims`` with a time bound and
     aggregates over fact measures. When the join keys on the fact side
@@ -1525,7 +1634,7 @@ def rewrite_join_to_rollup(
       fact-side column in one is a rollup dim;
     - aggregates are COUNT(*)/fact-measure COUNT/SUM/MIN/MAX/AVG (or HLL
       COUNT(DISTINCT) when allowed); aggregates over DIM columns decline
-      (they'd collapse per-fact-row repetition);
+      (they'd collapse per-fact-row repetition), and so do quantiles;
     - group keys are fact dims, bucket-aligned DATE_TRUNC/CAST-to-DATE
       of the fact ts, or dim-table columns (which pass through);
     - non-aggregate select items must appear in GROUP BY and at least
@@ -1542,51 +1651,9 @@ def rewrite_join_to_rollup(
     names = [t for t, _ in jq.tables]
     if names.count(fact) != 1 or len(set(names)) != len(names):
         return None
-    ts = info["time_col"]
-    bsec = info["bucket_seconds"]
-    dims = set(info["dims"])
-    measures = set(info["measures"])
-    distinct_set = set(info.get("distinct_cols", []))
-    theta_set = set(info.get("theta_cols", []))
-    fact_alias = jq.alias_of(fact)  # alias if present, else table name
-    R = fact_alias  # the rollup keeps the fact's alias in the FROM body
-    used_approx: list[str] = []
-
-    own: dict[str, set[str]] = {}
-    for t, _a in jq.tables:
-        cols = table_columns.get(t)
-        if cols is None:
-            return None
-        for c in cols:
-            own.setdefault(c, set()).add(t)
-    #: columns the rollup view ADDS relative to the fact table — an
-    #: unqualified reference to a same-named DIM column would become
-    #: ambiguous once the fact reference is swapped for the rollup
-    state_names = (
-        {"n_rows", "bucket_start", "p_date"}
-        | {f"{m}_{s}" for m in measures for s in ("count", "sum", "min", "max")}
-        | {f"{dc}_hll" for dc in distinct_set}
-        | {f"{sc}_theta" for sc in theta_set}
-        | {f"{qc}_kll" for qc in info.get("quantile_cols", [])}
-        | {f"{tc}_topk" for tc in info.get("topk_cols", [])}
-    )
-
-    def resolve(ref: str) -> tuple[str, str] | None:
-        """qualified/unqualified column reference → (table, column)."""
-        ref = ref.strip()
-        if "." in ref:
-            q, c = ref.split(".", 1)
-            for t, a in jq.tables:
-                if q == (a or t):
-                    return (t, c) if c in table_columns.get(t, []) else None
-            return None
-        owners = own.get(ref)
-        if owners is None or len(owners) != 1:
-            return None
-        owner = next(iter(owners))
-        if owner != fact and ref in state_names:
-            return None  # would collide with a rollup state column
-        return owner, ref
+    if any(table_columns.get(t) is None for t in names):
+        return None
+    scope = _Star(jq, info, table_columns)
 
     # ---- ON conditions: equi-joins whose fact-side keys are dims ----
     for seg in _re.split(r"\bJOIN\b", jq.from_body, flags=_re.I)[1:]:
@@ -1601,307 +1668,43 @@ def rewrite_join_to_rollup(
             if pm is None:
                 return None
             for side in (pm.group(1), pm.group(2)):
-                r = resolve(side)
+                r = scope.resolve(side)
                 if r is None:
                     return None
-                if r[0] == fact and r[1] not in dims:
+                if r[0] == fact and r[1] not in scope.dims:
                     return None
 
-    def rewrite_agg(agg) -> str | None:
-        if agg.distinct:
-            if not (allow_approx_distinct and agg.func == "COUNT"):
-                return None
-            r = resolve(agg.arg)
-            if r is None or r[0] != fact:
-                return None
-            if r[1] in distinct_set:
-                used_approx.append(r[1])
-                return (
-                    f"hll_sketch_estimate(hll_union_agg({R}.{r[1]}_hll))"
-                )
-            if r[1] in theta_set:
-                # theta union is idempotent like HLL union, so distinct
-                # stays correct under non-unique dim matches too
-                used_approx.append(r[1])
-                return (
-                    f"CAST(ROUND(theta_sketch_estimate("
-                    f"theta_union_agg({R}.{r[1]}_theta, "
-                    f"{int(info.get('theta_lgk', 12))}))) AS BIGINT)"
-                )
-            return None
-        # quantile (KLL) and top-k state must DECLINE over a join: a dim
-        # multiplicity of m repeats each fact value m times in the raw
-        # join, and sketch state cannot be weight-scaled — unlike
-        # counts/sums (multiply via SUM(n_rows)) or HLL/theta
-        # (idempotent union). Only the is_quantile grammar reaches here;
-        # it falls through to the whitelist below and declines.
-        if agg.func not in ("COUNT", "SUM", "MIN", "MAX", "AVG"):
-            return None
-        if agg.func == "COUNT" and (agg.is_star or agg.arg.strip() == "1"):
-            return f"COALESCE(SUM({R}.n_rows), CAST(0 AS BIGINT))"
-        r = resolve(agg.arg)
-        if r is None or r[0] != fact or r[1] not in measures:
-            return None
-        c = r[1]
-        if agg.func == "COUNT":
-            return f"COALESCE(SUM({R}.{c}_count), CAST(0 AS BIGINT))"
-        if agg.func == "SUM":
-            return f"SUM({R}.{c}_sum)"
-        if agg.func == "MIN":
-            return f"MIN({R}.{c}_min)"
-        if agg.func == "MAX":
-            return f"MAX({R}.{c}_max)"
-        return f"SUM({R}.{c}_sum) / NULLIF(SUM({R}.{c}_count), 0)"
-
-    def rewrite_key(expr: str) -> str | None:
-        e = expr.strip()
-        m = _re.fullmatch(
-            r"DATE_TRUNC\(\s*'(\w+)'\s*,\s*([A-Za-z_][\w.]*)\s*\)", e, _re.I
-        )
-        if m:
-            r = resolve(m.group(2))
-            if r is None or r[0] != fact or r[1] != ts:
-                return None
-            unit = m.group(1).lower()
-            mod = _TRUNC_MODULUS.get(unit)
-            if mod is None or mod % bsec != 0:
-                return None
-            return f"DATE_TRUNC('{unit.upper()}', {R}.bucket_start)"
-        m = _re.fullmatch(
-            r"CAST\(\s*([A-Za-z_][\w.]*)\s+AS\s+DATE\s*\)", e, _re.I
-        )
-        if m:
-            r = resolve(m.group(1))
-            if r is None or r[0] != fact or r[1] != ts:
-                return None
-            if 86400 % bsec != 0:
-                return None
-            return f"CAST({R}.bucket_start AS DATE)"
-        r = resolve(e)
-        if r is None:
-            return None
-        t, c = r
-        if t == fact:
-            return f"{R}.{c}" if c in dims else None
-        return e  # dim-table column — rides through the join unchanged
-
-    # ---- select list ----
-    items, aliases = [], set()
-    has_agg, nonagg_keys = False, []
-    for it in jq.select_items:
-        if it.agg is not None:
-            new = rewrite_agg(it.agg)
-            has_agg = True
-        else:
-            new = rewrite_key(it.raw)
-            nonagg_keys.append(new)
-        if new is None:
-            return None
-        if it.alias:
-            alias_sql = it.alias
-        else:
-            # Spark names an unaliased (possibly qualified) plain column
-            # by its bare name; expressions keep their full text
-            rr = resolve(it.raw)
-            alias_sql = rr[1] if rr is not None else f"`{it.raw}`"
-        items.append(f"{new} AS {alias_sql}")
-        if it.alias:
-            aliases.add(it.alias)
-
-    # ---- group by ----
-    keys = []
-    for g in jq.group_by:
-        new = rewrite_key(g)
-        if new is None:
-            return None
-        keys.append(new)
-    if not has_agg or any(k not in keys for k in nonagg_keys):
-        return None
-
-    # ---- having: rewrite its aggregate calls through the same rules,
-    # then require every remaining reference to be rollup state (under
-    # the fact alias), a fact dim, or a dim-table column ----
-    having_sql = None
-    if jq.having:
-        from approximate_query_engine_spark.sqlparser import Aggregate
-
-        bad = False
-
-        def _agg_repl(m):
-            nonlocal bad
-            if m.group(2):  # DISTINCT inside a HAVING aggregate
-                bad = True
-                return m.group(0)
-            new = rewrite_agg(
-                Aggregate(m.group(1).upper(), m.group(3), False, m.group(0))
-            )
-            if new is None:
-                bad = True
-                return m.group(0)
-            return f"({new})"
-
-        h = _re.sub(
-            r"\b(COUNT|SUM|MIN|MAX|AVG)\s*\(\s*(DISTINCT\s+)?([^()]*)\)",
-            _agg_repl,
-            jq.having,
-            flags=_re.I,
-        )
-        ids = None if bad else _identifiers(h)
-        if ids is None:
-            return None
-        for i in ids:
-            if "." in i:
-                q, c = i.split(".", 1)
-                if q == R and (c in state_names or c in dims):
-                    continue  # rewritten state / fact dim under the alias
-            r = resolve(i)
-            if r is None or (r[0] == fact and r[1] not in dims):
-                return None
-        having_sql = h
-
-    # ---- where ----
-    conds, prune, ts_bounded = [], [], False
-    if jq.where:
-        conjs = _split_conjuncts(jq.where)
-        if conjs is None:
-            return None
-        materialized = bool(
-            info.get("files_view") and info["files_view"] != info["view"]
-        )
-        for c in conjs:
-            ids = _identifiers(c)
-            if ids is None:
-                return None
-            rs = {i: resolve(i) for i in ids}
-            if any(r is None for r in rs.values()):
-                return None
-            owners = {r[0] for r in rs.values()}
-            if not owners or fact not in owners:
-                conds.append(c)  # constant or dim-only — passes through
-                continue
-            if owners != {fact}:
-                return None  # mixed fact+dim conjunct
-            fact_cols = {r[1] for r in rs.values()}
-            if fact_cols <= dims:
-                # fact-dim filter: the rollup carries these columns under
-                # the same alias, so the conjunct passes through verbatim
-                conds.append(c)
-                continue
-            if fact_cols != {ts}:
-                return None
-            # strip the fact alias/table qualifier for the bound matcher,
-            # then normalize CAST-to-DATE
-            sc = _strip_qualifier(c, {fact, fact_alias}).strip()
-            sc = _re.sub(
-                rf"CAST\(\s*{_re.escape(ts)}\s+AS\s+DATE\s*\)",
-                f"DATE_TRUNC('DAY', {ts})",
-                sc,
-                flags=_re.I,
-            )
-            tb = _ts_conjunct_bounds(sc, ts, bsec)
-            if tb is None:
-                return None
-            ts_bounded = True
-            bconds, bprunes = tb
-            for bop, iso in bconds:
-                conds.append(f"{R}.bucket_start {bop} TIMESTAMP '{iso}'")
-            if materialized:
-                for pop, pdt in bprunes:
-                    prune.append(
-                        f"{R}.p_date {pop} '{pdt.strftime('%Y-%m-%d')}'"
-                    )
-    if null_ts_decline(info, ts_bounded, declines):
-        return None
-
-    # ---- order by / limit ----
-    order = []
-    for o in jq.order_by:
-        new = rewrite_key(o.expr)
-        if new is None:
-            m = _re.fullmatch(
-                r"(COUNT|SUM|MIN|MAX|AVG)\s*\((.*)\)", o.expr.strip(), _re.I
-            )
-            if m:
-                from approximate_query_engine_spark.sqlparser import Aggregate
-
-                new = rewrite_agg(
-                    Aggregate(m.group(1).upper(), m.group(2), False, o.expr)
-                )
-        if new is None:
-            if o.expr in aliases:
-                order.append(o.render())
-                continue
-            return None
-        order.append(f"{new} DESC" if o.desc else new)
-
-    from_body = jq.from_with_replacement(
-        fact, info.get("files_view") or info["view"]
+    return _rewrite(
+        jq, info, scope, allow_approx_distinct, False, declines
     )
-    sql = "SELECT " + ", ".join(items) + f" FROM {from_body}"
-    allconds = conds + prune
-    if allconds:
-        sql += " WHERE " + " AND ".join(allconds)
-    if keys:
-        sql += " GROUP BY " + ", ".join(keys)
-    if having_sql:
-        sql += f" HAVING {having_sql}"
-    if order:
-        sql += " ORDER BY " + ", ".join(order)
-    if jq.limit is not None:
-        sql += f" LIMIT {jq.limit}"
-    if used_approx:
-        import math
-
-        parts = []
-        hll_used = sorted({a for a in used_approx if a in distinct_set})
-        theta_used = sorted(
-            {a for a in used_approx if a in theta_set and a not in distinct_set}
-        )
-        if hll_used:
-            err = 1.04 / math.sqrt(2 ** int(info.get("hll_lgk", 12)))
-            parts.append(
-                f"COUNT(DISTINCT {', '.join(hll_used)}) from merged HLL "
-                f"sketch state, rel err ≈ {err:.1%}"
-            )
-        if theta_used:
-            terr = 1.0 / math.sqrt(2 ** int(info.get("theta_lgk", 12)))
-            parts.append(
-                f"COUNT(DISTINCT {', '.join(theta_used)}) from merged "
-                f"theta sketch state, rel err ≈ {terr:.1%}"
-            )
-        note = (
-            f"star join answered from materialized rollup {info['view']} "
-            f"(bucket {info['bucket']}; fact scan replaced by partial-agg "
-            f"state; {'; '.join(parts)}; other aggregates exact)"
-        )
-    else:
-        note = (
-            f"star join answered from materialized rollup {info['view']} "
-            f"(bucket {info['bucket']}; fact scan replaced by partial-agg "
-            "state — exact, dims broadcast as before)"
-        )
-    return sql, note, bool(used_approx)
 
 
-def bucket_start_col(time_col: str, bucket: str) -> Column:
-    """The rollup bucket start of ``time_col`` — the one definition that
-    build, tail refresh and maintenance's per-date verification share, so
-    all three agree on which bucket (and date directory) a row lands in.
-    NULL timestamps give NULL.
+def bucket_start_sql(time_col: str, bucket: str) -> str:
+    """The rollup bucket start of ``time_col``, in SQL — the one
+    definition that the build, the derived build, tail refresh,
+    maintenance's per-date verification and the hybrid rewrite's fresh
+    edge slices share, so all agree on which bucket (and date
+    directory) a row lands in. NULL timestamps give NULL.
 
     For fixed-width buckets the tumbling-window start is plain epoch
-    arithmetic —
-    ts − pmod(unix_micros(ts), width) — exactly TimeWindow's own start
-    formula (origin 0, floor semantics for pre-epoch values via pmod),
+    arithmetic — ts − pmod(unix_micros(ts), width) — exactly
+    TimeWindow's own start formula (origin 0, floor semantics for
+    pre-epoch values via pmod, so a pre-epoch sub-second row stays in
+    the bucket it falls in, which truncating UNIX_TIMESTAMP would not),
     without materializing the (start, end) struct per row that
     F.window builds (measured ~0.6 s/20M rows). Value-identity with
     F.window(...).start is pinned in tests/test_rollup.py; variable
-    width buckets (months) keep F.window."""
+    width buckets (months) keep the window."""
     bsec = bucket_seconds(bucket)
     if bsec is None:  # pragma: no cover - month buckets are refused upstream
-        return F.window(F.col(time_col), bucket)["start"]
-    us = F.unix_micros(F.col(time_col))
-    return F.timestamp_micros(us - F.pmod(us, F.lit(int(bsec) * 1_000_000)))
+        return f"window(`{time_col}`, '{bucket}').start"
+    us = f"unix_micros(`{time_col}`)"
+    return f"timestamp_micros({us} - pmod({us}, {int(bsec) * 1_000_000}))"
+
+
+def bucket_start_col(time_col: str, bucket: str) -> Column:
+    """:func:`bucket_start_sql` as a Column."""
+    return F.expr(bucket_start_sql(time_col, bucket))
 
 
 def bucket_date_col(time_col: str, bucket: str) -> Column:
@@ -1911,38 +1714,8 @@ def bucket_date_col(time_col: str, bucket: str) -> Column:
 
 def _partial_state(df: DataFrame, spec: RollupSpec) -> DataFrame:
     """Per-(bucket, dims) partial-agg state of ``df`` in the rollup's
-    column layout, plus the storage ``p_date`` column."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for m in spec.measures:
-        aggs += [
-            F.count(m).alias(f"{m}_count"),
-            F.sum(m).alias(f"{m}_sum"),
-            F.min(m).alias(f"{m}_min"),
-            F.max(m).alias(f"{m}_max"),
-        ]
-    for dc in spec.distinct_cols:
-        aggs.append(F.hll_sketch_agg(dc, spec.hll_lgk).alias(f"{dc}_hll"))
-    for qc in spec.quantile_cols:
-        aggs.append(
-            F.expr(
-                f"kll_sketch_agg_double(CAST(`{qc}` AS DOUBLE), "
-                f"{int(spec.kll_k)})"
-            ).alias(f"{qc}_kll")
-        )
-    for tc in spec.topk_cols:
-        aggs.append(
-            F.expr(
-                f"approx_top_k_accumulate(`{tc}`, "
-                f"{int(spec.topk_budget)})"
-            ).alias(f"{tc}_topk")
-        )
-    for sc in spec.theta_cols:
-        aggs.append(
-            F.expr(
-                f"theta_sketch_agg({theta_key_sql(sc, spec.theta_key_native)}, "
-                f"{int(spec.theta_lgk)})"
-            ).alias(f"{sc}_theta")
-        )
+    column layout (:meth:`RollupSpec.state_columns`), plus the storage
+    ``p_date`` column."""
     # NULL timestamps must be dropped on BOTH paths: Spark's TimeWindowing
     # rule injects IsNotNull(ts) under F.window, so the arithmetic path
     # needs the same explicit filter or a NULL-ts source grows a NULL
@@ -1952,24 +1725,10 @@ def _partial_state(df: DataFrame, spec: RollupSpec) -> DataFrame:
     return (
         df.where(F.col(spec.time_col).isNotNull())
         .groupBy(
-            bucket_start_col(spec.time_col, spec.bucket).alias("w"),
+            bucket_start_col(spec.time_col, spec.bucket).alias("bucket_start"),
             *spec.dims,
         )
-        .agg(*aggs)
-        .select(
-            F.col("w").alias("bucket_start"),
-            *spec.dims,
-            "n_rows",
-            *[
-                f"{m}_{s}"
-                for m in spec.measures
-                for s in ("count", "sum", "min", "max")
-            ],
-            *[f"{dc}_hll" for dc in spec.distinct_cols],
-            *[f"{qc}_kll" for qc in spec.quantile_cols],
-            *[f"{tc}_topk" for tc in spec.topk_cols],
-            *[f"{sc}_theta" for sc in spec.theta_cols],
-        )
+        .agg(*[F.expr(b).alias(n) for n, b, _m in spec.state_columns()])
         .withColumn(_PDATE, F.date_format("bucket_start", "yyyy-MM-dd"))
     )
 
@@ -2381,12 +2140,7 @@ def infer_rollup_shape(parsed) -> dict | None:
             return None
         for c in conjs:
             sc = strip(c)
-            sc_n = _re.sub(
-                r"CAST\(\s*([A-Za-z_]\w*)\s+AS\s+DATE\s*\)",
-                r"DATE_TRUNC('DAY', \1)",
-                sc,
-                flags=_re.I,
-            )
+            sc_n = _day_cast_as_trunc(sc)
             m = _re.match(
                 r"\s*(?:DATE_TRUNC\(\s*'\w+'\s*,\s*)?([A-Za-z_]\w*)\s*\)?\s*"
                 r"(>=|<=|<|>|=)\s*(?:DATE|TIMESTAMP)\s*'",
@@ -2419,6 +2173,9 @@ def infer_rollup_shape(parsed) -> dict | None:
     # would make every bucket row its own group — not a rollup shape)
     if time_col in dims | measures | distinct_cols | quantile_cols:
         return None
+    top = None
+    if not (measures or distinct_cols or quantile_cols):
+        top = _topk_shape(parsed, strip)
     return {
         "table": parsed.table,
         "time_col": time_col,
@@ -2434,58 +2191,8 @@ def infer_rollup_shape(parsed) -> dict | None:
         # to advise it as a dim (re-aggregates exactly) or as
         # frequent-items sketch state (the only viable pre-aggregation
         # when the column is too high-cardinality to be a dim,
-        # rewrite_topk_to_rollup's docstring)
-        "topk_candidates": _topk_candidate(parsed, dims, measures,
-                                           distinct_cols, quantile_cols,
-                                           strip),
+        # rewrite_topk_to_rollup's docstring). The shape is the one
+        # :func:`_topk_shape` accepts; a time-bucket group key is not a
+        # plain column, so it is never a candidate
+        "topk_candidates": [top[0]] if top and top[0] in dims else [],
     }
-
-
-def _topk_candidate(
-    parsed, dims, measures, distinct_cols, quantile_cols, strip
-) -> list[str]:
-    """``[col]`` when the query is the canonical top-items dashboard
-    shape :func:`rewrite_topk_to_rollup` serves — exactly one plain
-    group key, select = key + one COUNT(*), ORDER BY leading with that
-    count DESC (optional secondary ASC on the key), LIMIT present, no
-    HAVING — else ``[]``. Mirrors the rewrite's grammar so recorded
-    advice only ever describes a shape the router could actually
-    serve."""
-    if (
-        not parsed.limit
-        or parsed.limit <= 0
-        or parsed.having
-        or measures
-        or distinct_cols
-        or quantile_cols
-        or len(parsed.group_by) != 1
-        or len(parsed.select_items) != 2
-        or not parsed.order_by
-        or len(parsed.order_by) > 2
-    ):
-        return []
-    col = strip(parsed.group_by[0])
-    if col not in dims:
-        return []  # group key was a time bucket, not a plain column
-    cnt_alias = None
-    for it in parsed.select_items:
-        if it.agg is not None:
-            if it.agg.distinct or it.agg.func != "COUNT":
-                return []
-            if not (it.agg.is_star or it.agg.arg.strip() == "1"):
-                return []
-            cnt_alias = it.alias
-        elif strip(it.raw) != col:
-            return []
-    lead = parsed.order_by[0]
-    lead_e = strip(lead.expr)
-    is_cnt = (cnt_alias is not None and lead_e == cnt_alias) or bool(
-        _re.fullmatch(r"COUNT\s*\(\s*(\*|1)\s*\)", lead_e, _re.I)
-    )
-    if not (lead.desc and is_cnt):
-        return []
-    if len(parsed.order_by) == 2:
-        sec = parsed.order_by[1]
-        if sec.desc or strip(sec.expr) != col:
-            return []
-    return [col]

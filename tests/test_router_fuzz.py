@@ -40,11 +40,15 @@ HOUR = 3600
 
 #: hour and day boundaries from 4 h before the epoch to 28 h after it
 GRID = [h * HOUR for h in range(-4, 29)]
-#: bucket-boundary seconds, one microsecond either side, and mid-bucket
+#: bucket-boundary seconds, one microsecond and half a second either
+#: side (sub-second rows before the epoch are where truncating and
+#: flooring bucket arithmetic disagree), and mid-bucket
 TS_SECONDS = st.one_of(
     st.sampled_from(GRID),
     st.sampled_from(GRID).map(lambda s: s - 1e-6),
     st.sampled_from(GRID).map(lambda s: s + 1e-6),
+    st.sampled_from(GRID).map(lambda s: s - 0.5),
+    st.sampled_from(GRID).map(lambda s: s + 0.5),
     st.integers(-4 * HOUR, 28 * HOUR),
 )
 TS = st.one_of(st.none(), TS_SECONDS.map(
@@ -77,6 +81,9 @@ def battery(t: str, lo: datetime.datetime, hi: datetime.datetime) -> list[str]:
         # plain (aligned bounds) or hybrid (off-grid bounds)
         f"SELECT event_type, {aggs} FROM {t} WHERE {win} GROUP BY event_type",
         f"SELECT {aggs} FROM {t} WHERE {win}",
+        # time-keyed: the hybrid's edge slices must bucket like the build
+        f"SELECT DATE_TRUNC('HOUR', ts) AS h, {aggs} FROM {t} WHERE {win} "
+        "GROUP BY DATE_TRUNC('HOUR', ts)",
         # no time bound: declines while NULL-ts rows exist
         f"SELECT event_type, {aggs} FROM {t} GROUP BY event_type",
         # star join: the fact side from the rollup
@@ -209,7 +216,7 @@ def run_case(spark, rows, late, lo, hi, stale_check=False):
     bounds=st.tuples(BOUND, BOUND).filter(lambda b: b[0] < b[1]),
 )
 @settings(
-    # each example builds three artifacts, runs up to 16 engine queries
+    # each example builds three artifacts, runs up to 18 engine queries
     # and maybe one maintenance pass (about 4-10 s); four keep the file
     # inside tier-1's 60 s budget
     max_examples=4,
@@ -264,3 +271,32 @@ def test_untimed_and_empty_sources_refuse_to_build(spark):
     refuse with a reason, and the answers stay exact."""
     Checker(spark, []).build()
     run_case(spark, [(None, "b", 1.0, 2)], [], _at(0), _at(2))
+
+
+@pytest.mark.usefixtures("fam")
+def test_hybrid_slices_bucket_pre_epoch_subsecond_rows_like_the_build(spark):
+    """The hybrid's fresh edge slice bucketed rows with
+    FLOOR(UNIX_TIMESTAMP(ts) / 3600), and UNIX_TIMESTAMP truncates toward
+    zero: the row at 1969-12-31 23:59:59.5 landed in the 00:00 bucket,
+    and the answer, labelled exact, had 2 groups where the table has 3.
+    The slices now take their bucket from the build's own definition."""
+    day, night = datetime.datetime(1969, 12, 31), datetime.datetime(1970, 1, 1)
+    rows = [(day.replace(hour=22, minute=10), "a", 1.0, 1),
+            (day.replace(hour=23, minute=59, second=59, microsecond=500000),
+             "a", 2.0, 2),
+            (night.replace(minute=30), "a", 3.0, 3),
+            (night.replace(hour=1, minute=15), "a", 4.0, 4)]
+    c = Checker(spark, rows)
+    c.build()
+    sql = ("SELECT DATE_TRUNC('HOUR', ts) AS h, COUNT(*) AS n, "
+           f"SUM(value) AS s FROM {c.name} "
+           "WHERE ts >= TIMESTAMP '1969-12-31 23:30:00' "
+           "AND ts < TIMESTAMP '1970-01-01 02:00:00' "
+           "GROUP BY DATE_TRUNC('HOUR', ts)")
+    r = c.engine.query(sql)
+    assert r["plan"]["type"] == "exact", r["plan"]
+    assert "raw edge slice" in r["plan"]["reason"], r["plan"]
+    got = [tuple(d.values()) for d in r["result"]]
+    want = c.con.execute(sql).fetchall()
+    assert len(want) == 3
+    _same(sql, got, want, 0.0)

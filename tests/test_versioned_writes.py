@@ -362,7 +362,7 @@ def test_dynamic_overwrite_tail_refreshes_are_crash_safe(
     the tail's date directories through dynamic partition overwrite,
     which Spark swaps in at job commit: a failed write leaves every old
     date directory and its rows as they were."""
-    from approximate_query_engine_spark.engine import _entry_spec
+    from approximate_query_engine_spark.operators.rollup import entry_spec
     from approximate_query_engine_spark.operators.partitioning import (
         list_bucket_dirs,
         refresh_partition_layout,
@@ -380,7 +380,7 @@ def test_dynamic_overwrite_tail_refreshes_are_crash_safe(
     more = rows + [(BASE + datetime.timedelta(days=4, hours=5, minutes=1),
                     "a", 1.0, 7)]
     src = _show(spark, "vw_tail", more)
-    spec = _entry_spec("vw_tail", roll)
+    spec = entry_spec("vw_tail", roll)
     cases = [
         (roll["path"], "p_date",
          lambda: refresh_rollup_buckets(spark, spec, roll["path"],
